@@ -5733,11 +5733,6 @@ QUERIES = {
     "text_collocations": q_text_collocations,
     "text_bpe": q_text_bpe,
     "rdfs_graphs_entailment": q_rdfs_graphs_entailment,
-    "text_bpe_tokens": q_text_bpe_tokens,
-    "owl_graphs_entailment": q_owl_graphs_entailment,
-    "kg_void": q_kg_void,
-    "kg_snapshot_compact": q_kg_snapshot_compact,
-    "kg_edge_cut": q_kg_edge_cut,
     "kg_snapshot_revalidate": q_kg_snapshot_revalidate,
     "graph_triangles": q_graph_triangles,
     "sparql_path_star": q_sparql_path_star,

@@ -33,8 +33,11 @@ explicit ``broadcast_map`` switch for when it is not.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..fixpoint import log_round, rounds
 from .extract import OWL_SAMEAS, SURFACE_URI_PREFIX
 
 
@@ -210,7 +213,6 @@ def _local_components(edge_rows) -> dict:
 
 def connected_components(edges: DataFrame,
                          src: str = "a", dst: str = "b",
-                         max_iterations: int = 25,
                          local_threshold: int = 1_000_000) -> DataFrame:
     """Min-label connected components over an undirected edge list.
 
@@ -229,8 +231,11 @@ def connected_components(edges: DataFrame,
       converges in O(log^2 n) rounds on pathological graphs, 2-4 rounds
       on the near-transitive similarity graphs this pipeline produces.
       Lineage is cut every round with ``localCheckpoint`` (SURVEY.md §4)
-      — without it the iterative plan grows exponentially.  Pass
-      ``local_threshold=0`` to force this path (tests do).
+      — without it the iterative plan grows exponentially.  Rounds are
+      capped by ``fixpoint.MAX_ROUNDS``; running out raises
+      ``FixpointNotConverged`` rather than returning under-merged
+      components.  Pass ``local_threshold=0`` to force this path (tests
+      do).
 
     Returns ``(node, component)`` where component = min node label
     (string order) of the node's component.
@@ -268,7 +273,8 @@ def connected_components(edges: DataFrame,
         return (row.n, row.h)
 
     prev_sig = None
-    for _ in range(max_iterations):
+    for n in rounds("connected components"):
+        started = time.perf_counter()
         # LARGE-STAR: per node u over the SYMMETRIC neighbor view,
         # m = min(N(u) + {u}); every strictly-larger neighbor links to m.
         # Output edges are (bigger, smaller) by construction.
@@ -302,6 +308,7 @@ def connected_components(edges: DataFrame,
         # converged when the star forest is stable: one cheap
         # order-insensitive signature (count + hash sum) per round
         sig = _signature(e)
+        log_round("connected components", n, sig[0], started)
         if sig == prev_sig:
             break
         prev_sig = sig

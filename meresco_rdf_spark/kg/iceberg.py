@@ -33,6 +33,8 @@ deletes-then-adds, a row present in both adds and deletes survives.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .materialize import TRIPLE_COLS
@@ -41,6 +43,26 @@ from . import snapshots as _snap
 
 class IcebergCatalogNotConfigured(RuntimeError):
     """Target names a catalog table but no such Spark catalog is set."""
+
+
+class InvalidTableIdentifier(ValueError):
+    """A catalog name that is not dot-separated plain SQL identifiers."""
+
+
+_IDENT_PART = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def _check_identifier(ident: str, min_parts: int = 2) -> list[str]:
+    """The dot-separated parts of ``ident``; every name interpolated
+    into SQL passes here first.  A table needs ``cat.tbl`` at least."""
+    parts = ident.split(".")
+    if len(parts) < min_parts or not all(
+            _IDENT_PART.fullmatch(p) for p in parts):
+        raise InvalidTableIdentifier(
+            "%r is not a valid identifier: need at least %d dot-separated "
+            "part(s), each matching [A-Za-z_][A-Za-z0-9_]*"
+            % (ident, min_parts))
+    return parts
 
 
 def _is_path(target: str) -> bool:
@@ -52,10 +74,12 @@ def catalog_of(spark: SparkSession, target: str) -> str | None:
     """The configured catalog name a table identifier resolves to, or
     ``None`` when ``target`` is a filesystem path.  Raises
     :class:`IcebergCatalogNotConfigured` for a table-shaped target whose
-    leading part names no configured catalog."""
+    leading part names no configured catalog, and
+    :class:`InvalidTableIdentifier` for any other non-path target that
+    is not ``cat.tbl`` or deeper."""
     if _is_path(target):
         return None
-    cat = target.split(".", 1)[0]
+    cat = _check_identifier(target)[0]
     impl = spark.conf.get("spark.sql.catalog.%s" % cat, None)
     if impl is None:
         raise IcebergCatalogNotConfigured(
@@ -77,6 +101,8 @@ def merge_sql(ident: str, source_view: str) -> str:
     missing rows tagged 'add'.  The source must be pre-deduplicated to
     one row per triple (``_delta_source``) — Iceberg raises on multiple
     source matches per target row."""
+    _check_identifier(ident)
+    _check_identifier(source_view, min_parts=1)
     on = " AND ".join("t.%s <=> s.%s" % (c, c) for c in TRIPLE_COLS)
     return (
         "MERGE INTO %s t USING %s s ON %s "
@@ -149,6 +175,14 @@ def table_merge(spark: SparkSession, target: str,
     return None
 
 
+def _history(spark: SparkSession, target: str) -> list:
+    """Rows of ``<tbl>.snapshots`` in version order; ``snapshot_id``
+    breaks ties between snapshots committed in the same instant, so a
+    version number always names the same snapshot."""
+    return (spark.table("%s.snapshots" % target)
+            .orderBy("committed_at", "snapshot_id").collect())
+
+
 def read_table(spark: SparkSession, target: str,
                version: int | None = None) -> DataFrame:
     """Scan the current (or time-travel) snapshot on either branch.
@@ -159,8 +193,7 @@ def read_table(spark: SparkSession, target: str,
         return _snap.read_snapshot(spark, target, version=version)
     if version is None:
         return spark.table(target).select(*TRIPLE_COLS)
-    snaps = (spark.table("%s.snapshots" % target)
-             .orderBy("committed_at").collect())
+    snaps = _history(spark, target)
     if not 1 <= version <= len(snaps):
         raise _snap.SnapshotNotFound(
             "version %d not in %s history (1..%d)"
@@ -175,8 +208,7 @@ def table_versions(spark: SparkSession, target: str) -> list[dict]:
     ``version`` (1-based) and ``operation``."""
     if catalog_of(spark, target) is None:
         return _snap.snapshot_versions(spark, target)
-    snaps = (spark.table("%s.snapshots" % target)
-             .orderBy("committed_at").collect())
+    snaps = _history(spark, target)
     return [{"version": i + 1, "operation": r["operation"],
              "snapshot_id": r["snapshot_id"]}
             for i, r in enumerate(snaps)]

@@ -74,6 +74,8 @@ from typing import Dict, Iterable, List, Set, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..fixpoint import fixpoint
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 OWL_INVERSE_OF = "http://www.w3.org/2002/07/owl#inverseOf"
 OWL_SYMMETRIC = "http://www.w3.org/2002/07/owl#SymmetricProperty"
@@ -137,56 +139,26 @@ def _orbits(inverse_pairs: Iterable[Tuple[str, str]],
     return orbits
 
 
-def _transitive_closure_edges(edges: DataFrame, max_rounds: int = 64
-                              ) -> DataFrame:
+def _compose_edges(left: DataFrame, right: DataFrame) -> DataFrame:
+    """One hop of a transitive predicate: ``(pred, a, c, c_kind)`` for
+    every ``(pred, a, b)`` in ``left`` and ``(pred, b, c)`` in
+    ``right``."""
+    return (left.alias("l")
+            .join(right.alias("r"), (F.col("l.pred") == F.col("r.pred"))
+                  & (F.col("l.b") == F.col("r.a")))
+            .select("l.pred", "l.a", "r.b", "r.b_kind"))
+
+
+def _transitive_closure_edges(edges: DataFrame) -> DataFrame:
     """Semi-naive transitive closure of a ``(pred, a, b, b_kind)``
     edge relation, per predicate.  Returns only the DERIVED edges
-    (closure minus base).  Same loop discipline as
-    ``rdfs._transitive_closure_df`` (localCheckpoint per round,
-    constraint propagation off for the checkpoint stats-rewrite)."""
-    from .rdfs import _no_constraint_propagation
-
-    with _no_constraint_propagation(edges.sparkSession):
-        # base checkpointed ONCE: every round joins against it, and
-        # recomputing the upstream orbit expansion per round would scan
-        # the instance relation L times for a depth-L closure
-        base = edges.dropDuplicates(["pred", "a", "b"]).localCheckpoint()
-        # One materialization barrier per round: only the delta is
-        # checkpointed.  The accumulated closure stays a SHALLOW lazy
-        # union of already-checkpointed deltas — the anti-join scans the
-        # same bytes either way, but we skip rewriting the whole closure
-        # (O(rounds x closure) checkpoint I/O) and the derived union
-        # every round.
-        deltas: List[DataFrame] = []
-        closure = base
-        delta = base
-        for _ in range(max_rounds):
-            grown = (
-                delta.alias("l")
-                .join(base.alias("r"),
-                      (F.col("l.pred") == F.col("r.pred"))
-                      & (F.col("l.b") == F.col("r.a")))
-                .select(F.col("l.pred").alias("pred"),
-                        F.col("l.a").alias("a"),
-                        F.col("r.b").alias("b"),
-                        F.col("r.b_kind").alias("b_kind"))
-                .dropDuplicates(["pred", "a", "b"])
-                .join(closure, ["pred", "a", "b"], "left_anti")
-                .localCheckpoint())
-            if grown.isEmpty():
-                break
-            delta = grown
-            deltas.append(grown)
-            closure = closure.unionByName(grown)
-        else:
-            raise OwlUnsupportedPattern(
-                "transitive closure did not converge within %d rounds "
-                "(cycle-heavy relation?)" % max_rounds)
-    if not deltas:
-        return base.limit(0)
-    derived = deltas[0]
-    for d in deltas[1:]:
-        derived = derived.unionByName(d)
+    (closure minus base)."""
+    # base checkpointed ONCE: every round joins against it, and
+    # recomputing the upstream orbit expansion per round would scan
+    # the instance relation L times for a depth-L closure
+    base = edges.dropDuplicates(["pred", "a", "b"]).localCheckpoint()
+    _, derived = fixpoint(base, lambda delta, _: _compose_edges(delta, base),
+                          ["pred", "a", "b"], "owl transitive closure")
     return derived
 
 
@@ -451,8 +423,7 @@ def transitive_edges(expanded: DataFrame, schema: OwlSchema) -> DataFrame:
 
 def owl_closure(triples: DataFrame,
                 schema_triples: DataFrame = None,
-                local_threshold: int = 1_000_000,
-                max_rounds: int = 64) -> DataFrame:
+                local_threshold: int = 1_000_000) -> DataFrame:
     """Materialize the inverseOf/Symmetric/Transitive closure of a
     5-column triples relation.  Output: the input plus all inferred
     triples, deduplicated.
@@ -474,7 +445,7 @@ def owl_closure(triples: DataFrame,
         out_parts.append(class_expand(triples, schema))
     if schema.trans_orbit:
         edges = transitive_edges(expanded, schema)
-        derived = _transitive_closure_edges(edges, max_rounds=max_rounds)
+        derived = _transitive_closure_edges(edges)
         out_parts.append(derived.select(
             F.col("a").alias("subj"), "pred",
             F.col("b").alias("obj_value"),
@@ -549,7 +520,6 @@ def compile_chain_axioms(schema_src: DataFrame,
 
 def owl_chain_closure(triples: DataFrame,
                       schema_triples: DataFrame = None,
-                      max_rounds: int = 64,
                       local_threshold: int = 1_000_000) -> DataFrame:
     """Materialize ``owl:propertyChainAxiom`` consequences (OWL RL
     prp-spo2): for each axiom p <- p1∘...∘pn, every instance walk
@@ -562,10 +532,7 @@ def owl_chain_closure(triples: DataFrame,
     pool with per-predicate slice joins on (value, non-literal) and
     anti-joins the pool; rounds iterate because a chain head can feed
     another chain's body (or its own — p <- p∘q is a recursive axiom
-    and converges like a transitive closure).  Same localCheckpoint /
-    constraint-propagation discipline as the other closure loops."""
-    from .rdfs import _no_constraint_propagation
-
+    and converges like a transitive closure)."""
     triples = triples.select(*_TRIPLE_COLS)
     schema_src = (triples if schema_triples is None
                   else schema_triples.select(*_TRIPLE_COLS))
@@ -595,28 +562,17 @@ def owl_chain_closure(triples: DataFrame,
         return e.select("subj", F.lit(head).alias("pred"),
                         "obj_value", "obj_kind", "obj_lang")
 
-    with _no_constraint_propagation(triples.sparkSession):
-        pool = (triples.filter(F.col("pred").isin(relevant))
-                .dropDuplicates(key).localCheckpoint())
-        deltas: List[DataFrame] = []
-        for _ in range(max_rounds):
-            parts = [compose(pool, h, steps) for h, steps in chains]
-            cand = parts[0]
-            for p in parts[1:]:
-                cand = cand.unionByName(p)
-            new = (cand.dropDuplicates(key)
-                   .join(pool, key, "left_anti").localCheckpoint())
-            if new.isEmpty():
-                break
-            deltas.append(new)
-            pool = pool.unionByName(new)
-        else:
-            raise OwlUnsupportedPattern(
-                "property-chain closure did not converge within %d "
-                "rounds" % max_rounds)
-    for d in deltas:
-        out = out.unionByName(d)
-    return out.dropDuplicates(_TRIPLE_COLS)
+    def step(_delta: DataFrame, pool: DataFrame) -> DataFrame:
+        parts = [compose(pool, h, steps) for h, steps in chains]
+        cand = parts[0]
+        for p in parts[1:]:
+            cand = cand.unionByName(p)
+        return cand
+
+    seed = (triples.filter(F.col("pred").isin(relevant))
+            .dropDuplicates(key))
+    _, derived = fixpoint(seed, step, key, "owl property chain")
+    return out.unionByName(derived).dropDuplicates(_TRIPLE_COLS)
 
 
 # --------------------------------------------------------------------------
@@ -658,8 +614,7 @@ def _g_of(col):
 
 def owl_closure_quads(quads: DataFrame,
                       schema_quads: DataFrame = None,
-                      local_threshold: int = 1_000_000,
-                      max_rounds: int = 64) -> DataFrame:
+                      local_threshold: int = 1_000_000) -> DataFrame:
     """Per-named-graph OWL closure of a QUAD relation in ONE job: each
     graph closes under its own axioms, no cross-graph leakage — the
     dataset analogue of ``owl_closure`` (and the OWL sibling of
@@ -746,8 +701,7 @@ def owl_closure_quads(quads: DataFrame,
         enc_schema = encode(schema_quads)
 
     out = owl_closure(enc, schema_triples=enc_schema,
-                      local_threshold=local_threshold,
-                      max_rounds=max_rounds)
+                      local_threshold=local_threshold)
     graph = F.coalesce(
         _g_of(F.col("subj")), _g_of(F.col("pred")),
         F.when(F.col("obj_kind") != "literal",

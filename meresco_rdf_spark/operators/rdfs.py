@@ -45,6 +45,8 @@ from typing import List, Tuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..fixpoint import fixpoint
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDFS_SUBCLASS = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
 RDFS_SUBPROP = "http://www.w3.org/2000/01/rdf-schema#subPropertyOf"
@@ -83,49 +85,18 @@ def _transitive_closure_local(
     return sorted(closure)
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _no_constraint_propagation(spark):
-    """Guard for semi-naive closure loops: Spark 4's eager
-    ``localCheckpoint`` stats-rewrite (``Union.rewriteConstraints``)
-    throws ``key not found: pred#N`` when a checkpointed union child
-    preserves a constraint referencing an upstream filter attribute
-    that is not part of its output.  Constraint propagation buys
-    nothing inside these loops (every relation is re-checkpointed per
-    round), so switch it off for the loop and restore after."""
-    key = "spark.sql.constraintPropagation.enabled"
-    prev = spark.conf.get(key, "true")
-    spark.conf.set(key, "false")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, prev)
-
-
 def _transitive_closure_df(edges: DataFrame) -> DataFrame:
     """Semi-naive distributed transitive closure over (a, b) edges —
-    the above-the-gate fallback.  ``localCheckpoint`` every round: the
-    relation is schema-sized, so truncation is cheap and keeps the
-    lineage from doubling per round."""
-    with _no_constraint_propagation(edges.sparkSession):
-        closure = edges.dropDuplicates(["a", "b"]).localCheckpoint()
-        delta = closure
-        while True:
-            grown = (
-                delta.alias("l")
+    the above-the-gate fallback (the relation is schema-sized, so the
+    per-round checkpoints are cheap)."""
+    def step(delta: DataFrame, _acc: DataFrame) -> DataFrame:
+        return (delta.alias("l")
                 .join(edges.alias("r"), F.col("l.b") == F.col("r.a"))
-                .select(F.col("l.a").alias("a"), F.col("r.b").alias("b"))
-                .dropDuplicates(["a", "b"])
-                .join(closure, ["a", "b"], "left_anti")
-                .localCheckpoint())
-            if grown.isEmpty():
-                return closure
-            delta = grown
-            # deltas are checkpointed; the accumulated closure stays a
-            # shallow lazy union of them (one barrier per round)
-            closure = closure.unionByName(grown)
+                .select(F.col("l.a").alias("a"), F.col("r.b").alias("b")))
+
+    closure, _ = fixpoint(edges.dropDuplicates(["a", "b"]), step,
+                          ["a", "b"], "rdfs transitive closure")
+    return closure
 
 
 def _compose(left: List[Tuple[str, str]],

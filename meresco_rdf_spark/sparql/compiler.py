@@ -36,6 +36,7 @@ from typing import Dict, List, Optional as Opt, Sequence, Set, Tuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..fixpoint import fixpoint
 from .parser import (
     Arith,
     BindPattern,
@@ -281,6 +282,13 @@ def _seeded_branch_closure(triples: DataFrame,
                    .select(*sel))
         return cur
 
+    def walk_all(front: DataFrame) -> DataFrame:
+        parts = [walk(front, steps) for steps in branches]
+        cand = parts[0]
+        for p in parts[1:]:
+            cand = cand.unionByName(p)
+        return cand
+
     start = spark.range(1).select(
         F.lit(seed[0]).alias("node"), F.lit(seed[1]).alias("kind"),
         F.lit(seed[2]).cast("string").alias("lang"))
@@ -290,34 +298,11 @@ def _seeded_branch_closure(triples: DataFrame,
         start = (triples.select(F.col("context").alias("ctx"))
                  .dropDuplicates().crossJoin(start)
                  .select(*node_cols))
-    saved = spark.conf.get("spark.sql.constraintPropagation.enabled",
-                           "true")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        frontier = start.localCheckpoint(eager=True)
-        visited = None
-        while True:
-            parts = [walk(frontier, steps) for steps in branches]
-            cand = parts[0]
-            for p in parts[1:]:
-                cand = cand.unionByName(p)
-            cand = cand.dropDuplicates(node_cols)
-            anti = visited if visited is not None else frontier.limit(0)
-            cond = ((F.col("c.node") == F.col("v.node"))
-                    & (F.col("c.kind") == F.col("v.kind"))
-                    & F.col("c.lang").eqNullSafe(F.col("v.lang")))
-            if with_ctx:
-                cond = cond & (F.col("c.ctx") == F.col("v.ctx"))
-            new = (cand.alias("c").join(anti.alias("v"), cond, "left_anti")
-                   .localCheckpoint(eager=True))
-            if new.isEmpty():
-                break
-            visited = new if visited is None else visited.unionByName(new)
-            frontier = new
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", saved)
-    if visited is None:
-        visited = start.limit(0)
+    # p+ has length >= 1: the first walk is the seed, so the start node
+    # is in the closure only when a cycle leads back to it
+    visited, _ = fixpoint(walk_all(start).dropDuplicates(node_cols),
+                          lambda delta, _acc: walk_all(delta), node_cols,
+                          "sparql seeded path")
     out = [F.lit(seed[0]).alias("src"), F.lit(seed[1]).alias("src_kind"),
            F.lit(seed[2]).cast("string").alias("src_lang"),
            F.col("node").alias("dst"), F.col("kind").alias("dst_kind"),
@@ -350,68 +335,32 @@ def closure_of_edges(base: DataFrame, start: Opt[DataFrame] = None,
     lineage is cut with ``localCheckpoint`` per round and the loop is
     bounded by the longest simple path.
     """
-    if start is None:
-        start = base
-    # Spark 4.1 quirk: localCheckpoint of a union whose lineage carries an
-    # equality constraint (the seed filter) dies in the checkpoint's
-    # constraint rewrite ("key not found" in AttributeMap) — constraint
-    # propagation is suspended for the loop's checkpoints and restored
-    # after.  The closure plan gains nothing from inferred filters anyway:
-    # every round is already materialized.
-    spark = base.sparkSession
-    saved = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
-    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
-    try:
-        # One materialization barrier per round: only the frontier delta
-        # is checkpointed; the accumulated closure stays a shallow lazy
-        # union of already-checkpointed deltas (same discipline as
-        # operators.owl._transitive_closure_edges — the anti-join scans
-        # the same bytes, we skip rewriting the closure every round).
-        closure = start.localCheckpoint(eager=True)
-        frontier = closure
-        while True:
-            join_cond = F.col("f.dst") == F.col("b.src")
-            if full_term_join:
-                join_cond = (join_cond
-                             & (F.col("f.dst_kind") == F.col("b.src_kind"))
-                             & F.col("f.dst_lang").eqNullSafe(
-                                 F.col("b.src_lang")))
-            if with_ctx:
-                join_cond = join_cond & (F.col("f.ctx") == F.col("b.ctx"))
-            out = [F.col("f.src").alias("src"),
-                   F.col("f.src_kind").alias("src_kind"),
-                   F.col("f.src_lang").alias("src_lang"),
-                   F.col("b.dst").alias("dst"),
-                   F.col("b.dst_kind").alias("dst_kind"),
-                   F.col("b.dst_lang").alias("dst_lang")]
-            if with_ctx:
-                out.append(F.col("f.ctx").alias("ctx"))
-            fr = frontier
-            if prune_literal_dst:
-                fr = fr.filter(F.col("dst_kind") != "literal")
-            ext = (fr.alias("f")
-                   .join(base.alias("b"), join_cond)
-                   .select(*out))
-            c = closure.alias("c")
-            e = ext.distinct().alias("e")
-            anti_cond = ((F.col("e.src") == F.col("c.src"))
-                         & (F.col("e.src_kind") == F.col("c.src_kind"))
-                         & F.col("e.src_lang").eqNullSafe(
-                             F.col("c.src_lang"))
-                         & (F.col("e.dst") == F.col("c.dst"))
-                         & (F.col("e.dst_kind") == F.col("c.dst_kind"))
-                         & F.col("e.dst_lang").eqNullSafe(
-                             F.col("c.dst_lang")))
-            if with_ctx:
-                anti_cond = anti_cond & (F.col("e.ctx") == F.col("c.ctx"))
-            new = (e.join(c, anti_cond, "left_anti")
-                   .localCheckpoint(eager=True))
-            if new.isEmpty():
-                return closure
-            closure = closure.unionByName(new)
-            frontier = new
-    finally:
-        spark.conf.set("spark.sql.constraintPropagation.enabled", saved)
+    def step(frontier: DataFrame, _acc: DataFrame) -> DataFrame:
+        join_cond = F.col("f.dst") == F.col("b.src")
+        if full_term_join:
+            join_cond = (join_cond
+                         & (F.col("f.dst_kind") == F.col("b.src_kind"))
+                         & F.col("f.dst_lang").eqNullSafe(
+                             F.col("b.src_lang")))
+        if with_ctx:
+            join_cond = join_cond & (F.col("f.ctx") == F.col("b.ctx"))
+        out = [F.col("f.src").alias("src"),
+               F.col("f.src_kind").alias("src_kind"),
+               F.col("f.src_lang").alias("src_lang"),
+               F.col("b.dst").alias("dst"),
+               F.col("b.dst_kind").alias("dst_kind"),
+               F.col("b.dst_lang").alias("dst_lang")]
+        if with_ctx:
+            out.append(F.col("f.ctx").alias("ctx"))
+        if prune_literal_dst:
+            frontier = frontier.filter(F.col("dst_kind") != "literal")
+        return (frontier.alias("f")
+                .join(base.alias("b"), join_cond)
+                .select(*out))
+
+    start = base if start is None else start
+    closure, _ = fixpoint(start, step, start.columns, "sparql path closure")
+    return closure
 
 
 def _graph_terms(triples: DataFrame, with_ctx: bool = False) -> DataFrame:
@@ -1844,11 +1793,11 @@ def sparql_describe(triples: DataFrame, query: str,
     every blank node reachable through object position.
 
     Plan: seeds = constant IRIs ∪ non-literal bindings of the DESCRIBE
-    variables from the WHERE group; then a semi-join per closure round
-    (frontier-driven, anti-joined against the seen set so each node is
-    expanded exactly once; ``localCheckpoint`` caps lineage — bnode
-    chains are document-scoped and shallow, so the loop is short).
-    Returns the 5-column triples relation."""
+    variables from the WHERE group; a fixpoint over NODES closes them
+    under "bnode object of a described subject" (each node expanded
+    once — bnode chains are document-scoped and shallow, so the loop is
+    short); the output is one semi-join of the relation against the
+    closed node set.  Returns the 5-column triples relation."""
     ast = parse_query(query)
     if isinstance(ast, UpdateQuery) or ast.describe_terms is None:
         raise SparqlCompileError("not a DESCRIBE query; use sparql_select")
@@ -1877,25 +1826,20 @@ def sparql_describe(triples: DataFrame, query: str,
                      .select(F.col(val).alias("node")))
             seeds = piece if seeds is None else seeds.unionByName(piece)
     assert seeds is not None  # parser guarantees >= 1 term
-    seen = seeds.distinct().localCheckpoint(eager=True)
-    frontier = seen
-    out: Opt[DataFrame] = None
-    while True:
-        batch = (closure_rel.alias("t")
-                 .join(frontier.alias("s"),
-                       F.col("t.subj") == F.col("s.node"), "left_semi"))
-        out = batch if out is None else out.unionByName(batch)
-        nxt = (batch.filter(F.col("obj_kind") == "bnode")
-               .select(F.col("obj_value").alias("node")).distinct()
-               .join(seen, "node", "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
-            break
-        # shallow union of checkpointed deltas — one barrier per round
-        seen = seen.unionByName(nxt)
-        frontier = nxt
-    return out.dropDuplicates(
-        ["subj", "pred", "obj_value", "obj_kind", "obj_lang"])
+
+    def step(frontier: DataFrame, _acc: DataFrame) -> DataFrame:
+        return (closure_rel.alias("t")
+                .join(frontier.alias("s"),
+                      F.col("t.subj") == F.col("s.node"), "left_semi")
+                .filter(F.col("obj_kind") == "bnode")
+                .select(F.col("obj_value").alias("node")))
+
+    nodes, _ = fixpoint(seeds.distinct(), step, ["node"], "sparql describe")
+    return (closure_rel.alias("t")
+            .join(nodes.alias("s"), F.col("t.subj") == F.col("s.node"),
+                  "left_semi")
+            .dropDuplicates(
+                ["subj", "pred", "obj_value", "obj_kind", "obj_lang"]))
 
 
 # ---------------------------------------------------------------------------

@@ -44,22 +44,20 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
+from ..fixpoint import fixpoint
 from ..operators.owl import (
     OWL_INVERSE_OF,
     OWL_SYMMETRIC,
     OWL_TRANSITIVE,
     RDF_TYPE,
-    OwlUnsupportedPattern,
-    _transitive_closure_edges,
+    _compose_edges,
     class_expand,
     compile_owl_schema,
     orbit_expand,
     transitive_edges,
 )
-from ..operators.rdfs import _no_constraint_propagation
 
 TRIPLE_COLS = ["subj", "pred", "obj_value", "obj_kind", "obj_lang"]
-_EDGE_COLS = ["pred", "a", "b", "b_kind"]
 
 
 def _is_axiom():
@@ -72,55 +70,19 @@ def _is_axiom():
                & F.col("obj_value").isin(*_AXIOM_CLASSES)))
 
 
-def _incremental_closure(all_edges: DataFrame, seed: DataFrame,
-                         max_rounds: int = 64) -> DataFrame:
-    """Derived edges of ``closure(all_edges)`` reachable only through a
-    ``seed`` edge -- ``all_edges`` minus ``seed`` must already be
-    transitively closed.  Returns ONLY newly derived edges."""
-    with _no_constraint_propagation(all_edges.sparkSession):
-        acc = all_edges.dropDuplicates(_EDGE_COLS).localCheckpoint()
-        delta = seed.dropDuplicates(_EDGE_COLS).localCheckpoint()
-        # One barrier per round (the delta checkpoint); ``acc`` grows as
-        # a shallow lazy union of already-checkpointed deltas, so the
-        # fwd/bwd joins and the anti-join scan the same bytes without
-        # rewriting the whole accumulated set every round (mirrors
-        # operators.owl._transitive_closure_edges).
-        deltas = []
-        for _ in range(max_rounds):
-            fwd = (delta.alias("l")
-                   .join(acc.alias("r"),
-                         (F.col("l.pred") == F.col("r.pred"))
-                         & (F.col("l.b") == F.col("r.a")))
-                   .select(F.col("l.pred").alias("pred"),
-                           F.col("l.a").alias("a"),
-                           F.col("r.b").alias("b"),
-                           F.col("r.b_kind").alias("b_kind")))
-            bwd = (acc.alias("l")
-                   .join(delta.alias("r"),
-                         (F.col("l.pred") == F.col("r.pred"))
-                         & (F.col("l.b") == F.col("r.a")))
-                   .select(F.col("l.pred").alias("pred"),
-                           F.col("l.a").alias("a"),
-                           F.col("r.b").alias("b"),
-                           F.col("r.b_kind").alias("b_kind")))
-            grown = (fwd.unionByName(bwd)
-                     .dropDuplicates(_EDGE_COLS[:3])
-                     .join(acc, _EDGE_COLS[:3], "left_anti")
-                     .localCheckpoint())
-            if grown.isEmpty():
-                break
-            delta = grown
-            deltas.append(grown)
-            acc = acc.unionByName(grown)
-        else:
-            raise OwlUnsupportedPattern(
-                "incremental transitive closure did not converge within "
-                "%d rounds" % max_rounds)
-    if not deltas:
-        return all_edges.limit(0)
-    derived = deltas[0]
-    for d in deltas[1:]:
-        derived = derived.unionByName(d)
+def _incremental_closure(seed: DataFrame,
+                         closed: DataFrame = None) -> DataFrame:
+    """Edges of ``closure(closed ∪ seed)`` that are in neither --
+    ``closed`` (the table's edges, if any) must already be transitively
+    closed.  Every round grows the delta in BOTH directions against the
+    accumulated set."""
+    def step(delta: DataFrame, acc: DataFrame) -> DataFrame:
+        return _compose_edges(delta, acc).unionByName(
+            _compose_edges(acc, delta))
+
+    key = ["pred", "a", "b"]
+    _, derived = fixpoint(seed.dropDuplicates(key), step, key,
+                          "owl stream closure", closed=closed)
     return derived
 
 
@@ -133,7 +95,7 @@ def _edges_to_triples(edges: DataFrame) -> DataFrame:
 
 def run_owl_maintenance(instance_stream: DataFrame,
                         schema_triples: DataFrame, table_path: str,
-                        checkpoint: str, max_rounds: int = 64):
+                        checkpoint: str):
     """Start the exactly-once closed-table maintenance; returns the
     streaming query (``availableNow`` trigger: drains the source, then
     stops -- the resumable-batch shape).
@@ -167,17 +129,10 @@ def run_owl_maintenance(instance_stream: DataFrame,
 
         fresh = expanded.unionByName(schema_rows)
         if schema.trans_orbit:
-            batch_edges = transitive_edges(expanded, schema)
-            if current is None:
-                derived = _transitive_closure_edges(
-                    batch_edges, max_rounds=max_rounds)
-            else:
-                closed_edges = transitive_edges(current, schema)
-                seed = batch_edges.join(closed_edges, _EDGE_COLS[:3],
-                                        "left_anti")
-                all_edges = closed_edges.unionByName(seed)
-                derived = _incremental_closure(all_edges, seed,
-                                               max_rounds=max_rounds)
+            closed = (None if current is None
+                      else transitive_edges(current, schema))
+            derived = _incremental_closure(
+                transitive_edges(expanded, schema), closed)
             fresh = fresh.unionByName(_edges_to_triples(derived))
         fresh = fresh.dropDuplicates(TRIPLE_COLS)
         if current is not None:

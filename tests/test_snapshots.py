@@ -327,6 +327,49 @@ class TestIcebergSeam:
         finally:
             spark.conf.unset("spark.sql.catalog.mycat")
 
+    def test_bad_identifiers_rejected_before_sql(self, spark):
+        from meresco_rdf_spark.kg.iceberg import (
+            InvalidTableIdentifier,
+            catalog_of,
+            expire,
+            merge_sql,
+        )
+
+        spark.conf.set("spark.sql.catalog.mycat", "x.y.FakeCatalog")
+        try:
+            # one part naming a configured catalog: no table to expire
+            with pytest.raises(InvalidTableIdentifier):
+                expire(spark, "mycat")
+            for bad in ("mycat.db.t; DROP TABLE x", "mycat.`t`",
+                        "mycat..t", "mycat.1t", "mycat.t'"):
+                with pytest.raises(InvalidTableIdentifier):
+                    catalog_of(spark, bad)
+        finally:
+            spark.conf.unset("spark.sql.catalog.mycat")
+        with pytest.raises(InvalidTableIdentifier):
+            merge_sql("cat.db.t", "delta_v s; DROP TABLE x")
+        with pytest.raises(InvalidTableIdentifier):
+            merge_sql("t", "delta_v")
+
+    def test_history_orders_same_instant_snapshots_by_id(self, spark):
+        import datetime
+
+        from meresco_rdf_spark.kg.iceberg import _history
+
+        t0 = datetime.datetime(2024, 1, 1)
+        t1 = datetime.datetime(2024, 1, 2)
+        snaps = spark.createDataFrame(
+            [(t1, 30, "append"), (t1, 10, "overwrite"), (t0, 20, "append")],
+            "committed_at timestamp, snapshot_id long, operation string")
+
+        class Session:  # the snapshots metadata table, without a catalog
+            def table(self, name):
+                assert name == "cat.db.t.snapshots"
+                return snaps
+
+        got = [r["snapshot_id"] for r in _history(Session(), "cat.db.t")]
+        assert got == [20, 10, 30]
+
     def test_merge_sql_shape(self):
         from meresco_rdf_spark.kg.iceberg import merge_sql
 

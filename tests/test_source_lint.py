@@ -1,0 +1,27 @@
+"""Static checks over the package source (no linter is a dependency)."""
+
+import ast
+import pathlib
+
+PKG = pathlib.Path(__file__).resolve().parent.parent / "meresco_rdf_spark"
+
+
+def test_no_dict_literal_repeats_a_constant_key():
+    # a repeated key silently keeps the LAST value, so a registry entry
+    # written twice can shadow the first without any error
+    repeats = []
+    for path in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Dict):
+                continue
+            seen = set()
+            for key in node.keys:
+                if not isinstance(key, ast.Constant):
+                    continue
+                if key.value in seen:
+                    repeats.append("%s:%d %r" % (
+                        path.relative_to(PKG.parent), key.lineno,
+                        key.value))
+                seen.add(key.value)
+    assert repeats == []

@@ -104,3 +104,5 @@ def test_spark_submit_runs_and_resumes(tmp_path):
     assert second["buckets_processed"] == 0
     assert second["buckets_skipped"] == 4
     assert second["final_triples"] == first["final_triples"]
+    # the warm-up run writes to process scratch, never next to --output
+    assert not [n for n in os.listdir(neutral_cwd) if n.endswith("_warm")]

@@ -74,12 +74,16 @@ def main() -> None:
     # the in-job wall is what tools/bench_scaling.py times, keeping
     # submit-based and in-process measurements comparable.  Warm the
     # codegen/python-worker paths first for the same reason.
+    import shutil
     import time as _time
 
-    run_checkpointed(spark, transcripts.limit(2000),
-                     args.output + "_warm", n_buckets=1,
+    from meresco_rdf_spark._scratch import scratch_dir
+
+    warm = scratch_dir("submit_warm")
+    run_checkpointed(spark, transcripts.limit(2000), warm, n_buckets=1,
                      table_buckets=args.table_buckets,
                      jaccard_threshold=args.jaccard_threshold)
+    shutil.rmtree(warm, ignore_errors=True)
     t0 = _time.monotonic()
     summary = run_checkpointed(
         spark, transcripts, args.output,
