@@ -40,6 +40,12 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..fixpoint import log_round, rounds
 from .extract import OWL_SAMEAS, SURFACE_URI_PREFIX
 
+# Distinct surface keys up to which similarity is computed on the driver
+# (exact all-pairs Jaccard + union-find): below it the distributed LSH
+# and connected-components DAGs cost more in scheduled jobs than the
+# pairs cost in Python.
+LOCAL_SURFACES = 2000
+
 
 # --------------------------------------------------------------------------
 # shingles + MinHash (all JVM-side)
@@ -110,7 +116,7 @@ def similar_surface_pairs(surfaces: DataFrame,
                           n: int = 3, k: int = 32,
                           bands: int = 16,
                           threshold: float = 0.5,
-                          local_threshold: int = 2000) -> DataFrame:
+                          local_threshold: int = LOCAL_SURFACES) -> DataFrame:
     """Distinct-surface similarity edges ``(a, b)`` with exact Jaccard >=
     threshold, found via MinHash-LSH candidate generation.
 
@@ -137,17 +143,28 @@ def similar_surface_pairs(surfaces: DataFrame,
         .withColumn("shingles", char_shingles(F.col(key_col), n))
         .persist()
     )
-    n_surfaces = base.count()  # eager: the inverted index (read twice by
-    # the verify joins), the size agg, AND the banded signatures all
-    # consume this — without the cache each consumer re-runs the upstream
-    # distinct over the full mention stream (measured 13x wall)
+    try:
+        n_surfaces = base.count()  # eager: the inverted index (read twice
+        # by the verify joins), the size agg, AND the banded signatures
+        # all consume this — without the cache each consumer re-runs the
+        # upstream distinct over the full mention stream (measured 13x
+        # wall)
+        if n_surfaces <= local_threshold:
+            keys = [r[0] for r in base.select(key_col).collect()]
+            spark = surfaces.sparkSession
+            return spark.createDataFrame(
+                _local_pairs(keys, n, threshold),
+                "a string, b string, jaccard double")
+        return _lsh_pairs(base, key_col, k, bands, rows, threshold)
+    finally:
+        base.unpersist()
 
-    if n_surfaces <= local_threshold:
-        keys = [r[0] for r in base.select(key_col).collect()]
-        spark = surfaces.sparkSession
-        return spark.createDataFrame(
-            _local_pairs(keys, n, threshold),
-            "a string, b string, jaccard double")
+
+def _lsh_pairs(base: DataFrame, key_col: str, k: int, bands: int, rows: int,
+               threshold: float) -> DataFrame:
+    """The distributed plan of :func:`similar_surface_pairs` over the
+    cached ``(key, shingles)`` relation, checkpointed eagerly so the
+    caller may release that cache."""
     inv = base.select(key_col, F.explode("shingles").alias("shingle"))
     sizes = inv.groupBy(key_col).agg(F.count("*").alias("n_sh"))
     banded = (
@@ -185,6 +202,7 @@ def similar_surface_pairs(surfaces: DataFrame,
                     F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")))
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
+        .localCheckpoint(eager=True)
     )
 
 
@@ -330,23 +348,53 @@ def canonical_surface_map(surfaces: DataFrame,
                           key_col: str = "surface_key",
                           threshold: float = 0.5) -> DataFrame:
     """(surface_key, canonical_key, canonical_uri) for every distinct
-    surface — singletons map to themselves."""
-    distinct = surfaces.select(key_col).dropDuplicates([key_col]).persist()
-    distinct.count()  # eager: feeds pair generation and the final mapping
-    # join; un-cached it would re-aggregate the whole upstream per consumer
-    edges = similar_surface_pairs(distinct, key_col=key_col, threshold=threshold)
-    comps = connected_components(edges)
-    mapped = (
-        distinct.join(
-            comps, distinct[key_col] == comps["node"], "left")
-        .select(
-            F.col(key_col).alias("surface_key"),
-            F.coalesce(F.col("component"), F.col(key_col)).alias("canonical_key"))
-    )
-    uri = F.concat(
-        F.lit(SURFACE_URI_PREFIX),
-        F.replace(F.col("canonical_key"), F.lit(" "), F.lit("-")))
-    return mapped.withColumn("canonical_uri", uri)
+    surface — singletons map to themselves.
+
+    Up to ``LOCAL_SURFACES`` distinct keys the keys are collected once
+    and the whole map is built on the driver (``_local_pairs`` +
+    ``_local_components``, the same exact answers the distributed path
+    gives when LSH misses no pair); above it the keys are cached and run
+    through :func:`similar_surface_pairs` and
+    :func:`connected_components`."""
+    distinct = surfaces.select(key_col).dropDuplicates([key_col])
+    keys = [r[0] for r in distinct.limit(LOCAL_SURFACES + 1).collect()]
+    if len(keys) <= LOCAL_SURFACES:
+        named = sorted(k for k in keys if k is not None)
+        comp = _local_components(
+            (a, b) for a, b, _ in _local_pairs(named, 3, threshold))
+        rows = []
+        for key in named:
+            canonical = comp.get(key, key)
+            rows.append((key, canonical, SURFACE_URI_PREFIX
+                         + canonical.replace(" ", "-")))
+        if len(named) < len(keys):
+            rows.append((None, None, None))  # as the left join maps NULL
+        return surfaces.sparkSession.createDataFrame(
+            rows, "surface_key string, canonical_key string, "
+                  "canonical_uri string")
+    distinct = distinct.persist()
+    try:
+        distinct.count()  # eager: feeds pair generation and the final
+        # mapping join; un-cached it would re-aggregate the whole
+        # upstream per consumer
+        edges = similar_surface_pairs(distinct, key_col=key_col,
+                                      threshold=threshold)
+        comps = connected_components(edges)
+        mapped = (
+            distinct.join(
+                comps, distinct[key_col] == comps["node"], "left")
+            .select(
+                F.col(key_col).alias("surface_key"),
+                F.coalesce(F.col("component"), F.col(key_col))
+                .alias("canonical_key"))
+        )
+        uri = F.concat(
+            F.lit(SURFACE_URI_PREFIX),
+            F.replace(F.col("canonical_key"), F.lit(" "), F.lit("-")))
+        return mapped.withColumn("canonical_uri", uri).localCheckpoint(
+            eager=True)
+    finally:
+        distinct.unpersist()
 
 
 def rewrite_triples(triples: DataFrame, canon: DataFrame,

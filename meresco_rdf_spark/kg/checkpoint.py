@@ -13,8 +13,9 @@ The manifest is itself a tiny parquet table, one row per completed bucket:
 
 ``input_fingerprint`` is an order-insensitive xxhash of the bucket's input
 rows — lineage: a resume with changed input invalidates the bucket instead
-of silently skipping it.  The driver-side logic reads ONLY the manifest
-(a few KB) — no driver iteration over data.
+of silently skipping it.  The driver collects the manifest (a few KB) and
+the per-bucket fingerprints once; scheme check and bucket selection are
+pure functions over those rows — no driver iteration over data.
 """
 
 from __future__ import annotations
@@ -57,45 +58,51 @@ def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
     return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
 
 
-def check_bucket_scheme(spark: SparkSession, manifest_path: str,
-                        n_buckets: int) -> None:
+def check_bucket_scheme(manifest_rows, n_buckets: int,
+                        manifest_path: str) -> None:
     """Refuse to resume against a manifest written with a different
     ``n_buckets``: the bucket function changes, so every prior
     bucket->conversation assignment (and every raw_triples subtree) is
-    invalid — silently mixing schemes resurrects or drops rows."""
-    manifest = read_manifest(spark, manifest_path)
-    schemes = [r.n_buckets for r in
-               manifest.select("n_buckets").dropDuplicates().collect()
-               if r.n_buckets is not None]
+    invalid — silently mixing schemes resurrects or drops rows.
+    ``manifest_rows`` are the collected manifest rows; tombstones carry
+    no scheme."""
+    schemes = sorted({r.n_buckets for r in manifest_rows
+                      if r.n_buckets is not None})
     if any(s != n_buckets for s in schemes):
         raise ValueError(
             "manifest at %s was written with n_buckets=%s; resume with the "
             "same value or clear the output directory" % (manifest_path, schemes))
 
 
-def pending_buckets(spark: SparkSession, transcripts: DataFrame,
-                    manifest_path: str, n_buckets: int) -> list[int]:
-    """Buckets not yet completed with an unchanged input fingerprint.
-    Driver-side result is a list of bucket ids (size n_buckets max).
-    Per bucket, only the LATEST manifest row counts (re-runs append)."""
-    fp = input_fingerprints(transcripts, n_buckets)
-    latest = (
-        read_manifest(spark, manifest_path)
-        .groupBy("bucket")
-        .agg(F.max_by(F.struct("input_fingerprint", "status"), "ts").alias("m"))
-    )
-    done = (
-        latest.filter(F.col("m.status") == "done")
-        .select("bucket", F.col("m.input_fingerprint").alias("done_fp"))
-    )
-    pending = (
-        fp.join(done, "bucket", "left")
-        .filter(
-            F.col("done_fp").isNull()
-            | (F.col("done_fp") != F.col("input_fingerprint")))
-        .select("bucket")
-    )
-    return sorted(r.bucket for r in pending.collect())
+def _done_fingerprints(manifest_rows) -> dict[int, str]:
+    """``{bucket: input_fingerprint}`` of every bucket whose LATEST
+    manifest row (re-runs append) says ``done``.  Rows that tie on the
+    latest ``ts`` count as done only if all of them are ``done`` with one
+    fingerprint, so the answer never depends on row order — a doubtful
+    bucket is re-run, which is idempotent."""
+    latest: dict[int, list] = {}
+    for r in manifest_rows:
+        tied = latest.get(r.bucket)
+        if tied is None or r.ts > tied[0].ts:
+            latest[r.bucket] = [r]
+        elif r.ts == tied[0].ts:
+            tied.append(r)
+    out = {}
+    for bucket, tied in latest.items():
+        fps = {r.input_fingerprint for r in tied}
+        if len(fps) == 1 and all(r.status == "done" for r in tied):
+            out[bucket] = fps.pop()
+    return out
+
+
+def pending_buckets(manifest_rows, fingerprints: dict) -> list[int]:
+    """Buckets of the current input (``fingerprints``: ``{bucket:
+    (n_turns, input_fingerprint)}``, one collect of
+    :func:`input_fingerprints`) not yet completed with an unchanged
+    input fingerprint.  Pure: reads no data."""
+    done = _done_fingerprints(manifest_rows)
+    return sorted(b for b, (_, fp) in fingerprints.items()
+                  if done.get(b) != fp)
 
 
 def record_done(spark: SparkSession, manifest_path: str, bucket: int,

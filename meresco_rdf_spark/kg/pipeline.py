@@ -18,7 +18,7 @@ import os
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .canonicalize import (
     canonical_surface_map,
@@ -31,6 +31,7 @@ from .checkpoint import (
     drop_stale_buckets,
     input_fingerprints,
     pending_buckets,
+    read_manifest,
     record_done,
 )
 from .extract import (
@@ -96,18 +97,26 @@ def run_checkpointed(spark: SparkSession, transcripts: DataFrame,
     ``run_pipeline(transcripts).triples`` however the work was sliced
     across runs (pytest-pinned).
 
-    Returns summary metrics.  At sandbox scale buckets are processed in a
-    driver loop (n_buckets is small); each iteration is a fully
-    distributed job, so the loop costs scheduling only.
+    Returns summary metrics.  Job shape of a delta (one dirty bucket):
+    one manifest collect and one fingerprint collect on the driver
+    (scheme check and bucket selection are pure Python over those rows);
+    per dirty bucket, one mention count, the raw-triple write (its row
+    count rides along as an ``Observation``), the label-count write and
+    one manifest append; then the global phase — canonicalization over
+    the distinct surface keys (one collect below ``LOCAL_SURFACES``
+    keys), one count that fills the cache of the final triples, and the
+    two table writes, both reading that cache.  Clean buckets cost
+    nothing but their share of the fingerprint aggregation.
     """
     manifest_path = os.path.join(out_dir, "_manifest")
     run_id = uuid.uuid4().hex[:12]
-    check_bucket_scheme(spark, manifest_path, n_buckets)
-    todo = pending_buckets(spark, transcripts, manifest_path, n_buckets)
+    manifest = read_manifest(spark, manifest_path).collect()
+    check_bucket_scheme(manifest, n_buckets, manifest_path)
     fps = {
         r.bucket: (r.n_turns, r.input_fingerprint)
         for r in input_fingerprints(transcripts, n_buckets).collect()
     }
+    todo = pending_buckets(manifest, fps)
     # lineage contract: buckets with no surviving input rows must not
     # leave parquet behind (deleted conversations would resurrect in the
     # global phase); tombstoned in the manifest
@@ -115,41 +124,45 @@ def run_checkpointed(spark: SparkSession, transcripts: DataFrame,
 
     with_bucket = transcripts.withColumn(
         "_bucket", bucket_of(F.col("conv_id"), n_buckets))
-    processed = 0
     for bucket in todo:
         part = with_bucket.filter(F.col("_bucket") == bucket).drop("_bucket")
         mentions = detect_mentions(part).persist()
-        # eager cache fill BEFORE the write: the triple union consumes
-        # mentions in parallel branches inside one job, and a lazily
-        # populated cache lets those branches race and re-run the Arrow
-        # extraction (same race run_pipeline pre-empts with count())
-        n_mentions = mentions.count()
-        # per-bucket raw triples = the mention fan-out only.  Bnode-subject
-        # rows are unique by construction (conv-scoped sha1 bnodes, one row
-        # per predicate); the conv->surface kg:mentions edges repeat per
-        # mention, so only they pay a (narrow) dedup.  Label election is
-        # NOT bucket-local: the foaf:name/skos:altLabel choice needs
-        # corpus-wide counts per CANONICAL entity, so each bucket
-        # checkpoints its (surface_key, surface, n) counts and the global
-        # phase elects after canonicalization (label_triples_from_counts
-        # — the exact aggregation run_pipeline uses).
-        raw = mention_triples(mentions)
-        bnode_rows = raw.filter(F.col("subj").startswith("_:"))
-        edge_rows = (raw.filter(~F.col("subj").startswith("_:"))
-                     .dropDuplicates(["subj", "obj_value"]))
-        triples = bnode_rows.unionByName(edge_rows)
-        bucket_path = os.path.join(out_dir, "raw_triples", "bucket=%d" % bucket)
-        triples.write.mode("overwrite").parquet(bucket_path)
-        label_counts = mentions.groupBy("surface_key", "surface").agg(
-            F.count("*").alias("n"))
-        label_counts.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "label_counts", "bucket=%d" % bucket))
-        n_triples = spark.read.parquet(bucket_path).count()
-        mentions.unpersist()
+        try:
+            # eager cache fill BEFORE the write: the triple union consumes
+            # mentions in parallel branches inside one job, and a lazily
+            # populated cache lets those branches race and re-run the
+            # Arrow extraction (same race run_pipeline pre-empts with
+            # count())
+            n_mentions = mentions.count()
+            # per-bucket raw triples = the mention fan-out only.
+            # Bnode-subject rows are unique by construction (conv-scoped
+            # sha1 bnodes, one row per predicate); the conv->surface
+            # kg:mentions edges repeat per mention, so only they pay a
+            # (narrow) dedup.  Label election is NOT bucket-local: the
+            # foaf:name/skos:altLabel choice needs corpus-wide counts per
+            # CANONICAL entity, so each bucket checkpoints its
+            # (surface_key, surface, n) counts and the global phase
+            # elects after canonicalization (label_triples_from_counts —
+            # the exact aggregation run_pipeline uses).
+            raw = mention_triples(mentions)
+            bnode_rows = raw.filter(F.col("subj").startswith("_:"))
+            edge_rows = (raw.filter(~F.col("subj").startswith("_:"))
+                         .dropDuplicates(["subj", "obj_value"]))
+            written = Observation()
+            (bnode_rows.unionByName(edge_rows)
+             .observe(written, F.count(F.lit(1)).alias("n"))
+             .write.mode("overwrite")
+             .parquet(os.path.join(out_dir, "raw_triples", "bucket=%d" % bucket)))
+            label_counts = mentions.groupBy("surface_key", "surface").agg(
+                F.count("*").alias("n"))
+            label_counts.write.mode("overwrite").parquet(
+                os.path.join(out_dir, "label_counts", "bucket=%d" % bucket))
+        finally:
+            mentions.unpersist()
         n_turns, fingerprint = fps.get(bucket, (0, ""))
         record_done(spark, manifest_path, bucket, n_turns, n_mentions,
-                    n_triples, fingerprint, run_id, n_buckets)
-        processed += 1
+                    written.get["n"], fingerprint, run_id, n_buckets)
+    processed = len(todo)
 
     # global phase: canonicalize over all raw triples, materialize outputs
     raw_root = os.path.join(out_dir, "raw_triples")
@@ -181,8 +194,7 @@ def run_checkpointed(spark: SparkSession, transcripts: DataFrame,
             "buckets_dropped": len(stale),
             "final_triples": 0,
         }
-    raw = spark.read.parquet(raw_root)
-    raw_cols = raw.select(*TRIPLE_COLS)
+    raw_cols = spark.read.parquet(raw_root).select(*TRIPLE_COLS)
     # surface keys come from the label-count checkpoints VERBATIM — never
     # reverse-engineered from the urn:surface: slug, whose '-' for ' '
     # substitution is lossy for keys that themselves contain hyphens
@@ -190,7 +202,10 @@ def run_checkpointed(spark: SparkSession, transcripts: DataFrame,
     label_counts = spark.read.parquet(os.path.join(out_dir, "label_counts"))
     surfaces = label_counts.select("surface_key").dropDuplicates(
         ["surface_key"])
-    canon = canonical_surface_map(surfaces, threshold=jaccard_threshold).persist()
+    # already materialized (a driver-built relation, or checkpointed on
+    # the distributed path): caching it again would only add a cache
+    # stage in front of each of its four broadcasts
+    canon = canonical_surface_map(surfaces, threshold=jaccard_threshold)
     # corpus-wide label election per canonical entity: re-aggregate the
     # per-bucket counts (partial sums -> one narrow exchange), map keys to
     # canonical entities through the broadcast map, elect via the same
@@ -220,12 +235,16 @@ def run_checkpointed(spark: SparkSession, transcripts: DataFrame,
         rewritten.filter(~F.col("subj").startswith("_:"))
         .dropDuplicates(TRIPLE_COLS)
     )
-    final = bnode_part.unionByName(rest).unionByName(labels)
-    write_triple_table(final, os.path.join(out_dir, "triples"),
-                       buckets=table_buckets)
-    write_adjacency_table(final, os.path.join(out_dir, "adjacency"),
-                          buckets=table_buckets)
-    n_final = spark.read.parquet(os.path.join(out_dir, "triples")).count()
+    # computed once: the count fills the cache both table writes read
+    final = bnode_part.unionByName(rest).unionByName(labels).persist()
+    try:
+        n_final = final.count()
+        write_triple_table(final, os.path.join(out_dir, "triples"),
+                           buckets=table_buckets)
+        write_adjacency_table(final, os.path.join(out_dir, "adjacency"),
+                              buckets=table_buckets)
+    finally:
+        final.unpersist()
     return {
         "run_id": run_id,
         "buckets_processed": processed,

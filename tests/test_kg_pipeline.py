@@ -395,6 +395,118 @@ class TestCheckpointLineage:
             run_checkpointed(spark, t, out, n_buckets=8, table_buckets=4)
 
 
+def _manifest_row(bucket, status, fp, ts, n_buckets=4):
+    from pyspark.sql import Row
+
+    return Row(bucket=bucket, status=status, input_fingerprint=fp, ts=ts,
+               n_buckets=n_buckets if status == "done" else None)
+
+
+class TestManifestResolution:
+    """Scheme check and bucket selection are pure functions over the
+    collected manifest rows — no Spark."""
+
+    def test_changed_fingerprint_is_pending(self):
+        from meresco_rdf_spark.kg.checkpoint import pending_buckets
+
+        rows = [_manifest_row(0, "done", "a", 1.0),
+                _manifest_row(1, "done", "b", 1.0)]
+        fps = {0: (5, "a"), 1: (5, "b-changed"), 2: (3, "c")}
+        # 1 changed, 2 never done; a manifest-only bucket is not input
+        assert pending_buckets(rows + [_manifest_row(3, "done", "d", 1.0)],
+                               fps) == [1, 2]
+
+    def test_latest_row_wins(self):
+        from meresco_rdf_spark.kg.checkpoint import pending_buckets
+
+        rows = [_manifest_row(0, "done", "new", 2.0),
+                _manifest_row(0, "done", "old", 1.0)]
+        assert pending_buckets(rows, {0: (1, "new")}) == []
+        assert pending_buckets(rows, {0: (1, "old")}) == [0]
+
+    def test_tombstone_then_bucket_comes_back(self):
+        from meresco_rdf_spark.kg.checkpoint import pending_buckets
+
+        rows = [_manifest_row(2, "done", "x", 1.0),
+                _manifest_row(2, "deleted", "", 2.0)]
+        # the bucket's input is back, unchanged: the tombstone is latest,
+        # so it is re-processed (its checkpoint subtrees were deleted)
+        assert pending_buckets(rows, {2: (4, "x")}) == [2]
+        rows.append(_manifest_row(2, "done", "x", 3.0))
+        assert pending_buckets(rows, {2: (4, "x")}) == []
+
+    def test_equal_ts_rows_resolve_the_same_in_any_order(self):
+        from meresco_rdf_spark.kg.checkpoint import pending_buckets
+
+        cases = [
+            ([_manifest_row(0, "done", "a", 5.0),
+              _manifest_row(0, "done", "b", 5.0)], {0: (1, "a")}, [0]),
+            ([_manifest_row(0, "done", "a", 5.0),
+              _manifest_row(0, "deleted", "", 5.0)], {0: (1, "a")}, [0]),
+            ([_manifest_row(0, "done", "a", 5.0),
+              _manifest_row(0, "done", "a", 5.0),
+              _manifest_row(0, "done", "b", 4.0)], {0: (1, "a")}, []),
+        ]
+        for rows, fps, want in cases:
+            assert pending_buckets(rows, fps) == want
+            assert pending_buckets(rows[::-1], fps) == want
+
+    def test_scheme_mismatch_lists_each_scheme_once(self):
+        from meresco_rdf_spark.kg.checkpoint import check_bucket_scheme
+
+        rows = [_manifest_row(b, "done", "f", 1.0, n_buckets=n)
+                for b, n in [(0, 4), (1, 4), (2, 8), (3, 8), (4, 4)]]
+        rows.append(_manifest_row(5, "deleted", "", 2.0))
+        check_bucket_scheme(rows[:2] + rows[-1:], 4, "m")  # one scheme
+        check_bucket_scheme([], 4, "m")
+        with pytest.raises(ValueError) as err:
+            check_bucket_scheme(rows, 4, "/out/_manifest")
+        assert "n_buckets=[4, 8];" in str(err.value)
+        assert "/out/_manifest" in str(err.value)
+
+
+def _cached_plans(spark):
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData()
+    return sorted(cached.apply(i).plan().toString()
+                  for i in range(cached.size()))
+
+
+class TestCheckpointCost:
+    # jobs of the 1-conversation delta below: 91 before the global
+    # triples were cached and the manifest, fingerprints and canonical
+    # map were each built once; 40 after (local[4], 4 shuffle partitions)
+    DELTA_JOBS = 40
+    MARGIN = 8
+
+    def test_run_checkpointed_releases_its_caches(self, spark, tmp_path):
+        before = _cached_plans(spark)
+        out = str(tmp_path / "kg")
+        run_checkpointed(spark, synthesize_transcripts(spark, 12, 4), out,
+                         n_buckets=2, table_buckets=4)
+        run_checkpointed(spark, synthesize_transcripts(spark, 13, 4), out,
+                         n_buckets=2, table_buckets=4)
+        assert _cached_plans(spark) == before
+
+    def test_delta_job_budget(self, spark, tmp_path):
+        sc = spark.sparkContext
+        out = str(tmp_path / "kg")
+        cold = run_checkpointed(spark, synthesize_transcripts(spark, 20, 5),
+                                out, n_buckets=2, table_buckets=4)
+        assert cold["buckets_processed"] == 2
+        group = "delta-job-budget"
+        sc.setJobGroup(group, "one 1-conversation delta")
+        try:
+            delta = run_checkpointed(
+                spark, synthesize_transcripts(spark, 21, 5), out,
+                n_buckets=2, table_buckets=4)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert delta["buckets_processed"] == 1
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert n_jobs <= self.DELTA_JOBS + self.MARGIN, n_jobs
+
+
 class TestMergeTripleTable:
     def _table(self, spark, tmp_path):
         t = synthesize_transcripts(spark, 20, 5)
@@ -602,6 +714,64 @@ def test_similar_pairs_local_and_distributed_agree(spark):
     # exact all-pairs >= LSH candidates; on this input they must be equal
     assert dist <= local and len(local) > 0
     assert local == dist
+
+
+def _parity_vocabulary(n_keys):
+    """Seeded vocabulary of exactly ``n_keys`` distinct keys: alias
+    families far above the Jaccard threshold (so LSH cannot miss a
+    pair), hyphen/space variants that share a URI slug, and singletons."""
+    import random
+
+    rng = random.Random(7)
+
+    def word(lo, hi):
+        return "".join(rng.choice("abcdefghijklmnopqrstuvwxyz")
+                       for _ in range(rng.randint(lo, hi)))
+
+    keys = {"m-curie", "m curie"}  # one slug, dissimilar keys
+    while len(keys) < 600:
+        a, b = word(6, 8), word(6, 8)
+        keys.update({a + " " + b, a + "-" + b, a + " " + b + "s"})
+    while len(keys) < n_keys:
+        keys.add(word(10, 14))
+    return sorted(keys)[:n_keys]
+
+
+def test_canonical_map_driver_path_matches_distributed(spark, monkeypatch):
+    from collections import Counter
+
+    from meresco_rdf_spark.kg import canonicalize
+
+    assert canonicalize.LOCAL_SURFACES == 2000
+    vocab = _parity_vocabulary(2001)
+    df = spark.createDataFrame([(k,) for k in vocab], "surface_key string")
+    edges = similar_surface_pairs(df, local_threshold=0)
+    comps = connected_components(edges, local_threshold=0)
+    uri = F.concat(F.lit("urn:surface:"),
+                   F.replace(F.col("canonical_key"), F.lit(" "), F.lit("-")))
+    reference = {
+        tuple(r) for r in df.join(comps, df["surface_key"] == comps["node"],
+                                  "left")
+        .select("surface_key",
+                F.coalesce("component", "surface_key").alias("canonical_key"))
+        .withColumn("canonical_uri", uri).collect()}
+    keys = {r[0]: r for r in reference}
+    assert keys["m-curie"][2] == keys["m curie"][2] == "urn:surface:m-curie"
+    assert len({r[1] for r in reference}) < len(reference)  # some merge
+    # the dropped key is a singleton: removing it changes no component
+    sizes = Counter(r[1] for r in reference)
+    dropped = next(k for k in vocab if sizes[keys[k][1]] == 1)
+
+    calls = []
+    real = canonicalize.similar_surface_pairs
+    monkeypatch.setattr(canonicalize, "similar_surface_pairs",
+                        lambda *a, **kw: calls.append(1) or real(*a, **kw))
+    at_limit = canonical_surface_map(df.filter(F.col("surface_key") != dropped))
+    assert {tuple(r) for r in at_limit.collect()} == reference - {keys[dropped]}
+    assert calls == []  # 2,000 keys: one collect, built on the driver
+    above = canonical_surface_map(df)
+    assert {tuple(r) for r in above.collect()} == reference
+    assert calls == [1]  # 2,001 keys: the distributed path
 
 
 class TestStructureTriples:

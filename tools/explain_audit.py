@@ -8,6 +8,8 @@ Checks (printed + exit code):
 - BGP (O9): AQE converts the selective pattern sides to broadcast joins;
 - pipeline emit: exactly one Arrow UDF stage (extraction), the canonical
   map join is a BroadcastHashJoin, and no global dedup exchange exists;
+- checkpointed global phase: the adjacency write reads the cached final
+  triples, not the raw_triples checkpoints;
 - pricing summary: decimal sums stay inside WholeStageCodegen;
 - SPARQL front-end: sub-select aggregates before the outer join, UPDATE
   deletes broadcast into the anti-join, negated property sets fold to
@@ -108,6 +110,40 @@ def main() -> None:
     results.append(check(
         "pipeline: no global dedup",
         "obj_lang" not in " ".join(re.findall(r"Exchange hashpartitioning\([^)]*\)", p))))
+
+    # checkpointed global phase: the final triples are computed once and
+    # cached, so the adjacency write reads that cache and scans no
+    # raw_triples checkpoint of its own
+    from meresco_rdf_spark._scratch import scratch_dir
+    from meresco_rdf_spark.kg import pipeline
+    from meresco_rdf_spark.kg.materialize import adjacency
+
+    adjacency_leaves = []
+    write_adjacency = pipeline.write_adjacency_table
+
+    def audited_write(triples, path, **kw):
+        leaves = adjacency(triples)._jdf.queryExecution().sparkPlan() \
+            .collectLeaves()
+        for leaf in (leaves.apply(i) for i in range(leaves.size())):
+            is_file = leaf.getClass().getSimpleName() == "FileSourceScanExec"
+            adjacency_leaves.append((leaf.nodeName(), leaf.relation().location()
+                                     .rootPaths().mkString(",")
+                                     if is_file else ""))
+        write_adjacency(triples, path, **kw)
+
+    pipeline.write_adjacency_table = audited_write
+    try:
+        pipeline.run_checkpointed(
+            spark, synthesize_transcripts(spark, 60, 6),
+            scratch_dir("audit_checkpoint_"), n_buckets=2, table_buckets=4)
+    finally:
+        pipeline.write_adjacency_table = write_adjacency
+    results.append(check(
+        "checkpoint: adjacency reads cached final",
+        bool(adjacency_leaves)
+        and all(name == "InMemoryTableScan" for name, _ in adjacency_leaves)
+        and not any("raw_triples" in paths for _, paths in adjacency_leaves),
+        "(%d leaves)" % len(adjacency_leaves)))
 
     # MinHash banding: no shingle ARRAY ever enters an exchange — the
     # banded self-join carries (id, band_id, band_key) only and the
