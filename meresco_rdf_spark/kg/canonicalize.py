@@ -19,16 +19,16 @@ Pipeline (north_star step (c)):
    (Kiveris et al., "Connected Components in MapReduce and Beyond" —
    PAPERS.md), with ``localCheckpoint`` per round to cut lineage;
 6. canonical entity id = lexicographic min surface uri in the component;
-   ``rewrite_triples`` maps every subject/uri-object through the
-   (broadcast) canonical map and emits ``owl:sameAs`` provenance.
+   ``extract.pipeline_triples`` broadcast-joins the canonical map onto the
+   mention stream before fan-out, and ``sameas_triples`` emits the
+   ``owl:sameAs`` provenance.
 
 Scale: steps 1-4 shuffle on (band_id, band_hash) and candidate-pair keys —
 cardinality ~ distinct surfaces x B, independent of transcript volume.
 Step 5's join keys are component labels; AQE skew-join splits hot
 components (giant components are the known worst case — the large-star
 step specifically bounds them).  The canonical map is |distinct surfaces|
-rows — broadcastable far beyond this sandbox; ``rewrite_triples`` takes an
-explicit ``broadcast_map`` switch for when it is not.
+rows, independent of transcript volume, so emission broadcasts it.
 """
 
 from __future__ import annotations
@@ -395,50 +395,6 @@ def canonical_surface_map(surfaces: DataFrame,
             eager=True)
     finally:
         distinct.unpersist()
-
-
-def rewrite_triples(triples: DataFrame, canon: DataFrame,
-                    broadcast_map: bool = True,
-                    dedup: bool = True) -> DataFrame:
-    """Rewrite subj and uri-objects through the canonical map
-    (surface_uri -> canonical_uri) and dedup (set semantics survive the
-    merge).  ``canon`` columns: surface_key, canonical_uri.
-
-    Scale: two left joins keyed on the uri string.  The map is distinct
-    surfaces — broadcast by default; pass ``broadcast_map=False`` to let
-    AQE choose (sort-merge with skew splitting) when the entity universe
-    outgrows the driver.  ``dedup=False`` skips the full-width
-    dropDuplicates shuffle for callers that dedup selectively (see
-    ``pipeline.run_checkpointed``: bnode-subject triples are unique by
-    construction, so only the tiny non-bnode fraction needs the set
-    semantics restored)."""
-    uri_map = canon.select(
-        F.concat(F.lit(SURFACE_URI_PREFIX),
-                 F.replace(F.col("surface_key"), F.lit(" "), F.lit("-"))).alias("from_uri"),
-        F.col("canonical_uri").alias("to_uri"),
-    ).dropDuplicates(["from_uri"])
-    if broadcast_map:
-        uri_map = F.broadcast(uri_map)
-
-    s_map = uri_map.withColumnRenamed("from_uri", "s_from").withColumnRenamed("to_uri", "s_to")
-    o_map = uri_map.withColumnRenamed("from_uri", "o_from").withColumnRenamed("to_uri", "o_to")
-
-    out = (
-        triples.join(s_map, triples["subj"] == s_map["s_from"], "left")
-        .withColumn("subj", F.coalesce(F.col("s_to"), F.col("subj")))
-        .drop("s_from", "s_to")
-    )
-    out = (
-        out.join(
-            o_map,
-            (out["obj_kind"] == "uri") & (out["obj_value"] == o_map["o_from"]),
-            "left")
-        .withColumn("obj_value", F.coalesce(F.col("o_to"), F.col("obj_value")))
-        .drop("o_from", "o_to")
-    )
-    if not dedup:
-        return out
-    return out.dropDuplicates(["subj", "pred", "obj_value", "obj_kind", "obj_lang"])
 
 
 def sameas_triples(canon: DataFrame) -> DataFrame:

@@ -13,9 +13,11 @@ The manifest is itself a tiny parquet table, one row per completed bucket:
 
 ``input_fingerprint`` is an order-insensitive xxhash of the bucket's input
 rows — lineage: a resume with changed input invalidates the bucket instead
-of silently skipping it.  The driver collects the manifest (a few KB) and
-the per-bucket fingerprints once; scheme check and bucket selection are
-pure functions over those rows — no driver iteration over data.
+of silently skipping it.  Each done bucket's checkpoint is its mention
+rows under ``<out_dir>/mentions/bucket=N``; ``n_triples`` is their bnode
+fan-out.  The driver collects the manifest (a few KB) and the per-bucket
+fingerprints once; scheme check and bucket selection are pure functions
+over those rows — no driver iteration over data.
 """
 
 from __future__ import annotations
@@ -24,6 +26,8 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+MENTIONS = "mentions"  # per-bucket checkpoint root under the output dir
 
 MANIFEST_SCHEMA = (
     "bucket int, status string, n_turns long, n_mentions long, "
@@ -62,7 +66,7 @@ def check_bucket_scheme(manifest_rows, n_buckets: int,
                         manifest_path: str) -> None:
     """Refuse to resume against a manifest written with a different
     ``n_buckets``: the bucket function changes, so every prior
-    bucket->conversation assignment (and every raw_triples subtree) is
+    bucket->conversation assignment (and every mentions subtree) is
     invalid — silently mixing schemes resurrects or drops rows.
     ``manifest_rows`` are the collected manifest rows; tombstones carry
     no scheme."""
@@ -72,6 +76,18 @@ def check_bucket_scheme(manifest_rows, n_buckets: int,
         raise ValueError(
             "manifest at %s was written with n_buckets=%s; resume with the "
             "same value or clear the output directory" % (manifest_path, schemes))
+
+
+def check_layout(out_dir: str) -> None:
+    """Refuse to resume in an output directory of the older layout, which
+    checkpointed each bucket's triples under ``raw_triples/``: its done
+    manifest rows would mark buckets complete that have no mentions
+    checkpoint, and their rows would silently drop out of the tables."""
+    old = os.path.join(out_dir, "raw_triples")
+    if os.path.exists(old):
+        raise ValueError(
+            "%s holds checkpoints of an older layout; clear the output "
+            "directory and rebuild" % old)
 
 
 def _done_fingerprints(manifest_rows) -> dict[int, str]:
@@ -117,30 +133,25 @@ def record_done(spark: SparkSession, manifest_path: str, bucket: int,
 
 def drop_stale_buckets(spark: SparkSession, out_dir: str,
                        manifest_path: str, live_buckets: set[int],
-                       run_id: str,
-                       roots: tuple[str, ...] = ("raw_triples",
-                                                 "label_counts")) -> list[int]:
-    """Delete per-bucket checkpoint subtrees (raw triples AND label
-    counts) for buckets absent from the CURRENT input (every conversation
-    deleted, or never existed) and tombstone them in the manifest.
-    Without this, a fully-deleted bucket's parquet survives and its rows
-    resurrect in the global phase — breaking the 'changed input
-    invalidates the bucket' lineage contract."""
+                       run_id: str) -> list[int]:
+    """Delete the mentions checkpoint of every bucket absent from the
+    CURRENT input (every conversation deleted, or never existed) and
+    tombstone it in the manifest.  Without this, a fully-deleted bucket's
+    parquet survives and its rows resurrect in the global phase —
+    breaking the 'changed input invalidates the bucket' lineage
+    contract."""
     import shutil
 
-    raw_root = os.path.join(out_dir, roots[0])
-    if not os.path.isdir(raw_root):
+    root = os.path.join(out_dir, MENTIONS)
+    if not os.path.isdir(root):
         return []
     stale = []
-    for name in os.listdir(raw_root):
+    for name in os.listdir(root):
         if not name.startswith("bucket="):
             continue
         bucket = int(name.split("=", 1)[1])
         if bucket not in live_buckets:
-            for root in roots:
-                sub = os.path.join(out_dir, root, name)
-                if os.path.isdir(sub):
-                    shutil.rmtree(sub)
+            shutil.rmtree(os.path.join(root, name))
             stale.append(bucket)
     if stale:
         rows = [(b, "deleted", 0, 0, 0, "", run_id, time.time(), None)

@@ -295,13 +295,10 @@ def label_triples_from_counts(counts: DataFrame) -> DataFrame:
     ``foaf:name`` (ties broken by surface string), every other form
     ``skos:altLabel``.
 
-    Shared by ``pipeline_triples`` (counts aggregated from the canonical
-    mention stream) and ``pipeline.run_checkpointed`` (counts re-aggregated
-    from per-bucket label-count checkpoints) so the election stays in
-    lockstep across both execution paths — the election MUST run after
-    canonicalization, on totals across the whole corpus: electing per
-    surface-form or per bucket gives merged entities several competing
-    ``foaf:name`` rows.
+    Called by ``pipeline_triples`` on counts aggregated from the canonical
+    mention stream — the election MUST run after canonicalization, on
+    totals across the whole corpus: electing per surface-form or per
+    bucket gives merged entities several competing ``foaf:name`` rows.
 
     Two hash aggregations (both partial-aggregatable), output unique by
     construction — no dedup shuffle."""

@@ -12,7 +12,6 @@ from meresco_rdf_spark.kg.canonicalize import (
     canonical_surface_map,
     char_shingles,
     connected_components,
-    rewrite_triples,
     sameas_triples,
     similar_surface_pairs,
 )
@@ -29,12 +28,12 @@ from meresco_rdf_spark.kg.extract import (
     mention_triples,
     normalize_surface,
 )
-from meresco_rdf_spark.kg.materialize import adjacency, write_triple_table
-from meresco_rdf_spark.kg.pipeline import (
+from meresco_rdf_spark.kg.materialize import (
     TRIPLE_COLS,
-    run_checkpointed,
-    run_pipeline,
+    adjacency,
+    write_triple_table,
 )
+from meresco_rdf_spark.kg.pipeline import run_checkpointed, run_pipeline
 from meresco_rdf_spark.sources.transcripts import (
     GAZETTEER,
     synthesize_transcripts,
@@ -199,17 +198,10 @@ class TestCanonicalize:
         for members in clusters.values():
             assert len(members) == 1  # never merges distinct entities
 
-    def test_rewrite_and_sameas(self, spark):
-        triples = spark.createDataFrame(
-            [("urn:surface:m-curie", "p", "urn:surface:m-curie", "uri", None),
-             ("s", "p", "keep", "literal", None)],
-            "subj string, pred string, obj_value string, obj_kind string, obj_lang string")
+    def test_sameas(self, spark):
         canon = spark.createDataFrame(
             [("m curie", "marie curie", "urn:surface:marie-curie")],
             "surface_key string, canonical_key string, canonical_uri string")
-        out = {(r.subj, r.obj_value) for r in rewrite_triples(triples, canon).collect()}
-        assert ("urn:surface:marie-curie", "urn:surface:marie-curie") in out
-        assert ("s", "keep") in out
         same = sameas_triples(canon).collect()
         assert [(r.subj, r.obj_value) for r in same] == [
             ("urn:surface:m-curie", "urn:surface:marie-curie")]
@@ -387,6 +379,44 @@ class TestCheckpointLineage:
         assert tri.count() == 0
         assert spark.read.parquet(os.path.join(out, "adjacency")).count() == 0
 
+    def test_corpus_without_mentions_materializes_empty_tables(
+            self, spark, tmp_path):
+        t = make_transcripts(spark, [("c1", 0, "nothing to see here")])
+        out = str(tmp_path / "kg")
+        res = run_checkpointed(spark, t, out, n_buckets=4, table_buckets=4)
+        assert res["buckets_processed"] == 1
+        assert res["final_triples"] == 0
+        assert spark.read.parquet(os.path.join(out, "triples")).count() == 0
+        assert spark.read.parquet(os.path.join(out, "adjacency")).count() == 0
+
+    def test_old_layout_is_refused_before_any_write(self, spark, tmp_path):
+        t = synthesize_transcripts(spark, 6, 3)
+        out = tmp_path / "kg"
+        old = out / "raw_triples" / "bucket=0"
+        old.mkdir(parents=True)
+        with pytest.raises(ValueError, match="raw_triples"):
+            run_checkpointed(spark, t, str(out), n_buckets=4, table_buckets=4)
+        assert sorted(os.listdir(out)) == ["raw_triples"]
+
+    def test_manifest_n_triples_counts_bnode_rows(self, spark, tmp_path):
+        from meresco_rdf_spark.kg.checkpoint import read_manifest
+
+        t = synthesize_transcripts(spark, 30, 5)
+        out = str(tmp_path / "kg")
+        half = t.filter(F.pmod(F.xxhash64("conv_id"), F.lit(2)) == 0)
+        run_checkpointed(spark, half, out, n_buckets=4, table_buckets=4)
+        run_checkpointed(spark, t, out, n_buckets=4, table_buckets=4)
+        latest = {}
+        for r in read_manifest(
+                spark, os.path.join(out, "_manifest")).collect():
+            if r.bucket not in latest or r.ts > latest[r.bucket].ts:
+                latest[r.bucket] = r
+        assert all(r.status == "done" for r in latest.values())
+        bnode_rows = spark.read.parquet(os.path.join(out, "triples")).filter(
+            F.col("subj").startswith("_:")).count()
+        assert bnode_rows > 0
+        assert sum(r.n_triples for r in latest.values()) == bnode_rows
+
     def test_resume_refuses_n_buckets_change(self, spark, tmp_path):
         t = synthesize_transcripts(spark, 10, 3)
         out = str(tmp_path / "kg")
@@ -474,8 +504,9 @@ def _cached_plans(spark):
 class TestCheckpointCost:
     # jobs of the 1-conversation delta below: 91 before the global
     # triples were cached and the manifest, fingerprints and canonical
-    # map were each built once; 40 after (local[4], 4 shuffle partitions)
-    DELTA_JOBS = 40
+    # map were each built once; 40 after; 25 since buckets checkpoint
+    # their mentions, not triples (local[4], 4 shuffle partitions)
+    DELTA_JOBS = 25
     MARGIN = 8
 
     def test_run_checkpointed_releases_its_caches(self, spark, tmp_path):
@@ -610,8 +641,8 @@ class TestAdaptiveCC:
 
 
 def test_checkpointed_final_has_set_semantics(spark, tmp_path):
-    # the selective-dedup global phase must still produce a SET: no row
-    # may appear twice (bnode branch unique by construction, rest deduped)
+    # the global phase emits without a dedup shuffle and must still
+    # produce a SET: no row may appear twice (unique by construction)
     t = synthesize_transcripts(spark, 25, 6)
     out = str(tmp_path / "kg")
     run_checkpointed(spark, t, out, n_buckets=4, table_buckets=4)

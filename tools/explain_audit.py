@@ -9,7 +9,8 @@ Checks (printed + exit code):
 - pipeline emit: exactly one Arrow UDF stage (extraction), the canonical
   map join is a BroadcastHashJoin, and no global dedup exchange exists;
 - checkpointed global phase: the adjacency write reads the cached final
-  triples, not the raw_triples checkpoints;
+  triples, not the mentions checkpoints, and the final triples carry no
+  global dedup exchange;
 - pricing summary: decimal sums stay inside WholeStageCodegen;
 - SPARQL front-end: sub-select aggregates before the outer join, UPDATE
   deletes broadcast into the anti-join, negated property sets fold to
@@ -20,6 +21,7 @@ Usage: python tools/explain_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -91,9 +93,9 @@ def main() -> None:
     t = synthesize_transcripts(spark, 500, 8)
     mentions = detect_mentions(t).persist()
     mentions.count()
+    # built as run_pipeline builds it: already materialized, not cached
     canon = canonical_surface_map(
-        mentions.select("surface_key").dropDuplicates(["surface_key"])).persist()
-    canon.count()
+        mentions.select("surface_key").dropDuplicates(["surface_key"]))
     tri = pipeline_triples(mentions, canon)
     tri.count()
     p = plan_of(tri)
@@ -113,13 +115,21 @@ def main() -> None:
 
     # checkpointed global phase: the final triples are computed once and
     # cached, so the adjacency write reads that cache and scans no
-    # raw_triples checkpoint of its own
+    # mentions checkpoint of its own; they are emitted through
+    # pipeline_triples, unique by construction, so no exchange keys on
+    # the full triple (obj_lang is only ever a key of a full-row dedup)
     from meresco_rdf_spark._scratch import scratch_dir
     from meresco_rdf_spark.kg import pipeline
     from meresco_rdf_spark.kg.materialize import adjacency
 
     adjacency_leaves = []
+    final_plans = []
     write_adjacency = pipeline.write_adjacency_table
+    write_triples = pipeline.write_triple_table
+
+    def audited_triples(triples, path, **kw):
+        final_plans.append(plan_of(triples))
+        write_triples(triples, path, **kw)
 
     def audited_write(triples, path, **kw):
         leaves = adjacency(triples)._jdf.queryExecution().sparkPlan() \
@@ -131,19 +141,30 @@ def main() -> None:
                                      if is_file else ""))
         write_adjacency(triples, path, **kw)
 
+    checkpoint_out = scratch_dir("audit_checkpoint_")
     pipeline.write_adjacency_table = audited_write
+    pipeline.write_triple_table = audited_triples
     try:
         pipeline.run_checkpointed(
             spark, synthesize_transcripts(spark, 60, 6),
-            scratch_dir("audit_checkpoint_"), n_buckets=2, table_buckets=4)
+            checkpoint_out, n_buckets=2, table_buckets=4)
     finally:
         pipeline.write_adjacency_table = write_adjacency
+        pipeline.write_triple_table = write_triples
     results.append(check(
         "checkpoint: adjacency reads cached final",
         bool(adjacency_leaves)
         and all(name == "InMemoryTableScan" for name, _ in adjacency_leaves)
-        and not any("raw_triples" in paths for _, paths in adjacency_leaves),
+        and not any("mentions" in paths for _, paths in adjacency_leaves),
         "(%d leaves)" % len(adjacency_leaves)))
+    exchanges = [e for p in final_plans for e in re.findall(
+        r"Exchange hashpartitioning\([^)]*\)", p)]
+    results.append(check(
+        "checkpoint: no global dedup",
+        len(final_plans) == 1
+        and os.path.join(checkpoint_out, "mentions") in final_plans[0]
+        and not any("obj_lang" in e for e in exchanges),
+        "(%d exchanges)" % len(exchanges)))
 
     # MinHash banding: no shingle ARRAY ever enters an exchange — the
     # banded self-join carries (id, band_id, band_key) only and the
@@ -287,7 +308,6 @@ def main() -> None:
     # (subj_bucket is a function of subj, so duplicates are adjacent
     # under the write sort) instead of adding a second full-width
     # dropDuplicates shuffle of every surviving row
-    import os
     import tempfile
 
     from meresco_rdf_spark.kg.materialize import (
