@@ -241,9 +241,9 @@ def q_graph_connected_components(spark, sf_dir):
 
 def q_graph_merge(spark, sf_dir):
     """O1/O3 at scale: the Iceberg-``MERGE``-style read-modify-write
-    against the bucketed parquet triple table
-    (``kg/materialize.py::merge_triple_table`` — the executable form of
-    ``Graph.addTriple``/``removeTriple``, reference graph.py:45-68).
+    against the snapshot triple table (``kg/snapshots.py::snapshot_merge``
+    — the executable form of ``Graph.addTriple``/``removeTriple``,
+    reference graph.py:45-68).
 
     Builds the base table from the triples view, then applies ONE merge:
 
@@ -254,14 +254,15 @@ def q_graph_merge(spark, sf_dir):
       (set-semantics leg — re-adding must not duplicate).
 
     Returns the full post-merge table; only delta-touched buckets were
-    rewritten (partition pruning + dynamic partition overwrite), so the
-    untouched buckets' survival is part of what the oracle checks."""
+    rewritten (the new manifest reuses the untouched buckets' data
+    directories), so the untouched buckets' survival is part of what the
+    oracle checks."""
 
-    from .kg.materialize import merge_triple_table, write_triple_table
+    from .kg.snapshots import read_snapshot, snapshot_create, snapshot_merge
 
     base = tpch_triples(spark, sf_dir)
     path = _scratch_dir("graph_merge_") + "/triples"
-    write_triple_table(base, path, buckets=8)
+    snapshot_create(spark, base, path, buckets=8)
 
     region = _read(spark, sf_dir, "region")
     region_uri = F.concat(F.lit("urn:region:"),
@@ -287,8 +288,8 @@ def q_graph_merge(spark, sf_dir):
             F.lit("literal").alias("obj_kind"),
             F.lit(None).cast("string").alias("obj_lang"),
         ))
-    merge_triple_table(spark, path, adds=adds, deletes=deletes, buckets=8)
-    return spark.read.parquet(path).select(
+    snapshot_merge(spark, path, adds=adds, deletes=deletes)
+    return read_snapshot(spark, path).select(
         "subj", "pred", "obj_value", "obj_kind", "obj_lang")
 
 
@@ -1075,7 +1076,7 @@ def q_sparql_update(spark, sf_dir):
     graph; deletes are a null-safe anti-join (AQE broadcasts the
     template-sized delete set), inserts a set-semantics union.  Against a
     MATERIALIZED table, sparql_update_sets feeds the same two frames to
-    merge_triple_table for the per-bucket MERGE instead."""
+    snapshot_merge for the per-bucket MERGE instead."""
     from .sparql import sparql_update
 
     return sparql_update(tpch_triples(spark, sf_dir), """
@@ -4435,9 +4436,9 @@ def q_kg_sparql_entities(spark, sf_dir):
 def q_kg_e2e_sparql(spark, sf_dir):
     """End-to-end integration over the MATERIALIZED table (VERDICT r02
     #8): transcripts -> pipeline triples -> bucketed triple table
-    (initial write) -> MERGE in the structure triples (incremental
-    maintenance) -> SPARQL UPDATE executed THROUGH the same MERGE
-    machinery (rename foaf:name to rdfs:label) -> SPARQL SELECT over the
+    (snapshot create) -> MERGE in the structure triples (incremental
+    maintenance, ``snapshot_merge``) -> SPARQL UPDATE executed THROUGH
+    the same MERGE (rename foaf:name to rdfs:label) -> SPARQL SELECT over the
     final on-disk table joining pipeline facts (kg:mentions) with
     structure facts (kg:turnCount).  Oracle: identical SQL over the
     committed golden kg_triples + kg_structure_triples parquet with the
@@ -4446,17 +4447,16 @@ def q_kg_e2e_sparql(spark, sf_dir):
     import os
 
     from .kg.extract import structure_triples
-    from .kg.materialize import merge_triple_table, write_triple_table
+    from .kg.snapshots import read_snapshot, snapshot_create, snapshot_merge
     from .sparql import sparql_select
     from .sparql.compiler import sparql_update_sets
 
     res = _pipeline_result(spark)
     table = os.path.join(_scratch_dir("kg_e2e_"), "triples")
-    write_triple_table(res.triples, table, buckets=8)
-    merge_triple_table(spark, table,
-                       adds=structure_triples(_synth_transcripts(spark)),
-                       buckets=8)
-    stored = spark.read.parquet(table).drop("subj_bucket")
+    snapshot_create(spark, res.triples, table, buckets=8)
+    snapshot_merge(spark, table,
+                   adds=structure_triples(_synth_transcripts(spark)))
+    stored = read_snapshot(spark, table).drop("subj_bucket")
     deletes, inserts = sparql_update_sets(stored, """
         PREFIX foaf: <http://xmlns.com/foaf/0.1/>
         PREFIX rdfs: <http://www.w3.org/2000/01/rdf-schema#>
@@ -4464,8 +4464,8 @@ def q_kg_e2e_sparql(spark, sf_dir):
         INSERT { ?e rdfs:label ?n }
         WHERE { ?e foaf:name ?n }
     """)
-    merge_triple_table(spark, table, adds=inserts, deletes=deletes, buckets=8)
-    final = spark.read.parquet(table).drop("subj_bucket")
+    snapshot_merge(spark, table, adds=inserts, deletes=deletes)
+    final = read_snapshot(spark, table).drop("subj_bucket")
     return sparql_select(final, """
         PREFIX rdfs: <http://www.w3.org/2000/01/rdf-schema#>
         PREFIX kg: <http://data.example.org/kg#>
@@ -4844,11 +4844,9 @@ def q_kg_snapshot_compact(spark, sf_dir):
 
 
 def q_kg_snapshot_merge(spark, sf_dir):
-    """The SAME merge algebra as ``graph_merge`` executed through the
-    snapshot-versioned COW table (``kg/snapshots.py``) instead of the
-    in-place bucket swap — plus the isolation guarantees the in-place
-    path cannot give, asserted in-query so a regression turns the row
-    red: a reader resolved BEFORE the merge still sees the v1 rowset
+    """The SAME merge algebra as ``graph_merge`` on the snapshot-versioned
+    COW table (``kg/snapshots.py``) — plus its isolation guarantees,
+    asserted in-query so a regression turns the row red: a reader resolved BEFORE the merge still sees the v1 rowset
     afterwards (immutable data files), time travel to v1 equals that
     reader, untouched buckets' manifest entries are reused verbatim from
     the parent (copy-on-write actually copied nothing it didn't have
@@ -5171,8 +5169,8 @@ def q_stream_dedup_fps(spark, sf_dir):
 def q_stream_merge_triples(spark, sf_dir):
     """Incremental KG maintenance end-to-end: transcript file drops ->
     incremental mention extraction -> stateless triple fan-out -> per-
-    micro-batch MERGE (set semantics, bucket-pruned read-modify-write)
-    into the subject-bucketed materialized triple table.  Forced
+    micro-batch MERGE (set semantics, ``snapshot_merge``) into the
+    snapshot triple table.  Forced
     multi-micro-batch (turn-slice files, maxFilesPerTrigger=1) so the
     table is built by successive merges, each deduplicating against the
     rows the earlier ones committed.  Oracle: the pure-Python golden of
@@ -5180,6 +5178,7 @@ def q_stream_merge_triples(spark, sf_dir):
     converge to regardless of batch slicing."""
     import os
 
+    from .kg.snapshots import read_snapshot
     from .streaming.transcript_stream import (
         read_transcript_stream,
         run_merge_to_triple_table,
@@ -5195,7 +5194,7 @@ def q_stream_merge_triples(spark, sf_dir):
         stream_triples(stream_mentions(stream)), table,
         os.path.join(base, "ckpt"), buckets=8)
     q.awaitTermination(600)
-    return spark.read.parquet(table).select(
+    return read_snapshot(spark, table).select(
         "subj", "pred", "obj_value", "obj_kind", "obj_lang")
 
 

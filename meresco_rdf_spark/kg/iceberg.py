@@ -26,9 +26,9 @@ branch runs) in environments without the runtime jar; the catalog
 branch is exercised by config-gated tests that skip when no catalog is
 configured (``tests/test_snapshots.py::TestIcebergSeam``).
 
-Set semantics match ``snapshot_merge`` exactly (reference parity with
-``materialize.merge_triple_table``): full-row null-safe identity,
-deletes-then-adds, a row present in both adds and deletes survives.
+Set semantics match ``snapshot_merge`` exactly: full-row null-safe
+identity, deletes-then-adds, a row present in both adds and deletes
+survives.
 """
 
 from __future__ import annotations
@@ -117,7 +117,7 @@ def _delta_source(adds: DataFrame | None,
                   deletes: DataFrame | None) -> DataFrame | None:
     """One row per distinct triple with op in {'add','del'}; a triple in
     BOTH sets resolves to 'add' (delete-then-add survives, matching
-    snapshot_merge / merge_triple_table)."""
+    snapshot_merge)."""
     sets = []
     if adds is not None:
         sets.append(adds.select(*TRIPLE_COLS).withColumn("op", F.lit("add")))

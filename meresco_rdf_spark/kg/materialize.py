@@ -169,8 +169,8 @@ def fused_bucket_dedup(merged: DataFrame, n_parts: int) -> DataFrame:
     construction (no string-encoding of NULLs that a hostile obj_value
     could collide with).
 
-    Shared by ``merge_triple_table`` and the plan audit
-    (``tools/explain_audit.py``) so the asserted plan IS the shipped one."""
+    Called by ``snapshots._merge_rows``: the plan ``snapshot_merge``
+    writes and the plan audit (``tools/explain_audit.py``) asserts."""
     from pyspark.sql import Window
 
     key = F.struct(*[F.col(c) for c in TRIPLE_COLS])
@@ -181,134 +181,6 @@ def fused_bucket_dedup(merged: DataFrame, n_parts: int) -> DataFrame:
         .filter(~key.eqNullSafe(F.col("_prev")))
         .drop("_prev")
     )
-
-
-def _roll_forward_pending_swap(fs, hadoop_path, path: str,
-                               staging: str) -> None:
-    """Complete the bucket swaps of a merge that crashed mid-commit:
-    every ``subj_bucket=*`` dir still in staging is the full post-merge
-    content of its bucket, so swap it in; then clear staging."""
-    stg = hadoop_path(staging)
-    if not fs.exists(stg):
-        return
-    for status in fs.listStatus(stg):
-        name = status.getPath().getName()
-        if name.startswith("subj_bucket="):
-            dst = hadoop_path(path + "/" + name)
-            fs.delete(dst, True)
-            fs.rename(status.getPath(), dst)
-    fs.delete(stg, True)
-
-
-def merge_triple_table(spark, path: str, adds: DataFrame | None = None,
-                       deletes: DataFrame | None = None,
-                       buckets: int = 64) -> dict:
-    """Iceberg-``MERGE``-style read-modify-write against the bucketed
-    parquet triple table — the executable form of the O1/O3 scale story
-    (``Graph.addTriple`` append-with-set-semantics / ``removeTriple``
-    delete, reference graph.py:45-68).
-
-    Exactly what an Iceberg ``MERGE``/``DELETE`` plans over a
-    ``bucket(N, subj)`` table, emulated on plain parquet:
-
-    - the touched bucket set comes from the delta's own subj hashes (a
-      tiny driver-side list — O(buckets), never O(rows));
-    - ONLY touched buckets are read (partition pruning on the
-      ``subj_bucket`` directory column) and ONLY they are rewritten —
-      untouched buckets' files are never opened;
-    - deletes are null-safe full-row anti-joins, adds deduplicate against
-      surviving rows (set semantics), both per-bucket-local because every
-      side is hashed by the same bucket function — the join never
-      shuffles across buckets;
-    - the rewrite is a STAGE-AND-SWAP: the merged touched buckets are
-      written to a dot-prefixed staging dir inside the table (invisible
-      to parquet readers), then each touched bucket directory is swapped
-      (delete + rename) — so a bucket whose rows were ALL deleted is
-      genuinely removed (a dynamic partition overwrite would silently
-      keep its old files: partitions absent from the output are never
-      rewritten).  A crash mid-swap is ROLLED FORWARD by the next merge
-      (staged dirs are complete post-merge bucket content — see
-      ``_roll_forward_pending_swap``), so writer crash-recovery is
-      covered; what this in-place emulation does NOT give is snapshot
-      isolation for concurrent readers during the swap — for that, use
-      the copy-on-write table in ``kg/snapshots.py`` (immutable data
-      dirs + atomic manifest CAS = isolation, time travel, optimistic
-      concurrency), at the cost of retaining superseded files until
-      ``expire_snapshots``.
-
-    Returns {"buckets_touched": [...], "rows_after": per-touched-bucket
-    count}.  Idempotent: re-running the same merge is a no-op."""
-    sets = []
-    if adds is not None:
-        sets.append(with_subj_bucket(adds.select(*TRIPLE_COLS), buckets))
-    if deletes is not None:
-        sets.append(with_subj_bucket(deletes.select(*TRIPLE_COLS), buckets))
-    if not sets:
-        return {"buckets_touched": [], "rows_after": 0}
-    delta_union = sets[0] if len(sets) == 1 else sets[0].unionByName(sets[1])
-    touched = sorted(
-        r.subj_bucket
-        for r in delta_union.select("subj_bucket").distinct().collect())
-    if not touched:
-        return {"buckets_touched": [], "rows_after": 0}
-
-    existing = spark.read.parquet(path).filter(
-        F.col("subj_bucket").isin(touched))
-    survivors = existing
-    if deletes is not None:
-        dels = with_subj_bucket(deletes.select(*TRIPLE_COLS), buckets)
-        cond = F.lit(True)
-        for c in TRIPLE_COLS + ["subj_bucket"]:
-            cond = cond & survivors[c].eqNullSafe(dels[c])
-        survivors = survivors.join(dels, cond, "left_anti")
-    merged = survivors
-    if adds is not None:
-        merged = survivors.unionByName(
-            with_subj_bucket(adds.select(*TRIPLE_COLS), buckets)
-            .filter(F.col("subj_bucket").isin(touched)))
-
-    deduped = fused_bucket_dedup(merged, len(touched))
-
-    # Stage-and-swap: write the merged touched buckets under a
-    # dot-prefixed dir inside the table (parquet readers skip '.'/'_'
-    # entries, so a crashed merge never corrupts reads), then swap each
-    # touched bucket directory.  The swap DELETES buckets with no
-    # surviving rows — the case a dynamic partition overwrite silently
-    # gets wrong (it only rewrites partitions present in the output).
-    # No explicit pre-write sort: the dedup window's ordering survives
-    # the filter, satisfies the writer's clustering-by-partition-column
-    # requirement, and leaves rows TRIPLE_SORT-ordered within each
-    # bucket file — write_triple_table's row-group-stats layout.
-    staging = path + "/.merge-staging"
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
-    fs = hadoop_path(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    # ROLL FORWARD a crashed predecessor before reading `existing`: a
-    # staged bucket dir is the COMPLETE post-merge content of that bucket
-    # (rename removes it from staging on success), so leftovers are
-    # exactly the swaps that didn't complete — finishing them restores
-    # any bucket the crash caught between delete and rename.  Discarding
-    # leftovers instead would lose that bucket's rows for good.
-    _roll_forward_pending_swap(fs, hadoop_path, path, staging)
-    deduped.write.mode("overwrite").partitionBy("subj_bucket").parquet(staging)
-    for b in touched:
-        dst = hadoop_path("%s/subj_bucket=%d" % (path, b))
-        src = hadoop_path("%s/subj_bucket=%d" % (staging, b))
-        fs.delete(dst, True)
-        if fs.exists(src):
-            fs.rename(src, dst)
-    fs.delete(hadoop_path(staging), True)
-
-    # an emptied table has no part files left; reading it would fail on
-    # schema inference, so count only when a bucket dir survives
-    has_buckets = any(
-        s.getPath().getName().startswith("subj_bucket=")
-        for s in fs.listStatus(hadoop_path(path)))
-    rows_after = (
-        spark.read.parquet(path)
-        .filter(F.col("subj_bucket").isin(touched)).count()
-        if has_buckets else 0)
-    return {"buckets_touched": touched, "rows_after": rows_after}
 
 
 def edge_cut_stats(triples: DataFrame,

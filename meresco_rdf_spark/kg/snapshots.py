@@ -1,13 +1,7 @@
 """Snapshot-versioned triple tables: copy-on-write MERGE with atomic
-metadata commits — the isolation piece ``materialize.merge_triple_table``
-documents as "what an Iceberg catalog adds".
-
-``merge_triple_table`` swaps bucket directories in place: correct for a
-single writer (crash roll-forward included), but a reader scanning during
-the swap can see a bucket mid-replacement.  This module implements the
-Iceberg commit model on plain parquet, so the repo carries BOTH layouts —
-in-place swap (cheapest, single-writer batch) and snapshot COW (isolation,
-time travel, concurrent readers):
+metadata commits — the engine's one triple-table commit protocol
+(``Graph.addTriple``/``removeTriple`` at scale, reference
+graph.py:45-68), implementing the Iceberg commit model on plain parquet:
 
 - **data files are immutable.**  Every commit writes NEW bucket
   directories under ``data/snap=<version>-<uuid>/subj_bucket=<b>/`` and
@@ -118,7 +112,9 @@ def _load_manifest(fs, hpath, root: str, version: int) -> dict:
 
 
 def _commit_manifest(fs, hpath, root: str, manifest: dict) -> None:
-    """Atomic CAS commit: rename-if-absent of the manifest file."""
+    """Atomic CAS commit: rename-if-absent of the manifest file.  The
+    package's only manifest commit — triple-table snapshots and the
+    quad stream's hash state both go through it."""
     meta_dir = root + "/_meta"
     fs.mkdirs(hpath(meta_dir))
     tmp = "%s/.tmp-%s.json" % (meta_dir, uuid.uuid4().hex)
@@ -215,59 +211,61 @@ def snapshot_create(spark: SparkSession, triples: DataFrame, root: str,
     return manifest
 
 
+def _merge_rows(spark: SparkSession, root: str, parent: dict,
+                adds: DataFrame | None,
+                deletes: DataFrame | None) -> tuple[list, DataFrame | None]:
+    """``(touched, rows)`` of one MERGE into ``parent``: the buckets the
+    delta hashes into and their merged, deduplicated rows — the plan
+    ``snapshot_merge`` writes, shared with the plan audit
+    (``tools/explain_audit.py``) so the asserted plan IS the shipped
+    one.  ``touched`` is empty when the delta is."""
+    buckets = parent["n_buckets"]
+    adds, deletes = (None if d is None else
+                     with_subj_bucket(d.select(*TRIPLE_COLS), buckets)
+                     for d in (adds, deletes))
+    delta = [d for d in (adds, deletes) if d is not None]
+    if not delta:
+        return [], None
+    keys = delta[0] if len(delta) == 1 else delta[0].unionByName(delta[1])
+    touched = sorted(r.subj_bucket for r in
+                     keys.select("subj_bucket").distinct().collect())
+    if not touched:
+        return [], None
+    # existing rows of the touched buckets only (untouched buckets'
+    # files are never opened)
+    merged = _scan(spark, root, parent, only_buckets=touched)
+    if deletes is not None:
+        cond = F.lit(True)
+        for c in TRIPLE_COLS + ["subj_bucket"]:
+            cond = cond & merged[c].eqNullSafe(deletes[c])
+        merged = merged.join(deletes, cond, "left_anti")
+    if adds is not None:
+        merged = merged.unionByName(
+            adds.filter(F.col("subj_bucket").isin(touched)))
+    return touched, fused_bucket_dedup(merged, len(touched))
+
+
 def snapshot_merge(spark: SparkSession, root: str,
                    adds: DataFrame | None = None,
                    deletes: DataFrame | None = None) -> dict:
-    """Copy-on-write MERGE: same set semantics as
-    ``materialize.merge_triple_table`` (null-safe full-row delete
-    anti-join, adds deduplicated against survivors, per-bucket-local),
-    but instead of swapping bucket directories in place it writes the
-    merged touched buckets as a NEW immutable data directory and commits
-    a manifest that splices them into the parent snapshot.  Readers of
-    any earlier version are untouched; an emptied bucket simply leaves
-    the new manifest.  Returns the committed manifest."""
+    """Copy-on-write MERGE with set semantics: deletes are a null-safe
+    full-row anti-join, adds deduplicate against survivors, and both
+    are per-bucket-local (every side hashes by the same bucket
+    function).  Only the delta-touched buckets are read and rewritten —
+    as a NEW immutable data directory — and the committed manifest
+    splices them into the parent snapshot.  Readers of any earlier
+    version are untouched; an emptied bucket simply leaves the new
+    manifest.  Re-running the same merge yields the same rowset.
+    Returns the committed manifest."""
     fs, hpath = _fs(spark, root)
     versions = _manifest_versions(fs, hpath, root)
     if not versions:
         raise SnapshotNotFound("cannot merge into %s: no snapshot" % root)
     parent = _load_manifest(fs, hpath, root, versions[-1])
     buckets = parent["n_buckets"]
-
-    sets = []
-    if adds is not None:
-        sets.append(with_subj_bucket(adds.select(*TRIPLE_COLS), buckets))
-    if deletes is not None:
-        sets.append(with_subj_bucket(deletes.select(*TRIPLE_COLS), buckets))
-    if not sets:
-        return parent
-    delta_union = sets[0] if len(sets) == 1 else sets[0].unionByName(sets[1])
-    touched = sorted(
-        r.subj_bucket
-        for r in delta_union.select("subj_bucket").distinct().collect())
+    touched, deduped = _merge_rows(spark, root, parent, adds, deletes)
     if not touched:
         return parent
-
-    # existing rows of the touched buckets only (untouched buckets'
-    # files are never opened — same pruning story as the in-place merge)
-    live_touched = [b for b in touched if str(b) in parent["buckets"]]
-    survivors = (
-        _scan(spark, root, parent, only_buckets=live_touched)
-        if live_touched else
-        with_subj_bucket(
-            spark.createDataFrame([], ", ".join(
-                "%s string" % c for c in TRIPLE_COLS)), buckets))
-    if deletes is not None:
-        dels = with_subj_bucket(deletes.select(*TRIPLE_COLS), buckets)
-        cond = F.lit(True)
-        for c in TRIPLE_COLS + ["subj_bucket"]:
-            cond = cond & survivors[c].eqNullSafe(dels[c])
-        survivors = survivors.join(dels, cond, "left_anti")
-    merged = survivors
-    if adds is not None:
-        merged = survivors.unionByName(
-            with_subj_bucket(adds.select(*TRIPLE_COLS), buckets)
-            .filter(F.col("subj_bucket").isin(touched)))
-    deduped = fused_bucket_dedup(merged, len(touched))
 
     version = versions[-1] + 1
     rel = _write_data(deduped, root, version, buckets, len(touched),
@@ -338,10 +336,11 @@ def read_snapshot(spark: SparkSession, root: str,
 def expire_snapshots(spark: SparkSession, root: str,
                      keep_last: int = 1) -> dict:
     """Drop all but the newest ``keep_last`` manifests and delete every
-    data directory no surviving manifest references (including orphans
-    from crashed writers).  Requires no concurrent writer — the same
-    contract as Iceberg's expire-snapshots maintenance action.  Readers
-    of expired versions break; that is the retention trade-off."""
+    data directory no surviving manifest references, and every temp
+    manifest (both left by crashed writers).  Requires no concurrent
+    writer — the same contract as Iceberg's expire-snapshots maintenance
+    action.  Readers of expired versions break; that is the retention
+    trade-off."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     fs, hpath = _fs(spark, root)
@@ -353,6 +352,11 @@ def expire_snapshots(spark: SparkSession, root: str,
             referenced.add(p.split("/subj_bucket=", 1)[0])
     for v in drop:
         fs.delete(hpath("%s/_meta/v%d.json" % (root, v)), False)
+    meta = hpath(root + "/_meta")
+    if fs.exists(meta):  # temp manifests never renamed into place
+        for status in fs.listStatus(meta):
+            if status.getPath().getName().startswith(".tmp-"):
+                fs.delete(status.getPath(), False)
     removed_dirs = []
     data = hpath(root + "/data")
     if fs.exists(data):

@@ -46,9 +46,9 @@ def triples_df(spark: SparkSession, triples: Iterable[tuple]) -> DataFrame:
 def add_triples(df: DataFrame, new: DataFrame) -> DataFrame:
     """Set-semantics insert (reference graph.py:45-55: adding an existing
     triple is a no-op).  Scale: one hash-partitioned dedup shuffle on all 5
-    columns; against a MATERIALIZED bucketed table use
-    ``kg.materialize.merge_triple_table`` (the executable MERGE-emulation:
-    per-bucket read-modify-write, untouched buckets never opened)."""
+    columns; against a MATERIALIZED snapshot table use
+    ``kg.snapshots.snapshot_merge(adds=...)`` (copy-on-write per-bucket
+    MERGE, untouched buckets never opened)."""
     return df.unionByName(new).dropDuplicates(TRIPLE_COLS)
 
 
@@ -64,17 +64,18 @@ def _full_key_condition(left: DataFrame, right: DataFrame) -> Column:
 def remove_triples(df: DataFrame, doomed: DataFrame) -> DataFrame:
     """Delete (reference graph.py:57-68) = left-anti join on all 5 columns
     (null-safe on the nullable ones).  Scale: broadcast the doomed side
-    when small; against a materialized bucketed table,
-    ``kg.materialize.merge_triple_table(deletes=...)`` executes the
-    Iceberg ``MERGE ... WHEN MATCHED THEN DELETE`` shape per bucket."""
+    when small; against a materialized snapshot table,
+    ``kg.snapshots.snapshot_merge(deletes=...)`` executes the Iceberg
+    ``MERGE ... WHEN MATCHED THEN DELETE`` shape per bucket."""
     return df.join(doomed, _full_key_condition(df, doomed), "left_anti")
 
 
 def diff_triples(before: DataFrame, after: DataFrame) -> DataFrame:
     """Snapshot change detection: rows only in ``after`` tagged ``op='+'``,
     rows only in ``before`` tagged ``op='-'`` — the audit/compaction
-    complement to ``merge_triple_table`` (what changed between two
-    materialized graph versions).
+    complement to ``snapshot_merge`` (what changed between two
+    materialized graph versions; ``snapshots.snapshot_diff`` is the
+    manifest-pruned form for two versions of one snapshot table).
 
     Two null-safe anti-joins on the full triple key.  Scale: both
     snapshots of one table share the ``bucket(N, subj)`` layout, so the

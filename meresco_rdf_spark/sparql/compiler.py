@@ -2011,7 +2011,7 @@ def sparql_update_sets(triples: DataFrame, request: str,
     the request has no such clause.
 
     This is the composition point with the engine's materialized-table
-    path: feed the two frames to ``kg.materialize.merge_triple_table``
+    path: feed the two frames to ``kg.snapshots.snapshot_merge``
     (deletes=…, adds=…) for the partition-pruned per-bucket MERGE instead
     of rewriting the whole relation."""
     ast = parse_query(request)

@@ -106,33 +106,30 @@ def run_nquads_with_graph_hashes(quads: DataFrame, table_path: str,
        hash state (full outer join; counts add, hashes XOR) written as
        a NEW immutable version directory.
     3. commit: a ``_meta/v<N>.json`` manifest recording ``batch_id``
-       is renamed into place — the rename IS the commit (the
-       ``kg.snapshots`` discipline).  A batch whose id is <= the
-       committed manifest's skips the fold; a crash after staging but
-       before commit replays into step 2 from the staged directory.
+       and the version directory (``data/v<N>-<uuid>``, private to this
+       writer) is committed by ``kg.snapshots._commit_manifest`` — the
+       rename IS the commit, and a writer that loses the race for
+       version N raises ``SnapshotConflict`` without touching the
+       winner's data.  A batch whose id is <= the committed manifest's
+       skips the fold; a crash after staging but before commit replays
+       into step 2 from the staged directory.
 
     Readers see the quad table as the union of completed batch
     directories and the hash table through ``read_graph_hashes`` (the
     latest committed manifest only — a half-written version directory
     without its manifest is invisible).
     """
-    import json as _json
+    import uuid
 
     from ..kg.fingerprint import graph_content_hashes
-    from ..kg.snapshots import _fs
+    from ..kg.snapshots import (
+        _commit_manifest,
+        _fs,
+        _load_manifest,
+        _manifest_versions,
+    )
 
     spark = quads.sparkSession
-
-    def versions(fs, hpath):
-        meta = hpath("%s/_meta" % hash_root)
-        if not fs.exists(meta):
-            return []
-        out = []
-        for st in fs.listStatus(meta):
-            name = st.getPath().getName()
-            if name.startswith("v") and name.endswith(".json"):
-                out.append(int(name[1:-5]))
-        return sorted(out)
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         fs, hpath = _fs(spark, table_path)
@@ -153,14 +150,10 @@ def run_nquads_with_graph_hashes(quads: DataFrame, table_path: str,
             fresh.write.mode("overwrite").parquet(bdir)
         staged = spark.read.parquet(bdir).select(*QUAD_COLS)
 
-        vs = versions(fs, hpath)
+        vs = _manifest_versions(fs, hpath, hash_root)
         state, last_bid = None, -1
         if vs:
-            stream = fs.open(hpath("%s/_meta/v%d.json" % (hash_root, vs[-1])))
-            try:
-                m = _json.loads(bytes(stream.readAllBytes()).decode())
-            finally:
-                stream.close()
+            m = _load_manifest(fs, hpath, hash_root, vs[-1])
             last_bid = m["batch_id"]
             state = spark.read.parquet("%s/%s" % (hash_root, m["data"]))
         if last_bid >= batch_id:
@@ -181,23 +174,11 @@ def run_nquads_with_graph_hashes(quads: DataFrame, table_path: str,
                              F.expr("coalesce(_h0, 0L) ^ coalesce(_h1, 0L)")
                              .alias("content_hash")))
         ver = (vs[-1] if vs else 0) + 1
-        data_rel = "data/v%d" % ver
-        delta.write.mode("overwrite").parquet(
-            "%s/%s" % (hash_root, data_rel))
-        meta_dir = "%s/_meta" % hash_root
-        fs.mkdirs(hpath(meta_dir))
-        tmp = hpath("%s/.v%d.json.tmp" % (meta_dir, ver))
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(_json.dumps(
-                {"version": ver, "batch_id": batch_id,
-                 "data": data_rel}).encode()))
-        finally:
-            out.close()
-        if not fs.rename(tmp, hpath("%s/v%d.json" % (meta_dir, ver))):
-            fs.delete(tmp, False)
-            raise RuntimeError(
-                "hash manifest commit race at %s v%d" % (hash_root, ver))
+        data_rel = "data/v%d-%s" % (ver, uuid.uuid4().hex[:12])
+        delta.write.mode("error").parquet("%s/%s" % (hash_root, data_rel))
+        _commit_manifest(fs, hpath, hash_root,
+                         {"version": ver, "batch_id": batch_id,
+                          "data": data_rel})
 
     return (quads.writeStream.foreachBatch(merge)
             .option("checkpointLocation", checkpoint)
@@ -208,24 +189,12 @@ def run_nquads_with_graph_hashes(quads: DataFrame, table_path: str,
 def read_graph_hashes(spark: SparkSession, hash_root: str) -> DataFrame:
     """The latest COMMITTED per-graph hash state (manifest-resolved;
     uncommitted version directories are invisible)."""
-    import json as _json
-
-    from ..kg.snapshots import _fs
+    from ..kg.snapshots import _fs, _load_manifest, _manifest_versions
 
     fs, hpath = _fs(spark, hash_root)
-    meta = hpath("%s/_meta" % hash_root)
-    vs = []
-    if fs.exists(meta):
-        for st in fs.listStatus(meta):
-            name = st.getPath().getName()
-            if name.startswith("v") and name.endswith(".json"):
-                vs.append(int(name[1:-5]))
+    vs = _manifest_versions(fs, hpath, hash_root)
     if not vs:
         return spark.createDataFrame(
             [], "graph string, n_triples long, content_hash long")
-    stream = fs.open(hpath("%s/_meta/v%d.json" % (hash_root, max(vs))))
-    try:
-        m = _json.loads(bytes(stream.readAllBytes()).decode())
-    finally:
-        stream.close()
+    m = _load_manifest(fs, hpath, hash_root, vs[-1])
     return spark.read.parquet("%s/%s" % (hash_root, m["data"]))

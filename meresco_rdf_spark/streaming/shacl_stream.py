@@ -54,6 +54,7 @@ from __future__ import annotations
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
+from ..kg.snapshots import _fs
 from ..operators.shacl import RDF_TYPE, _check_shapes, _PAIR_KEYS, validate
 
 TRIPLE_COLS = ["subj", "pred", "obj_value", "obj_kind", "obj_lang"]
@@ -172,9 +173,7 @@ def run_shacl_maintenance(triple_stream: DataFrame, shapes: list[dict],
     trigger it equals ``validate(read(table_path), shapes)``."""
     _check_shapes(shapes)
     spark = triple_stream.sparkSession
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path
-    fs = hpath(report_path).getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, hpath = _fs(spark, report_path)
 
     def step(batch: DataFrame, batch_id: int) -> None:
         _roll_forward(fs, hpath, report_path)

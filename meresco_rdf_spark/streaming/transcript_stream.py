@@ -274,46 +274,38 @@ def run_to_parquet_complete(stream: DataFrame, out_path: str,
     )
 
 
-def _hadoop_path_exists(spark, path: str) -> bool:
-    """Existence check through the Hadoop FileSystem API so the sink
-    works on any supported filesystem (local, HDFS, object stores with
-    an HCFS connector), not just the driver's local disk."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
 def run_merge_to_triple_table(triples_stream: DataFrame, table_path: str,
                               checkpoint: str, buckets: int = 16,
                               available_now: bool = True):
     """Incremental KG maintenance: each micro-batch of streamed triples is
-    MERGEd (set semantics) into the subject-bucketed materialized triple
-    table — the streaming form of ``Graph.addTriples`` against the O1
-    scale layout (``kg/materialize.py``).
+    MERGEd (set semantics) into a snapshot triple table
+    (``kg.snapshots.snapshot_merge``) — the streaming form of
+    ``Graph.addTriples``.  Read the table with
+    ``kg.snapshots.read_snapshot``.
 
     Delivery semantics, stated precisely: ``foreachBatch`` is
     at-least-once under failure/restart (a batch whose sink completed but
-    whose commit-log write didn't is re-run), and
-    ``merge_triple_table``'s set-semantics dedup against surviving rows
-    makes a replayed batch a no-op — so the TABLE state is exactly-once
-    even though the sink callback is not.  A crash INSIDE a merge's
-    bucket-swap loop is rolled forward by the replayed batch's merge
-    (staged bucket dirs are complete post-merge content); what remains
-    non-transactional is reader isolation during a swap — an Iceberg
-    catalog's atomic commits add that at scale.
+    whose commit-log write didn't is re-run), and ``snapshot_merge``'s
+    set-semantics dedup against surviving rows makes a replayed batch
+    leave the same rowset — so the TABLE state is exactly-once even
+    though the sink callback is not.  Each merge commits by one manifest
+    rename: a crash before it leaves only an orphan data directory no
+    reader sees (``expire_snapshots`` removes it), and readers never see
+    a half-applied batch.
 
     Scale shape: a micro-batch touches only the ``subj_bucket``
-    partitions its own delta hashes into — the merge prunes the read to
-    those directories and dynamic-partition-overwrites only them, so a
-    trickle of updates against a 100-TB table costs O(delta buckets), not
-    O(table).  The first batch creates the table with the same bucket
-    scheme (``buckets`` must stay constant across the table's lifetime,
-    as with an Iceberg ``bucket(N, subj)`` partition spec)."""
-    from ..kg.materialize import (
-        TRIPLE_COLS,
-        merge_triple_table,
-        write_triple_table,
+    partitions its own delta hashes into — the merge reads and rewrites
+    only those, so a trickle of updates against a 100-TB table costs
+    O(delta buckets), not O(table).  The first batch creates the table
+    (``snapshot_create`` with ``buckets``); later merges take the bucket
+    count from the manifest, as with an Iceberg ``bucket(N, subj)``
+    partition spec."""
+    from ..kg.materialize import TRIPLE_COLS
+    from ..kg.snapshots import (
+        _fs,
+        _manifest_versions,
+        snapshot_create,
+        snapshot_merge,
     )
 
     def merge_batch(batch_df, _batch_id):
@@ -321,17 +313,13 @@ def run_merge_to_triple_table(triples_stream: DataFrame, table_path: str,
             return
         spark = batch_df.sparkSession
         delta = batch_df.select(*TRIPLE_COLS)
-        # A table exists only once its creating write COMMITTED (_SUCCESS
-        # at the table root).  A crash mid-create leaves files without
-        # the marker; merging against that torn state would freeze the
-        # partial rows in — re-running the overwrite create instead makes
-        # the first batch as replay-safe as the merges.
-        if _hadoop_path_exists(spark, table_path + "/_SUCCESS"):
-            merge_triple_table(spark, table_path, adds=delta,
-                               buckets=buckets)
+        # the table exists once a manifest does (a listing, not a read
+        # of every manifest: the stream commits one version per batch)
+        if _manifest_versions(*_fs(spark, table_path), table_path):
+            snapshot_merge(spark, table_path, adds=delta)
         else:
-            write_triple_table(delta.dropDuplicates(TRIPLE_COLS),
-                               table_path, buckets=buckets)
+            snapshot_create(spark, delta.dropDuplicates(TRIPLE_COLS),
+                            table_path, buckets=buckets)
 
     writer = (
         triples_stream.writeStream

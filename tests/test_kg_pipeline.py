@@ -539,78 +539,28 @@ class TestCheckpointCost:
 
 
 class TestMergeTripleTable:
-    def _table(self, spark, tmp_path):
-        t = synthesize_transcripts(spark, 20, 5)
-        res = run_pipeline(t)
-        path = str(tmp_path / "triples")
-        write_triple_table(res.triples, path, buckets=8)
-        return path, res.triples
-
-    def test_merge_delete_and_add(self, spark, tmp_path):
-        from meresco_rdf_spark.kg.materialize import merge_triple_table
-
-        path, triples = self._table(spark, tmp_path)
-        before = spark.read.parquet(path).drop("subj_bucket")
-        n_before = before.count()  # eager: the merge replaces the files
-        cols = "subj string, pred string, obj_value string, obj_kind string, obj_lang string"
-        doomed_rows = [tuple(r) for r in before.filter(
-            F.col("pred").endswith("#type")).limit(20).collect()]
-        doomed = spark.createDataFrame(doomed_rows, cols)
-        adds = spark.createDataFrame(
-            [("urn:new:1", "urn:p", "v", "literal", None)], cols)
-        res = merge_triple_table(spark, path, adds=adds, deletes=doomed,
-                                 buckets=8)
-        assert res["buckets_touched"]
-        after = spark.read.parquet(path).drop("subj_bucket")
-        assert after.count() == n_before - len(doomed_rows) + 1
-        # deleted rows gone, added row present
-        cond = F.lit(True)
-        for c in ["subj", "pred", "obj_value", "obj_kind", "obj_lang"]:
-            cond = cond & after[c].eqNullSafe(doomed[c])
-        assert after.join(doomed, cond, "left_semi").count() == 0
-        assert after.filter(F.col("subj") == "urn:new:1").count() == 1
-
-    def test_merge_untouched_buckets_not_rewritten(self, spark, tmp_path):
-        import glob
-        import os as _os
-
-        from meresco_rdf_spark.kg.materialize import merge_triple_table
-
-        path, triples = self._table(spark, tmp_path)
-        adds = spark.createDataFrame(
-            [("urn:new:2", "urn:p", "v", "literal", None)],
-            "subj string, pred string, obj_value string, obj_kind string, obj_lang string")
-        res = merge_triple_table(spark, path, adds=adds, buckets=8)
-        assert len(res["buckets_touched"]) == 1
-        touched = res["buckets_touched"][0]
-        # untouched bucket directories keep their original files
-        mtimes = {}
-        for d in glob.glob(_os.path.join(path, "subj_bucket=*")):
-            b = int(d.rsplit("=", 1)[1])
-            mtimes[b] = max(_os.path.getmtime(f)
-                            for f in glob.glob(_os.path.join(d, "*.parquet")))
-        res2 = merge_triple_table(spark, path, adds=adds, buckets=8)  # no-op
-        assert res2["buckets_touched"] == [touched]
-        for d in glob.glob(_os.path.join(path, "subj_bucket=*")):
-            b = int(d.rsplit("=", 1)[1])
-            if b != touched:
-                assert max(_os.path.getmtime(f) for f in glob.glob(
-                    _os.path.join(d, "*.parquet"))) == mtimes[b]
-
     def test_merge_idempotent(self, spark, tmp_path):
-        from meresco_rdf_spark.kg.materialize import merge_triple_table
+        from meresco_rdf_spark.kg.snapshots import (
+            read_snapshot,
+            snapshot_create,
+            snapshot_merge,
+        )
 
-        path, triples = self._table(spark, tmp_path)
-        doomed = spark.read.parquet(path).drop("subj_bucket").limit(5)
-        doomed_rows = [tuple(r) for r in doomed.collect()]
+        res = run_pipeline(synthesize_transcripts(spark, 20, 5))
+        path = str(tmp_path / "triples")
+        snapshot_create(spark, res.triples, path, buckets=8)
+        doomed_rows = [tuple(r) for r in read_snapshot(spark, path)
+                       .select(*TRIPLE_COLS).limit(5).collect()]
         doomed = spark.createDataFrame(
             doomed_rows,
             "subj string, pred string, obj_value string, obj_kind string, obj_lang string")
-        merge_triple_table(spark, path, deletes=doomed, buckets=8)
-        n1 = spark.read.parquet(path).count()
+        n0 = read_snapshot(spark, path).count()
+        snapshot_merge(spark, path, deletes=doomed)
+        n1 = read_snapshot(spark, path).count()
+        assert n1 == n0 - len(set(doomed_rows))
         # resume-after-delete: replaying the SAME merge changes nothing
-        merge_triple_table(spark, path, deletes=doomed, buckets=8)
-        assert spark.read.parquet(path).count() == n1
+        snapshot_merge(spark, path, deletes=doomed)
+        assert read_snapshot(spark, path).count() == n1
 
 
 class TestAdaptiveCC:
@@ -836,14 +786,15 @@ class TestStructureTriples:
 class TestMergeModelEquivalence:
     def test_random_merge_sequence_matches_set_model(self, spark, tmp_path):
         """Model-based check: a seeded random sequence of MERGE(adds,
-        deletes) calls must leave the table equal to a plain Python
-        set-semantics model ((state - deletes) | adds per step)."""
+        deletes) calls must leave the snapshot table equal to a plain
+        Python set-semantics model ((state - deletes) | adds per step),
+        and replaying a step (a resumed writer) must change nothing."""
         import random
 
-        from meresco_rdf_spark.kg.materialize import (
-            TRIPLE_COLS,
-            merge_triple_table,
-            write_triple_table,
+        from meresco_rdf_spark.kg.snapshots import (
+            read_snapshot,
+            snapshot_create,
+            snapshot_merge,
         )
 
         rng = random.Random(42)
@@ -856,142 +807,48 @@ class TestMergeModelEquivalence:
                   "obj_kind string, obj_lang string")
         init = universe[:120]
         path = str(tmp_path / "t")
-        write_triple_table(spark.createDataFrame(init, schema), path,
-                           buckets=8)
+        snapshot_create(spark, spark.createDataFrame(init, schema), path,
+                        buckets=8)
         model = set(init)
+
+        def table():
+            return {tuple(r) for r in read_snapshot(spark, path)
+                    .select(*TRIPLE_COLS).collect()}
 
         for step in range(4):
             adds = rng.sample(universe, rng.randrange(5, 40))
             dels = rng.sample(universe, rng.randrange(5, 40))
-            merge_triple_table(
-                spark, path,
-                adds=spark.createDataFrame(adds, schema),
-                deletes=spark.createDataFrame(dels, schema),
-                buckets=8)
+            delta = dict(adds=spark.createDataFrame(adds, schema),
+                         deletes=spark.createDataFrame(dels, schema))
+            snapshot_merge(spark, path, **delta)
             # merge order: deletes are anti-joined from existing FIRST,
             # adds unioned after — a row in both adds and deletes survives
             model = (model - set(dels)) | set(adds)
-            got = {tuple(r) for r in spark.read.parquet(path)
-                   .select(*TRIPLE_COLS).collect()}
-            assert got == model, "diverged at step %d" % step
-
-
-class TestMergeEmptiedBuckets:
-    def test_deletes_that_empty_a_bucket_remove_it_from_disk(
-            self, spark, tmp_path):
-        """Regression: a bucket whose rows are ALL deleted (and gets no
-        adds) must disappear — a dynamic partition overwrite would keep
-        its old files (partitions absent from the output are never
-        rewritten) and the deleted rows would resurrect."""
-        import os
-
-        from meresco_rdf_spark.kg.materialize import (
-            TRIPLE_COLS,
-            merge_triple_table,
-            with_subj_bucket,
-            write_triple_table,
-        )
-
-        schema = ("subj string, pred string, obj_value string, "
-                  "obj_kind string, obj_lang string")
-        rows = [("s%d" % i, "p", "v%d" % i, "literal", None)
-                for i in range(40)]
-        df = spark.createDataFrame(rows, schema)
-        path = str(tmp_path / "t")
-        write_triple_table(df, path, buckets=4)
-
-        # every row of ONE bucket, nothing else
-        victim = int(with_subj_bucket(df, 4).select("subj_bucket")
-                     .first().subj_bucket)
-        dels = with_subj_bucket(df, 4).filter(
-            F.col("subj_bucket") == victim).drop("subj_bucket")
-        n_dels = dels.count()
-        assert n_dels > 0
-        res = merge_triple_table(spark, path, deletes=dels, buckets=4)
-
-        assert not os.path.exists(
-            os.path.join(path, "subj_bucket=%d" % victim))
-        got = {tuple(r) for r in spark.read.parquet(path)
-               .select(*TRIPLE_COLS).collect()}
-        doomed = {tuple(r) for r in dels.collect()}
-        assert got == set(rows) - doomed
-        assert res["rows_after"] == 0  # touched buckets all emptied
-        # no staging leftovers
-        assert not os.path.exists(os.path.join(path, ".merge-staging"))
-
-    def test_crash_mid_swap_rolls_forward_on_next_merge(
-            self, spark, tmp_path):
-        """Simulate a merge that crashed between deleting a bucket dir
-        and renaming its staged replacement: the staged dir holds the
-        complete post-merge bucket content, and the NEXT merge must swap
-        it in (roll-forward) instead of discarding it."""
-        import os
-        import shutil
-
-        from meresco_rdf_spark.kg.materialize import (
-            TRIPLE_COLS,
-            merge_triple_table,
-            with_subj_bucket,
-            write_triple_table,
-        )
-
-        schema = ("subj string, pred string, obj_value string, "
-                  "obj_kind string, obj_lang string")
-        rows = [("s%d" % i, "p", "v%d" % i, "literal", None)
-                for i in range(40)]
-        df = spark.createDataFrame(rows, schema)
-        path = str(tmp_path / "t")
-        write_triple_table(df, path, buckets=4)
-
-        # pick a victim bucket; its post-merge content = old rows + one add
-        victim = int(with_subj_bucket(df, 4).select("subj_bucket")
-                     .first().subj_bucket)
-        vict_rows = [r for r in rows
-                     if int(with_subj_bucket(
-                         spark.createDataFrame([r], schema), 4)
-                         .first().subj_bucket) == victim]
-        new_row = ("s0_new", "p", "added", "literal", None)
-        staged_rows = vict_rows + ([new_row] if int(
-            with_subj_bucket(spark.createDataFrame([new_row], schema), 4)
-            .first().subj_bucket) == victim else [])
-        # construct the crash state: staging holds the bucket's complete
-        # post-merge dir; the live bucket dir is already deleted
-        staging = os.path.join(path, ".merge-staging")
-        spark.createDataFrame(staged_rows, schema) \
-            .withColumn("subj_bucket", F.lit(victim)) \
-            .coalesce(1).write.partitionBy("subj_bucket").parquet(staging)
-        shutil.rmtree(os.path.join(path, "subj_bucket=%d" % victim))
-
-        # reads now MISS the victim bucket (the crash is visible)...
-        assert spark.read.parquet(path).count() == len(rows) - len(vict_rows)
-
-        # ...until the next merge rolls the pending swap forward
-        other = spark.createDataFrame([("zz", "p", "zz", "literal", None)],
-                                      schema)
-        merge_triple_table(spark, path, adds=other, buckets=4)
-        got = {tuple(r) for r in spark.read.parquet(path)
-               .select(*TRIPLE_COLS).collect()}
-        assert got == (set(rows) | set(staged_rows)
-                       | {("zz", "p", "zz", "literal", None)})
-        assert set(staged_rows) <= got
-        assert not os.path.exists(staging)
+            assert table() == model, "diverged at step %d" % step
+            if step == 1:  # replaying the same step changes nothing
+                snapshot_merge(spark, path, **delta)
+                assert table() == model, "replay changed the table"
 
 
 class TestSparqlUpdateMergeIntegration:
     """The scale path claimed in sparql_update_sets' docstring, executed:
     a SPARQL 1.1 Update request compiled to (deletes, inserts) frames and
-    applied to the MATERIALIZED bucketed triple table via the per-bucket
-    MERGE — final table state must equal sparql_update() of the same
-    request over the in-memory relation."""
+    applied to the MATERIALIZED snapshot triple table via the per-bucket
+    ``snapshot_merge`` — final table state must equal sparql_update() of
+    the same request over the in-memory relation."""
 
     def test_update_request_merges_into_table(self, spark, tmp_path):
-        from meresco_rdf_spark.kg.materialize import merge_triple_table
+        from meresco_rdf_spark.kg.snapshots import (
+            read_snapshot,
+            snapshot_create,
+            snapshot_merge,
+        )
         from meresco_rdf_spark.sparql import sparql_update, sparql_update_sets
 
         t = synthesize_transcripts(spark, 20, 5)
         triples = run_pipeline(t).triples.cache()
         path = str(tmp_path / "triples")
-        write_triple_table(triples, path, buckets=8)
+        snapshot_create(spark, triples, path, buckets=8)
 
         request = """
             PREFIX rdfs: <http://www.w3.org/2000/01/rdf-schema#>
@@ -1000,16 +857,15 @@ class TestSparqlUpdateMergeIntegration:
             WHERE { ?s ?p ?o
                     FILTER(strends(str(?p), "kg#score")) }
         """
-        table = spark.read.parquet(path).drop("subj_bucket")
+        table = read_snapshot(spark, path).drop("subj_bucket")
         dels, ins = sparql_update_sets(table, request)
-        res = merge_triple_table(spark, path, adds=ins, deletes=dels,
-                                 buckets=8)
+        res = snapshot_merge(spark, path, adds=ins, deletes=dels)
         assert res["buckets_touched"]
 
         expected = {tuple(r) for r in sparql_update(triples, request)
                     .collect()}
         got = {tuple(r) for r in
-               spark.read.parquet(path).drop("subj_bucket").collect()}
+               read_snapshot(spark, path).drop("subj_bucket").collect()}
         assert got == expected
         # the request really did something in both directions
         assert not any(p.endswith("kg#score") for _, p, _, _, _ in got)

@@ -182,6 +182,152 @@ class TestSnapshotTable:
         assert [m["version"] for m in vs] == [1, 2]
 
 
+class _CrashingFs:
+    """Hadoop FileSystem proxy whose k-th create/rename/delete (counted
+    across every ``_fs`` handle of one run) crashes — before the call
+    runs, or with ``after=True`` once it has run."""
+
+    OPS = ("create", "rename", "delete")
+
+    def __init__(self, fs, calls, fail_at, after):
+        self._fs, self._calls = fs, calls
+        self._fail_at, self._after = fail_at, after
+
+    def __getattr__(self, name):
+        attr = getattr(self._fs, name)
+        if name not in self.OPS:
+            return attr
+
+        def op(*args):
+            self._calls.append(name)
+            crash = len(self._calls) == self._fail_at
+            if crash and not self._after:
+                raise IOError("injected crash before %s" % name)
+            out = attr(*args)
+            if crash:
+                raise IOError("injected crash after %s" % name)
+            return out
+        return op
+
+
+def _inject_crash(monkeypatch, fail_at=None, after=False):
+    """Route ``snapshots._fs`` through :class:`_CrashingFs`; returns the
+    op log (``fail_at=None`` only counts)."""
+    from meresco_rdf_spark.kg import snapshots
+
+    real, calls = snapshots._fs, []
+
+    def crashing(spark, root):
+        fs, hpath = real(spark, root)
+        return _CrashingFs(fs, calls, fail_at, after), hpath
+    monkeypatch.setattr(snapshots, "_fs", crashing)
+    return calls
+
+
+def _leftovers(root, spark):
+    """Data dirs no manifest references, plus temp manifests."""
+    referenced = {p.split("/subj_bucket=", 1)[0]
+                  for m in snapshot_versions(spark, root)
+                  for p in m["buckets"].values()}
+    data = {"data/" + d for d in os.listdir(os.path.join(root, "data"))}
+    meta = os.path.join(root, "_meta")
+    tmp = {"_meta/" + f for f in os.listdir(meta)
+           if f.startswith(".tmp-")} if os.path.isdir(meta) else set()
+    return (data - referenced) | tmp
+
+
+class TestCrashMatrix:
+    """A crash at any commit step leaves readers on exactly the old or
+    the new rowset, the next writer succeeds, and expire_snapshots
+    removes what the crashed writer left behind."""
+
+    ADDS = [("urn:s:0", "urn:p:alt", "zero", "literal", "en"),
+            ("urn:s:new", "urn:p:label", "new", "literal", None)]
+    DELS = [("urn:s:2", "urn:p:label", "name 2", "literal", None)]
+
+    def _steps(self, monkeypatch, run):
+        # every create/rename/delete of a clean run, crashed before it,
+        # plus a crash right after the last one (the commit rename)
+        with monkeypatch.context() as m:
+            calls = _inject_crash(m)
+            run()
+        assert "rename" in calls, calls
+        return ([(k, False) for k in range(1, len(calls) + 1)]
+                + [(len(calls), True)])
+
+    def _recovers(self, spark, root, after, retry, want):
+        left = _leftovers(root, spark)
+        orphans = {d for d in left if d.startswith("data/")}
+        # before the commit rename the writer's data dir is an orphan
+        # (and, past its create, so is the temp manifest); after it,
+        # nothing is left over
+        assert len(orphans) == (0 if after else 1), left
+        retry()  # the next writer succeeds
+        assert rowset(read_snapshot(spark, root)) == want
+        assert orphans <= set(expire_snapshots(spark, root)["removed_dirs"])
+        assert not _leftovers(root, spark)
+        assert rowset(read_snapshot(spark, root)) == want
+
+    def test_every_step_of_a_merge(self, spark, tmp_path, monkeypatch):
+        old = set(base_rows())
+        new = (old - set(self.DELS)) | set(self.ADDS)
+
+        def setup(name):
+            root = str(tmp_path / name)
+            snapshot_create(spark, tri(spark, base_rows()), root, buckets=4)
+            return root
+
+        def merge(root):
+            return snapshot_merge(spark, root, adds=tri(spark, self.ADDS),
+                                  deletes=tri(spark, self.DELS))
+
+        clean = setup("clean")
+        steps = self._steps(monkeypatch, lambda: merge(clean))
+        for k, after in steps:
+            root = setup("k%d%s" % (k, "a" if after else "b"))
+            with monkeypatch.context() as m:
+                _inject_crash(m, fail_at=k, after=after)
+                with pytest.raises(IOError, match="injected crash"):
+                    merge(root)
+            got = rowset(read_snapshot(spark, root))
+            assert got == (new if after else old), (k, after)
+            self._recovers(spark, root, after, lambda: merge(root), new)
+
+    def test_stream_sink_first_create(self, spark, tmp_path, monkeypatch):
+        from pyspark.errors import StreamingQueryException
+
+        from meresco_rdf_spark.streaming.transcript_stream import (
+            run_merge_to_triple_table,
+        )
+
+        src = str(tmp_path / "src")
+        tri(spark, base_rows()).coalesce(1).write.parquet(src)
+        want = set(base_rows())
+
+        def drain(name):
+            stream = spark.readStream.schema(SCHEMA).parquet(src)
+            q = run_merge_to_triple_table(
+                stream, str(tmp_path / name), str(tmp_path / (name + "-ck")),
+                buckets=4)
+            q.awaitTermination(300)
+
+        steps = self._steps(monkeypatch, lambda: drain("clean"))
+        for k, after in steps:
+            name = "k%d%s" % (k, "a" if after else "b")
+            root = str(tmp_path / name)
+            with monkeypatch.context() as m:
+                _inject_crash(m, fail_at=k, after=after)
+                with pytest.raises(StreamingQueryException,
+                                   match="injected crash"):
+                    drain(name)
+            if after:
+                assert rowset(read_snapshot(spark, root)) == want
+            else:  # no manifest: the table does not exist yet
+                assert snapshot_versions(spark, root) == []
+            # restart on the same checkpoint replays batch 0
+            self._recovers(spark, root, after, lambda: drain(name), want)
+
+
 class TestSnapshotDiff:
     def _setup(self, spark, tmp_path):
         from meresco_rdf_spark.kg.snapshots import snapshot_diff

@@ -25,3 +25,13 @@ def test_no_dict_literal_repeats_a_constant_key():
                         key.value))
                 seen.add(key.value)
     assert repeats == []
+
+
+def test_hadoop_filesystem_is_opened_only_by_snapshots():
+    # every table commit goes through kg/snapshots.py (manifest rename =
+    # commit); a module that opens its own Hadoop FileSystem is how a
+    # second commit path starts
+    opened = sorted(
+        str(path.relative_to(PKG.parent)) for path in PKG.rglob("*.py")
+        if "getFileSystem(" in path.read_text())
+    assert opened == ["meresco_rdf_spark/kg/snapshots.py"]

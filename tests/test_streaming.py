@@ -5,8 +5,14 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from meresco_rdf_spark.kg.snapshots import (
+    expire_snapshots,
+    read_snapshot,
+    snapshot_versions,
+)
 from meresco_rdf_spark.sources.transcripts import synthesize_transcripts
 from meresco_rdf_spark.streaming.transcript_stream import (
     mention_rate,
@@ -231,7 +237,7 @@ class TestDocStreamDedup:
 
 
 class TestStreamMergeTripleTable:
-    """Incremental KG maintenance: micro-batches MERGEd into the bucketed
+    """Incremental KG maintenance: micro-batches MERGEd into the snapshot
     triple table (streaming Graph.addTriples against the O1 scale layout,
     reference graph.py:45-51 set semantics)."""
 
@@ -269,7 +275,7 @@ class TestStreamMergeTripleTable:
             table, str(tmp_path / "ckpt"), buckets=4)
         q.awaitTermination(300)
 
-        got = {tuple(r) for r in spark.read.parquet(table)
+        got = {tuple(r) for r in read_snapshot(spark, table)
                .select(*TRIPLE_COLS).collect()}
         # batch twin: stateless fan-out (score pinned like stream_triples),
         # set semantics
@@ -278,12 +284,16 @@ class TestStreamMergeTripleTable:
         ).dropDuplicates(TRIPLE_COLS)
         want = {tuple(r) for r in batch.select(*TRIPLE_COLS).collect()}
         assert got == want
-        # bucketed layout on disk (Iceberg bucket(N, subj) physical design)
-        import os
-
-        assert sorted(
-            d for d in os.listdir(table) if d.startswith("subj_bucket=")
-        ), "expected subj_bucket partition directories"
+        # snapshot layout on disk: one manifest per micro-batch, each
+        # bucket of the current one a subj_bucket dir under data/snap=
+        versions = snapshot_versions(spark, table)
+        assert len(versions) > 1
+        current = versions[-1]
+        assert current["n_buckets"] == 4
+        assert current["total_rows"] == len(want)
+        for rel in current["buckets"].values():
+            assert rel.startswith("data/snap=") and "/subj_bucket=" in rel
+            assert os.path.isdir(os.path.join(table, rel))
 
     def test_replayed_stream_is_noop(self, spark, tmp_path):
         # at-least-once foreachBatch + idempotent set-semantics MERGE =
@@ -304,7 +314,7 @@ class TestStreamMergeTripleTable:
                                            max_files_per_trigger=1))),
                 table, str(tmp_path / ckpt), buckets=4)
             q.awaitTermination(300)
-            return {tuple(r) for r in spark.read.parquet(table)
+            return {tuple(r) for r in read_snapshot(spark, table)
                     .select(*TRIPLE_COLS).collect()}
 
         first = run("ckpt1")
@@ -345,7 +355,7 @@ class TestStreamMergeTripleTable:
             q.awaitTermination(300)
 
         drain()
-        n1 = spark.read.parquet(table).count()
+        n1 = read_snapshot(spark, table).count()
 
         # second drop: same synthetic content under prefixed conv ids
         t2 = synthesize_transcripts(spark, 6, 4).withColumn(
@@ -357,7 +367,7 @@ class TestStreamMergeTripleTable:
                   os.path.join(in_dir, "drop_2.parquet"))
 
         drain()  # restart from the same checkpoint
-        got = {tuple(r) for r in spark.read.parquet(table)
+        got = {tuple(r) for r in read_snapshot(spark, table)
                .select(*TRIPLE_COLS).collect()}
         batch = mention_triples(
             detect_mentions(t1.unionByName(t2)).withColumn(
@@ -368,11 +378,9 @@ class TestStreamMergeTripleTable:
 
     def test_torn_first_create_is_overwritten_on_replay(
             self, spark, tmp_path):
-        # a crash mid-create leaves parquet files WITHOUT the _SUCCESS
-        # commit marker; the sink must treat that as "no table" and
-        # re-create with overwrite instead of merging the torn rows in
-        import os
-
+        # a crash mid-create leaves a data/snap= directory with NO
+        # manifest: no reader sees it, the replayed first batch commits
+        # v1 without its rows, and expire_snapshots removes it
         from meresco_rdf_spark.kg.extract import detect_mentions, mention_triples
         from meresco_rdf_spark.kg.materialize import TRIPLE_COLS
         from meresco_rdf_spark.streaming.transcript_stream import (
@@ -381,13 +389,12 @@ class TestStreamMergeTripleTable:
 
         t, in_dir = self._slices(spark, tmp_path, n_convs=6, n_turns=4)
         table = str(tmp_path / "table")
-        # simulate the torn state: committed-looking files, no _SUCCESS
-        junk = spark.createDataFrame(
+        orphan = os.path.join(table, "data", "snap=1-torn")
+        spark.createDataFrame(
             [("torn", "torn", "torn", "literal", None, 0)],
             "subj string, pred string, obj_value string, obj_kind string,"
-            " obj_lang string, subj_bucket int")
-        junk.write.partitionBy("subj_bucket").parquet(table)
-        os.remove(os.path.join(table, "_SUCCESS"))
+            " obj_lang string, subj_bucket int",
+        ).write.partitionBy("subj_bucket").parquet(orphan)
 
         q = run_merge_to_triple_table(
             stream_triples(stream_mentions(
@@ -395,13 +402,16 @@ class TestStreamMergeTripleTable:
                                        max_files_per_trigger=1))),
             table, str(tmp_path / "ckpt"), buckets=4)
         q.awaitTermination(300)
-        got = {tuple(r) for r in spark.read.parquet(table)
+        got = {tuple(r) for r in read_snapshot(spark, table)
                .select(*TRIPLE_COLS).collect()}
         assert ("torn", "torn", "torn", "literal", None) not in got
         batch = mention_triples(
             detect_mentions(t).withColumn("score", F.lit(0.0))
         ).dropDuplicates(TRIPLE_COLS)
         assert got == {tuple(r) for r in batch.select(*TRIPLE_COLS).collect()}
+        assert "data/snap=1-torn" in expire_snapshots(
+            spark, table)["removed_dirs"]
+        assert not os.path.exists(orphan)
 
 
 class TestQuadStream:
@@ -522,14 +532,45 @@ class TestQuadStreamHashes:
         # simulate a crash after staging batch 2 but before its hash
         # commit: drop the last manifest (+ its data dir), then replay
         import glob as _glob
+        import json
         import shutil
         metas = sorted(_glob.glob(str(tmp_path / "hashes" / "_meta" / "v*.json")))
+        with open(metas[-1]) as f:
+            data_rel = json.load(f)["data"]
         os.remove(metas[-1])
-        shutil.rmtree(str(tmp_path / "hashes" / "data" /
-                          ("v%d" % len(metas))))
+        shutil.rmtree(str(tmp_path / "hashes" / data_rel))
         assert self._hashes(spark, tmp_path) != want  # state rolled back
         self._run(spark, tmp_path, ckpt="ckpt3")
         assert self._hashes(spark, tmp_path) == want
+
+    def test_lost_commit_race_keeps_winners_hashes(
+            self, spark, tmp_path, monkeypatch):
+        # the winner committed the latest version between this fold's
+        # version read and its commit (modelled by a stale listing): the
+        # fold must lose the CAS without overwriting the winner's data
+        from pyspark.errors import StreamingQueryException
+
+        from meresco_rdf_spark.kg import snapshots
+        from meresco_rdf_spark.sinks import write_nquads
+
+        self._run(spark, tmp_path)
+        before = self._hashes(spark, tmp_path)
+        write_nquads(spark.createDataFrame(
+            [("urn:g:a", "urn:s9", "urn:p", "late", "literal", None)],
+            TestQuadStream.SCHEMA), str(tmp_path / "in" / "more"),
+            num_files=1)
+
+        real, hashes = snapshots._manifest_versions, str(tmp_path / "hashes")
+
+        def stale(fs, hpath, root):
+            vs = real(fs, hpath, root)
+            return vs[:-1] if root == hashes else vs
+        with monkeypatch.context() as m:
+            m.setattr(snapshots, "_manifest_versions", stale)
+            with pytest.raises(StreamingQueryException,
+                               match="committed concurrently"):
+                self._run(spark, tmp_path)
+        assert self._hashes(spark, tmp_path) == before
 
     def test_reader_of_empty_root_is_empty(self, spark, tmp_path):
         from meresco_rdf_spark.streaming.quad_stream import read_graph_hashes

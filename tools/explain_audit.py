@@ -302,42 +302,37 @@ def main() -> None:
         re.search(r"Aggregate \[subj#\d+\]", p) is not None
         and re.search(r"Aggregate \[subj#\d+, _salt#\d+L?\]", p) is not None))
 
-    # MERGE: the read-modify-write of touched buckets must cost ONE
-    # exchange (the mandatory bucketed-write repartition) — the set-
-    # semantics dedup rides the same partitioning as a lag window
-    # (subj_bucket is a function of subj, so duplicates are adjacent
-    # under the write sort) instead of adding a second full-width
-    # dropDuplicates shuffle of every surviving row
-    import tempfile
-
-    from meresco_rdf_spark.kg.materialize import (
-        merge_triple_table,
-        write_triple_table,
-    )
+    # MERGE (kg/snapshots.py::snapshot_merge): the read-modify-write of
+    # touched buckets must cost ONE exchange (the mandatory bucketed-write
+    # repartition) — the set-semantics dedup rides the same partitioning
+    # as a lag window (subj_bucket is a function of subj, so duplicates
+    # are adjacent under the write sort) instead of adding a second
+    # full-width dropDuplicates shuffle of every surviving row
+    from meresco_rdf_spark.kg.materialize import with_subj_bucket
+    from meresco_rdf_spark.kg.snapshots import _merge_rows, snapshot_create
 
     tri = tpch_triples(spark, sf_dir)
-    mpath = os.path.join(tempfile.mkdtemp(prefix="audit_merge_"), "t")
-    write_triple_table(tri, mpath, buckets=8)
-    merge_triple_table(spark, mpath, adds=tri.limit(200), buckets=8)
-    # assert the pre-write plan through the SAME helper the merge calls
-    # (fused_bucket_dedup) so the audited plan is the shipped one
-    from meresco_rdf_spark.kg.materialize import (
-        fused_bucket_dedup,
-        with_subj_bucket,
-    )
-
-    existing = spark.read.parquet(mpath).filter(
-        F.col("subj_bucket").isin(list(range(8))))
-    merged = existing.unionByName(
-        with_subj_bucket(tri, 8).filter(F.col("subj_bucket").isin(
-            list(range(8)))))
-    deduped = fused_bucket_dedup(merged, 8)
-    p = plan_of(deduped)
+    mroot = os.path.join(scratch_dir("audit_merge_"), "t")
+    m1 = snapshot_create(spark, tri, mroot, buckets=8)
+    adds = with_subj_bucket(tri, 8).filter(
+        F.col("subj_bucket").isin(2, 5)).drop("subj_bucket")
+    # the merge's own pre-write plan (_scan of the touched buckets +
+    # fused_bucket_dedup), so the audited plan is the shipped one
+    touched, merged = _merge_rows(spark, mroot, m1, adds, None)
+    p = plan_of(merged)
     results.append(check(
         "merge: 1 exchange, window dedup fused",
         len(re.findall(r"Exchange", p)) == 1 and "Window" in p
         and "HashAggregate" not in p,
         ""))
+    # the manifest prunes the table scan to the touched buckets' dirs
+    files = [f for f in merged.inputFiles() if "/audit_merge_" in f]
+    dirs = ["/%s/" % m1["buckets"][str(b)] for b in touched]
+    results.append(check(
+        "merge: untouched buckets never opened",
+        0 < len(touched) < len(m1["buckets"]) and len(files) > 0
+        and all(any(d in f for d in dirs) for f in files),
+        "touched=%s files=%d" % (touched, len(files))))
 
     # decontamination: eval-gram probe is a broadcast join (the corpus
     # side never shuffles for the join); hit counting is a partial+final
