@@ -41,6 +41,7 @@ from .operators.graph_ops import (
     match_patterns,
     scan,
 )
+from .session import local_frame
 from .textops.dedup import (
     exact_dedup,
     minhash_dedup_pairs,
@@ -2301,7 +2302,8 @@ def q_graph_contains(spark, sf_dir):
     """O8 batch existence: masked membership probes resolved in ONE scan
     of the triples relation (probes broadcast; null = wildcard position),
     reference ``__contains__`` graph.py:99-100."""
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [(1, "urn:cust:1", FOAF_NAME, None),
          (2, None, REL_NATION, None),
          (3, "urn:nope:1", None, None),
@@ -3113,7 +3115,8 @@ def _rdfs_onto_df(spark):
         ("urn:class:Place", RDFS_SUBCLASS, "urn:class:Entity"),
         (SKOS_PREFLABEL, RDFS_SUBPROP, RDFS_LABEL),
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(s, p, o, "uri", None) for s, p, o in onto],
         "subj string, pred string, obj_value string, obj_kind string, "
         "obj_lang string")
@@ -3233,7 +3236,7 @@ def q_kg_publish_pipeline(spark, sf_dir):
     base = (read_rdf_directory(spark, base_dir)
             .drop("context").dropDuplicates())
 
-    onto = spark.createDataFrame([
+    onto = local_frame(spark, [
         (foaf + "Document", RDFS_SUBCLASS, "urn:class:Work", "uri", None),
         (foaf + "Person", RDFS_SUBCLASS, "urn:class:Agent", "uri", None),
         (dct + "creator", RDFS_DOMAIN, "urn:class:Work", "uri", None),
@@ -3318,7 +3321,7 @@ def q_rdfs_graphs_entailment(spark, sf_dir):
             F.lit("uri").alias("obj_kind"),
             F.lit(None).cast("string").alias("obj_lang"))
 
-    onto = spark.createDataFrame([
+    onto = local_frame(spark, [
         ("urn:g:cust", "urn:rel:in", RDFS_DOMAIN, "urn:class:Member",
          "uri", None),
         ("urn:g:cust", "urn:class:Member", RDFS_SUBCLASS,
@@ -3380,7 +3383,7 @@ def q_owl_graphs_entailment(spark, sf_dir):
                        F.concat(F.lit("urn:supp:"),
                                 F.col("s_suppkey").cast("string")),
                        "urn:rel:in", nuri("s_nationkey")))
-        .unionByName(spark.createDataFrame([
+        .unionByName(local_frame(spark, [
             ("urn:g:a", "urn:rel:in", RDF_TYPE, OWL_TRANSITIVE,
              "uri", None),
             ("urn:g:b", "urn:rel:in", OWL_INVERSE_OF, "urn:rel:hosts",
@@ -3427,7 +3430,8 @@ def q_owl_chain_entailment(spark, sf_dir):
                          "uri" if nxt == RDF_NIL else "bnode", None))
         return rows
 
-    schema = spark.createDataFrame(
+    schema = local_frame(
+        spark,
         chain("urn:rel:inRegion", (REL_NATION, REL_REGION), "a")
         + chain("urn:rel:zoneOf", ("urn:rel:inRegion", "urn:rel:zonemap"),
                 "b"),
@@ -3555,7 +3559,8 @@ def _owl_onto_df(spark):
         RDF_TYPE,
     )
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("urn:rel:within", OWL_INVERSE_OF, "urn:rel:contains", "uri", None),
          ("urn:rel:within", RDF_TYPE, OWL_TRANSITIVE, "uri", None),
          ("urn:rel:adjacentTo", RDF_TYPE, OWL_SYMMETRIC, "uri", None)],
@@ -3708,7 +3713,8 @@ def q_owl_equiv_entailment(spark, sf_dir):
             supp, F.concat(F.lit("urn:supp:"), skey), RDF_TYPE,
             F.when(F.col("s_suppkey") % 2 == 0, F.lit("urn:class:Corp"))
             .otherwise(F.lit("urn:class:Firm")))))
-    onto = spark.createDataFrame(
+    onto = local_frame(
+        spark,
         [("urn:rel:locatedIn", OWL_EQUIV_PROPERTY, "urn:rel:within",
           "uri", None),
          ("urn:rel:within", OWL_INVERSE_OF, "urn:rel:contains",
@@ -3766,7 +3772,8 @@ def q_kg_key_sameas(spark, sf_dir):
         .unionByName(rows(
             supp, F.concat(F.lit("urn:supp:"), skey), "urn:rel:homeNation",
             F.concat(F.lit("urn:alt:nation:"), nkey), "uri")))
-    schema = spark.createDataFrame(
+    schema = local_frame(
+        spark,
         [("urn:key:acct", RDF_TYPE, OWL_INV_FUNCTIONAL, "uri", None),
          ("urn:rel:homeNation", RDF_TYPE, OWL_FUNCTIONAL, "uri", None)],
         "subj string, pred string, obj_value string, obj_kind string, "
@@ -4154,7 +4161,8 @@ def q_scalar_matches_iri(spark, sf_dir):
     of re-deriving them."""
     from .functions.scalar_fns import matches_iri
 
-    df = spark.createDataFrame(
+    df = local_frame(
+        spark,
         [(c,) for c, _ in _IRI_CASES], "candidate string")
     return df.select(
         "candidate", matches_iri(F.col("candidate")).alias("is_iri"))
@@ -5533,7 +5541,8 @@ def q_text_bpe(spark, sf_dir):
 
     merges = train_bpe(_synth_transcripts(spark), n_merges=10,
                        min_count=2)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, l, rt, n) for r, l, rt, n in merges],
         "rank int, left string, right string, n long")
 

@@ -38,6 +38,7 @@ import time
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..fixpoint import log_round, rounds
+from ..session import local_frame
 from .extract import OWL_SAMEAS, SURFACE_URI_PREFIX
 
 # Distinct surface keys up to which similarity is computed on the driver
@@ -152,7 +153,8 @@ def similar_surface_pairs(surfaces: DataFrame,
         if n_surfaces <= local_threshold:
             keys = [r[0] for r in base.select(key_col).collect()]
             spark = surfaces.sparkSession
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 _local_pairs(keys, n, threshold),
                 "a string, b string, jaccard double")
         return _lsh_pairs(base, key_col, k, bands, rows, threshold)
@@ -275,7 +277,8 @@ def connected_components(edges: DataFrame,
         from pyspark.sql.types import StructField, StructType
 
         node_type = e.schema["u"].dataType
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             sorted(comp.items()),
             StructType([StructField("node", node_type),
                         StructField("component", node_type)]))
@@ -369,7 +372,8 @@ def canonical_surface_map(surfaces: DataFrame,
                          + canonical.replace(" ", "-")))
         if len(named) < len(keys):
             rows.append((None, None, None))  # as the left join maps NULL
-        return surfaces.sparkSession.createDataFrame(
+        return local_frame(
+            surfaces.sparkSession,
             rows, "surface_key string, canonical_key string, "
                   "canonical_uri string")
     distinct = distinct.persist()

@@ -27,6 +27,8 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
+
 MENTIONS = "mentions"  # per-bucket checkpoint root under the output dir
 
 MANIFEST_SCHEMA = (
@@ -58,7 +60,7 @@ def input_fingerprints(transcripts: DataFrame, n_buckets: int) -> DataFrame:
 
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame:
     if not os.path.exists(manifest_path):
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return local_frame(spark, [], MANIFEST_SCHEMA)
     return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
 
 
@@ -127,7 +129,7 @@ def record_done(spark: SparkSession, manifest_path: str, bucket: int,
                 n_buckets: int) -> None:
     row = [(bucket, "done", n_turns, n_mentions, n_triples,
             input_fingerprint, run_id, time.time(), n_buckets)]
-    spark.createDataFrame(row, MANIFEST_SCHEMA).write.mode("append").parquet(
+    local_frame(spark, row, MANIFEST_SCHEMA).write.mode("append").parquet(
         manifest_path)
 
 
@@ -156,6 +158,6 @@ def drop_stale_buckets(spark: SparkSession, out_dir: str,
     if stale:
         rows = [(b, "deleted", 0, 0, 0, "", run_id, time.time(), None)
                 for b in stale]
-        spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode(
+        local_frame(spark, rows, MANIFEST_SCHEMA).write.mode(
             "append").parquet(manifest_path)
     return sorted(stale)

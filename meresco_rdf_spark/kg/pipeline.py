@@ -21,6 +21,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from ..session import local_frame
 from .canonicalize import canonical_surface_map
 from .checkpoint import (
     MENTIONS,
@@ -110,7 +111,11 @@ def run_checkpointed(spark: SparkSession, transcripts: DataFrame,
     mentions (one collect below ``LOCAL_SURFACES`` keys), one count that
     fills the cache of the final triples, and the two table writes, both
     reading that cache.  Clean buckets cost nothing but their share of
-    the fingerprint aggregation and their mentions' re-read.
+    the fingerprint aggregation and their mentions' re-read.  The only
+    Python tasks of a delta are the extraction's (``detect_mentions``):
+    the manifest rows and the driver-built canonical map are
+    :func:`~meresco_rdf_spark.session.local_frame` relations, scanned in
+    the JVM.
     """
     from .extract import pipeline_triples
 
@@ -157,7 +162,7 @@ def run_checkpointed(spark: SparkSession, transcripts: DataFrame,
     else:
         # a fresh empty input, or a resume after every conversation was
         # deleted (drop_stale_buckets removed all subtrees)
-        mentions = spark.createDataFrame([], MENTION_SCHEMA)
+        mentions = local_frame(spark, [], MENTION_SCHEMA)
     # already materialized (a driver-built relation, or checkpointed on
     # the distributed path): caching it again would only add a cache
     # stage in front of each of its broadcasts

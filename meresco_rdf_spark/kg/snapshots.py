@@ -41,6 +41,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
 from .materialize import (
     TRIPLE_COLS,
     TRIPLE_SORT,
@@ -311,7 +312,8 @@ def _scan(spark: SparkSession, root: str, manifest: dict,
         items = [(b, p) for b, p in items if b in want]
     paths = [root + "/" + p for _, p in sorted(items)]
     if not paths:
-        return with_subj_bucket(spark.createDataFrame(
+        return with_subj_bucket(local_frame(
+            spark,
             [], ", ".join("%s string" % c for c in TRIPLE_COLS)),
             manifest["n_buckets"])
     return (spark.read.option("basePath", root + "/data")

@@ -28,6 +28,7 @@ from ..model import (
     triple_schema,
 )
 from ..namespaces import namespaces as default_namespaces
+from ..session import local_frame
 
 TRIPLE_COLS = ["subj", "pred", "obj_value", "obj_kind", "obj_lang"]
 
@@ -40,7 +41,7 @@ def triples_df(spark: SparkSession, triples: Iterable[tuple]) -> DataFrame:
     """Local (s, p, node) triples -> triples DataFrame (test-scale entry;
     the scale path produces triple rows directly from extraction UDFs)."""
     rows = [node_to_row(s, p, o) for s, p, o in triples]
-    return spark.createDataFrame(rows, schema=triple_schema())
+    return local_frame(spark, rows, triple_schema())
 
 
 def add_triples(df: DataFrame, new: DataFrame) -> DataFrame:
@@ -197,7 +198,8 @@ def find_labels(df: DataFrame,
     beyond hot subjects, which AQE handles)."""
     preds = list(label_predicates)
     if not preds:
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
             [], "subj string, label_value string, label_lang string")
     langs = list(lang_priority)
     lang_rank = F.when(F.col("obj_lang").isNull(), F.lit(len(langs)))

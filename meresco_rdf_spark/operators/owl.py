@@ -75,6 +75,7 @@ from typing import Dict, Iterable, List, Set, Tuple
 from pyspark.sql import DataFrame, functions as F
 
 from ..fixpoint import fixpoint
+from ..session import local_frame
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 OWL_INVERSE_OF = "http://www.w3.org/2002/07/owl#inverseOf"
@@ -300,7 +301,8 @@ def orbit_expand(triples: DataFrame, schema: OwlSchema) -> DataFrame:
         return triples.select(*_TRIPLE_COLS)
     triples = triples.select(*_TRIPLE_COLS)
     spark = triples.sparkSession
-    orbit_df = spark.createDataFrame(
+    orbit_df = local_frame(
+        spark,
         schema.orbit_rows, "a string, b string, swapped boolean")
     hit = triples.join(F.broadcast(orbit_df),
                        triples["pred"] == orbit_df["a"])
@@ -331,7 +333,7 @@ def class_expand(triples: DataFrame, schema: OwlSchema) -> DataFrame:
     if not schema.class_rows:
         return triples.select(*_TRIPLE_COLS).limit(0)
     spark = triples.sparkSession
-    cls_df = spark.createDataFrame(schema.class_rows, "c string, d string")
+    cls_df = local_frame(spark, schema.class_rows, "c string, d string")
     return (triples.select(*_TRIPLE_COLS)
             .filter(F.col("pred") == RDF_TYPE)
             .join(F.broadcast(cls_df), F.col("obj_value") == F.col("c"))
@@ -387,7 +389,7 @@ def owl_key_links(triples: DataFrame,
                      .select(F.col("_rep").alias("a"),
                              F.col("subj").alias("b")))
     if not parts:
-        return spark.createDataFrame([], "a string, b string")
+        return local_frame(spark, [], "a string, b string")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

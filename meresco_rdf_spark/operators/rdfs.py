@@ -46,6 +46,7 @@ from typing import List, Tuple
 from pyspark.sql import DataFrame, functions as F
 
 from ..fixpoint import fixpoint
+from ..session import local_frame
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDFS_SUBCLASS = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
@@ -180,9 +181,7 @@ def rdfs_closure(triples: DataFrame,
         rng_closed = _compose(_compose(sp_refl, rng), sc_refl)
 
         def as_df(pairs):
-            if not pairs:
-                return spark.createDataFrame([], _PAIR_SCHEMA)
-            return spark.createDataFrame(pairs, _PAIR_SCHEMA)
+            return local_frame(spark, pairs, _PAIR_SCHEMA)
 
         sp_df, sc_df = as_df(sp), as_df(sc)
         dom_df, rng_df = as_df(dom_closed), as_df(rng_closed)
@@ -368,7 +367,7 @@ def rdfs_closure_quads(quads: DataFrame,
     gp = "g string, a string, b string"
 
     def as_df(rows):
-        return spark.createDataFrame(rows or [], gp)
+        return local_frame(spark, rows, gp)
 
     sp_df, sc_df = as_df(sp_rows), as_df(sc_rows)
     dom_df, rng_df = as_df(dom_rows), as_df(rng_rows)

@@ -91,6 +91,8 @@ from typing import Iterable, List, Optional, Union
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 RDF_FIRST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#first"
 RDF_REST = "http://www.w3.org/1999/02/22-rdf-syntax-ns#rest"
@@ -584,7 +586,8 @@ def validate(triples: DataFrame, shapes: Union[List[dict], Iterable[tuple]],
     if with_severity:
         rcols.append("severity")
     if not targeted:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], ", ".join("%s string" % c for c in rcols))
 
     # -- focus resolution ---------------------------------------------------
@@ -612,7 +615,8 @@ def validate(triples: DataFrame, shapes: Union[List[dict], Iterable[tuple]],
             # explicit nodes are focus nodes whether or not they appear in
             # the data (SHACL: a targetNode with a minCount that finds no
             # triples MUST still yield the zero-count violation)
-            nodes = F.broadcast(spark.createDataFrame(
+            nodes = F.broadcast(local_frame(
+                spark,
                 [(shape["id"], n) for n in shape["target_node"]],
                 "shape_id string, focus string"))
             if per_graph:
@@ -831,7 +835,8 @@ def _report_for_focus(triples: DataFrame, shapes: List[dict],
         or prop.get("has_value") is not None
     ]
     if expect_rows:
-        expected = F.broadcast(spark.createDataFrame(
+        expected = F.broadcast(local_frame(
+            spark,
             expect_rows,
             "shape_id string, path string, min_count int, max_count int, "
             "has_value string"))
@@ -1156,7 +1161,8 @@ def _report_for_focus(triples: DataFrame, shapes: List[dict],
                 F.col("focus").alias("value")).select(*rcols))
 
     if not reports:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], ", ".join("%s string" % c for c in rcols))
     out = reports[0]
     for part in reports[1:]:
@@ -1240,7 +1246,8 @@ def report_triples(report: DataFrame,
         node.alias("obj_value"), F.lit("bnode").alias("obj_kind"),
         F.lit(None).cast("string").alias("obj_lang"))
     conforms_val = "false" if rep.limit(1).count() else "true"
-    header = spark.createDataFrame(
+    header = local_frame(
+        spark,
         [(report_node, RDF_TYPE, SH + "ValidationReport", "uri", None),
          (report_node, SH + "conforms", conforms_val, "literal", None)],
         "subj string, pred string, obj_value string, obj_kind string, "

@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 ENGINE_CONFS = {
     # runtime re-planning: partition coalescing, skew-join splitting,
@@ -52,6 +53,37 @@ def get_spark(app_name: str = "meresco_rdf_spark",
     spark = builder.getOrCreate()
     ship_package(spark)
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples, lists or ``Row``s,
+    matched to ``schema`` by position, as on the list path; ``schema`` is a
+    ``StructType`` or a DDL string), shipped as one Arrow table.
+
+    It plans as a ``LocalTableScan``: scanning it starts no Python worker.
+    ``spark.createDataFrame(<list>)`` would pickle the rows into a
+    ``PythonRDD`` whose every scan runs an identity map in Python workers.
+    Values are typed by ``pa.array(values, type=...)`` per column, so NULLs
+    keep int and long columns intact; a NULL in a non-nullable column
+    raises, as the list path's schema check did.  A naive datetime in a
+    timestamp column is read in the session time zone (UTC), not in the
+    Python process's local zone as the list path did."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = (schema if isinstance(schema, StructType)
+              else StructType.fromDDL(schema))
+    arrow_schema = to_arrow_schema(struct)
+    rows = list(rows)
+    arrays = []
+    for i, (field, arrow_field) in enumerate(zip(struct.fields, arrow_schema)):
+        arr = pa.array([row[i] for row in rows], type=arrow_field.type)
+        if arr.null_count and not field.nullable:
+            raise ValueError("field %s: not nullable, but got None"
+                             % field.name)
+        arrays.append(arr)
+    table = pa.Table.from_arrays(arrays, schema=arrow_schema)
+    return spark.createDataFrame(table, struct)
 
 
 def ship_package(spark: SparkSession) -> None:

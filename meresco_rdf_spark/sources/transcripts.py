@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..session import local_frame
+
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
@@ -94,4 +96,4 @@ def gazetteer_df(spark: SparkSession) -> DataFrame:
     """(alias, entity_id, alias_len) dimension table — small, broadcastable."""
     rows = [(alias, entity, len(alias))
             for entity, aliases in GAZETTEER.items() for alias in aliases]
-    return spark.createDataFrame(rows, "alias string, entity string, alias_len int")
+    return local_frame(spark, rows, "alias string, entity string, alias_len int")

@@ -37,6 +37,7 @@ from typing import Dict, List, Optional as Opt, Sequence, Set, Tuple
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..fixpoint import fixpoint
+from ..session import local_frame
 from .parser import (
     Arith,
     BindPattern,
@@ -843,7 +844,7 @@ def _compile_values(spark, part: ValuesPattern) -> Tuple[DataFrame, Set[str]]:
         for term in row:
             flat.extend(_values_term_tuple(term))
         rows.append(tuple(flat))
-    df = spark.createDataFrame(rows, StructType(fields))
+    df = local_frame(spark, rows, StructType(fields))
     return df, set(part.variables)
 
 
@@ -1812,7 +1813,7 @@ def sparql_describe(triples: DataFrame, query: str,
     seeds: Opt[DataFrame] = None
     consts = [t.uri for t in ast.describe_terms if isinstance(t, Iri)]
     if consts:
-        seeds = spark.createDataFrame([(c,) for c in consts], "node string")
+        seeds = local_frame(spark, [(c,) for c in consts], "node string")
     var_terms = [t for t in ast.describe_terms if isinstance(t, Var)]
     if var_terms:
         df, vars_ = _compile_group(triples, ast.where, pattern_stats,
@@ -1998,7 +1999,7 @@ def _ground_template_df(spark, template) -> DataFrame:
     schema = StructType([StructField(c, StringType(), True)
                          for c in ("subj", "pred", "obj_value",
                                    "obj_kind", "obj_lang")])
-    return spark.createDataFrame(rows, schema).dropDuplicates()
+    return local_frame(spark, rows, schema).dropDuplicates()
 
 
 def sparql_update_sets(triples: DataFrame, request: str,
@@ -2188,7 +2189,7 @@ def _ground_quads_df(spark, template, graphs) -> DataFrame:
             for (s, p, o), label in zip(template, graphs)]
     schema = StructType([StructField(c, StringType(), True)
                          for c in _QUAD_COLS])
-    return spark.createDataFrame(rows, schema).dropDuplicates()
+    return local_frame(spark, rows, schema).dropDuplicates()
 
 
 def remove_quads(quads: DataFrame, dels: DataFrame) -> DataFrame:

@@ -25,11 +25,38 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+from ..kg.snapshots import _fs
+from ..session import local_frame
 
 QUAD_COLS = ["context", "subj", "pred", "obj_value", "obj_kind",
              "obj_lang"]
+
+
+def _read_quads(spark: SparkSession, table_path: str,
+                partition_ddl: str = "") -> Optional[DataFrame]:
+    """The quad table, or None before the first batch wrote it.  Probing
+    with ``exists`` (not a read that fails) keeps a missing path out of
+    Spark's metadata lookup, which logs a WARN stack trace for it; the
+    explicit schema, partition columns included, reads a directory whose
+    first write never committed a file as empty."""
+    fs, hpath = _fs(spark, table_path)
+    if not fs.exists(hpath(table_path)):
+        return None
+    return spark.read.schema(
+        ", ".join("%s string" % c for c in QUAD_COLS) + partition_ddl
+    ).parquet(table_path)
+
+
+def _novel(fresh: DataFrame, current: DataFrame) -> DataFrame:
+    """``fresh`` minus ``current`` on the null-safe 6-column quad key (the
+    default graph is a NULL context)."""
+    cond = None
+    for c in QUAD_COLS:
+        eq = fresh[c].eqNullSafe(current[c])
+        cond = eq if cond is None else cond & eq
+    return fresh.join(current, cond, "left_anti")
 
 
 def read_nquads_stream(spark: SparkSession, path: str,
@@ -59,15 +86,9 @@ def run_nquads_to_quad_table(quads: DataFrame, table_path: str,
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         fresh = batch.select(*QUAD_COLS).dropDuplicates(QUAD_COLS)
-        try:
-            current = spark.read.parquet(table_path)
-            cond = None
-            for c in QUAD_COLS:
-                eq = fresh[c].eqNullSafe(current[c])
-                cond = eq if cond is None else cond & eq
-            fresh = fresh.join(current, cond, "left_anti")
-        except AnalysisException:  # first batch: no table yet
-            pass  # (real read errors — corrupt files etc. — propagate)
+        current = _read_quads(spark, table_path)
+        if current is not None:
+            fresh = _novel(fresh, current)
         fresh.write.mode("append").parquet(table_path)
 
     return (quads.writeStream.foreachBatch(merge)
@@ -124,7 +145,6 @@ def run_nquads_with_graph_hashes(quads: DataFrame, table_path: str,
     from ..kg.fingerprint import graph_content_hashes
     from ..kg.snapshots import (
         _commit_manifest,
-        _fs,
         _load_manifest,
         _manifest_versions,
     )
@@ -136,17 +156,10 @@ def run_nquads_with_graph_hashes(quads: DataFrame, table_path: str,
         bdir = "%s/batch=%d" % (table_path, batch_id)
         if not fs.exists(hpath("%s/_SUCCESS" % bdir)):
             fresh = batch.select(*QUAD_COLS).dropDuplicates(QUAD_COLS)
-            try:
-                current = (spark.read.parquet(table_path)
-                           .filter(F.col("batch") != batch_id)
-                           .select(*QUAD_COLS))
-                cond = None
-                for c in QUAD_COLS:
-                    eq = fresh[c].eqNullSafe(current[c])
-                    cond = eq if cond is None else cond & eq
-                fresh = fresh.join(current, cond, "left_anti")
-            except AnalysisException:  # first batch: no table yet
-                pass
+            current = _read_quads(spark, table_path, ", batch int")
+            if current is not None:
+                fresh = _novel(fresh, current.filter(
+                    F.col("batch") != batch_id).select(*QUAD_COLS))
             fresh.write.mode("overwrite").parquet(bdir)
         staged = spark.read.parquet(bdir).select(*QUAD_COLS)
 
@@ -189,12 +202,13 @@ def run_nquads_with_graph_hashes(quads: DataFrame, table_path: str,
 def read_graph_hashes(spark: SparkSession, hash_root: str) -> DataFrame:
     """The latest COMMITTED per-graph hash state (manifest-resolved;
     uncommitted version directories are invisible)."""
-    from ..kg.snapshots import _fs, _load_manifest, _manifest_versions
+    from ..kg.snapshots import _load_manifest, _manifest_versions
 
     fs, hpath = _fs(spark, hash_root)
     vs = _manifest_versions(fs, hpath, hash_root)
     if not vs:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "graph string, n_triples long, content_hash long")
     m = _load_manifest(fs, hpath, hash_root, vs[-1])
     return spark.read.parquet("%s/%s" % (hash_root, m["data"]))

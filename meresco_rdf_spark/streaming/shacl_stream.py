@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..kg.snapshots import _fs
 from ..operators.shacl import RDF_TYPE, _check_shapes, _PAIR_KEYS, validate
+from ..session import local_frame
 
 TRIPLE_COLS = ["subj", "pred", "obj_value", "obj_kind", "obj_lang"]
 REPORT_COLS = ["shape_id", "focus", "path", "constraint", "value"]
@@ -114,7 +115,8 @@ def _affected_focus(spark, shapes: list[dict], new_rows: DataFrame,
                 F.col("pred") == shape["target_objects_of"])
                 .select(sid, F.col("obj_value").alias("focus")))
         if shape.get("target_node"):
-            parts.append(spark.createDataFrame(
+            parts.append(local_frame(
+                spark,
                 [(shape["id"], n) for n in shape["target_node"]],
                 "shape_id string, focus string"))
         preds = set()

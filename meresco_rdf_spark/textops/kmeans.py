@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 SCALE = 1 << 20
 
 
@@ -207,7 +209,8 @@ def ivf_kmeans_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
             probe_pairs.append((r.query_id, int(b) + 1))
         qid_to_vec[r.query_id] = qv
     spark = corpus.sparkSession
-    probe_df = spark.createDataFrame(
+    probe_df = local_frame(
+        spark,
         probe_pairs, "query_id long, bucket int")
 
     # |Q| x probes rows — always the broadcast side, whatever the stats

@@ -35,3 +35,14 @@ def test_hadoop_filesystem_is_opened_only_by_snapshots():
         str(path.relative_to(PKG.parent)) for path in PKG.rglob("*.py")
         if "getFileSystem(" in path.read_text())
     assert opened == ["meresco_rdf_spark/kg/snapshots.py"]
+
+
+def test_driver_rows_become_frames_only_through_local_frame():
+    # createDataFrame over a Python list plans a PythonRDD: every scan of
+    # the frame starts Python workers to run an identity map.
+    # session.local_frame ships the rows as one Arrow table instead
+    # (a LocalTableScan), so it is the package's only createDataFrame
+    built = sorted(
+        str(path.relative_to(PKG.parent)) for path in PKG.rglob("*.py")
+        if "createDataFrame(" in path.read_text())
+    assert built == ["meresco_rdf_spark/session.py"]

@@ -471,6 +471,28 @@ class TestQuadStream:
         q.awaitTermination(300)
         assert spark.read.parquet(table).count() == n1
 
+    def test_first_write_that_committed_nothing_reads_empty(self, spark,
+                                                            tmp_path):
+        # a crash inside the first append leaves the table directory
+        # with no data file; its replay must see an empty table, not
+        # fail on schema inference
+        from meresco_rdf_spark.streaming.quad_stream import (
+            read_nquads_stream,
+            run_nquads_to_quad_table,
+        )
+
+        in_dir = str(tmp_path / "in")
+        self._write_slices(spark, in_dir)
+        table = tmp_path / "table"
+        (table / "_temporary" / "0").mkdir(parents=True)
+        q = run_nquads_to_quad_table(
+            read_nquads_stream(spark, in_dir, glob="*.txt"), str(table),
+            str(tmp_path / "ckpt"))
+        q.awaitTermination(300)
+        assert q.exception() is None
+        got = {tuple(r) for r in spark.read.parquet(str(table)).collect()}
+        assert got == set(map(tuple, self.QUADS))
+
 
 class TestQuadStreamHashes:
     """Incremental per-graph content hashes riding the quad ingest
@@ -542,6 +564,15 @@ class TestQuadStreamHashes:
         assert self._hashes(spark, tmp_path) != want  # state rolled back
         self._run(spark, tmp_path, ckpt="ckpt3")
         assert self._hashes(spark, tmp_path) == want
+
+    def test_crash_inside_first_stage_recovers(self, spark, tmp_path):
+        # a crash inside batch 0's stage write leaves only its temporary
+        # dir: the replay must read the table as empty, not fail on the
+        # missing ``batch`` partition column
+        (tmp_path / "table" / "batch=0" / "_temporary" / "0").mkdir(
+            parents=True)
+        self._run(spark, tmp_path)
+        assert self._hashes(spark, tmp_path) == self._batch_hashes(spark)
 
     def test_lost_commit_race_keeps_winners_hashes(
             self, spark, tmp_path, monkeypatch):
