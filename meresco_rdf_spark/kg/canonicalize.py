@@ -93,14 +93,15 @@ def lsh_bands(sig_col: str, bands: int, rows: int) -> Column:
 
 def _local_pairs(keys, n: int, threshold: float):
     """Driver-side EXACT all-pairs Jaccard over char shingles — ground
-    truth (a superset of what LSH candidate generation can find)."""
+    truth (a superset of what LSH candidate generation can find).  A
+    NULL key pairs with nothing, as on the LSH path."""
     def shingle_set(key):
         padded = " %s " % key
         if len(padded) <= n:
             return {padded}
         return {padded[i:i + n] for i in range(len(padded) - n + 1)}
 
-    keys = sorted(keys)
+    keys = sorted(k for k in keys if k is not None)
     sh = {key: shingle_set(key) for key in keys}
     out = []
     for i, a in enumerate(keys):

@@ -187,6 +187,15 @@ def _conv_uri():
     return F.concat(F.lit(CONV_URI_PREFIX), F.col("conv_id"))
 
 
+def _with_node_ids(mentions: DataFrame) -> DataFrame:
+    """``mentions`` plus its bnode label (``_bnode``) and conversation URI
+    (``_conv_uri``) as columns, projected once before a fan-out: written
+    inline in the exploded array, each is computed once per emitted
+    triple (six ``sha1`` per mention), not once per mention."""
+    return mentions.select(
+        "*", _mention_bnode().alias("_bnode"), _conv_uri().alias("_conv_uri"))
+
+
 def _triple(subj, pred, obj_value, kind, lang=None):
     """One five-column triple as a struct (for explode fan-outs)."""
     return F.struct(
@@ -225,15 +234,15 @@ def mention_triples(mentions: DataFrame) -> DataFrame:
     Dedup is deferred to the caller (set semantics, reference
     graph.py:45-51): one hash shuffle at the end of the stage.
     """
-    bnode = _mention_bnode()
-    conv_uri = _conv_uri()
     surf_uri = F.concat(
         F.lit(SURFACE_URI_PREFIX), F.replace(F.col("surface_key"), F.lit(" "), F.lit("-")))
+    m = _with_node_ids(mentions).withColumn("_surf_uri", surf_uri)
+    bnode, conv_uri, surf_uri = F.col("_bnode"), F.col("_conv_uri"), F.col("_surf_uri")
     fanout = F.array(
         *_mention_fanout(bnode, conv_uri, surf_uri),
         _triple(conv_uri, KG_MENTIONS, surf_uri, "uri"),
     )
-    return mentions.select(F.explode(fanout).alias("t")).select("t.*")
+    return m.select(F.explode(fanout).alias("t")).select("t.*")
 
 
 def pipeline_triples(mentions: DataFrame, canon: DataFrame) -> DataFrame:
@@ -250,7 +259,7 @@ def pipeline_triples(mentions: DataFrame, canon: DataFrame) -> DataFrame:
       mention, and each mention emits one triple per distinct predicate;
     - conversation->entity edges: explicit ``distinct`` on the (tiny-per-
       conv) pair set after canonicalization;
-    - per-entity label triples: produced by aggregation keyed on the
+    - per-entity label triples: produced by one aggregation keyed on the
       output subject;
     - owl:sameAs provenance: one row per non-identity map entry.
 
@@ -261,11 +270,11 @@ def pipeline_triples(mentions: DataFrame, canon: DataFrame) -> DataFrame:
     from .canonicalize import sameas_triples
 
     canon_b = F.broadcast(canon.select("surface_key", "canonical_uri"))
-    m = mentions.join(canon_b, "surface_key")
+    m = _with_node_ids(mentions.join(canon_b, "surface_key"))
 
-    conv_uri = _conv_uri()
+    conv_uri = F.col("_conv_uri")
     fanout = F.array(*_mention_fanout(
-        _mention_bnode(), conv_uri, F.col("canonical_uri")))
+        F.col("_bnode"), conv_uri, F.col("canonical_uri")))
     bnode_triples = m.select(F.explode(fanout).alias("t")).select("t.*")
 
     conv_edges = (
@@ -300,27 +309,26 @@ def label_triples_from_counts(counts: DataFrame) -> DataFrame:
     totals across the whole corpus: electing per surface-form or per
     bucket gives merged entities several competing ``foaf:name`` rows.
 
-    Two hash aggregations (both partial-aggregatable), output unique by
-    construction — no dedup shuffle."""
-    best = counts.groupBy("canonical_uri").agg(
-        F.min_by("surface", F.struct(
-            (-F.col("n")).alias("neg"), F.col("surface"))).alias("best_surface"))
-    names = best.select(
-        F.col("canonical_uri").alias("subj"), F.lit(FOAF_NAME).alias("pred"),
-        F.col("best_surface").alias("obj_value"),
-        F.lit("literal").alias("obj_kind"), F.lit(None).cast("string").alias("obj_lang"))
-    alts = (
-        counts.join(best, "canonical_uri")
-        .filter(F.col("surface") != F.col("best_surface"))
+    One aggregation keyed ``canonical_uri``: each entity's forms are
+    collected as ``(-n, surface)`` structs and sorted, so position 0 of
+    the array is the elected name and the rest are its alternatives.  No
+    join and no dedup: ``counts`` is unique on ``(canonical_uri,
+    surface)``, so each form appears once in its entity's array.  The
+    array is bounded by one entity's distinct surface forms, not by its
+    mention count."""
+    forms = counts.groupBy("canonical_uri").agg(F.sort_array(F.collect_list(
+        F.struct((-F.col("n")).alias("neg"), F.col("surface").alias("surface"))
+    )).alias("forms"))
+    return (
+        forms.select("canonical_uri", F.posexplode("forms").alias("pos", "form"))
         .select(
             F.col("canonical_uri").alias("subj"),
-            F.lit(SKOS_ALTLABEL).alias("pred"),
-            F.col("surface").alias("obj_value"),
+            F.when(F.col("pos") == 0, F.lit(FOAF_NAME))
+            .otherwise(F.lit(SKOS_ALTLABEL)).alias("pred"),
+            F.col("form.surface").alias("obj_value"),
             F.lit("literal").alias("obj_kind"),
             F.lit(None).cast("string").alias("obj_lang"))
-        .dropDuplicates(["subj", "obj_value"])
     )
-    return names.unionByName(alts)
 
 
 KG_USED_TOOL = KG + "usedTool"    # conversation -> Uri(tool)

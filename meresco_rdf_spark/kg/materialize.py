@@ -7,12 +7,19 @@ North_star step (d).  Layout decisions, stated for the 100 TB case:
   ``subj_bucket = pmod(xxhash64(subj), N)`` as a partition column — which
   is exactly what an Iceberg ``bucket(N, subj)`` partition transform
   computes).  Subject point-lookups prune to 1/N of the files; rows are
-  sorted within partitions by (subj, pred, obj_value) so parquet row-group
-  min/max stats prune within files too.
+  sorted within partitions by ``(subj_bucket, *TRIPLE_SORT)`` so parquet
+  row-group min/max stats prune within files too.  The leading
+  ``subj_bucket`` is what makes that order hold in the files: the
+  partitioned write requires its rows ordered by the partition column,
+  and a sort that does not start with it is replaced by the writer's own
+  sort on ``subj_bucket`` alone.
 - **adjacency table**: one row per subject with a sorted array of
   (pred, obj_value, obj_kind, obj_lang) structs — the "gather the
   resource description" access path the reference serializer walks
-  (triples2rdfxml.py:79-104) without an N-way shuffle per query.
+  (triples2rdfxml.py:79-104) without an N-way shuffle per query.  Its
+  write takes one exchange: the rows are hash-partitioned on
+  ``subj_bucket`` first, and that partitioning already satisfies the
+  aggregation keyed ``(subj_bucket, subj)``.
 - both writes flow through ``bucketed`` partitioning; re-running a bucket
   overwrites only that bucket (dynamic partition overwrite), which is what
   makes the checkpoint/resume unit a bucket.
@@ -37,18 +44,21 @@ def write_triple_table(triples: DataFrame, path: str, buckets: int = 64,
     (
         with_subj_bucket(triples, buckets)
         .repartition(buckets, "subj_bucket")
-        .sortWithinPartitions(*TRIPLE_SORT)
+        .sortWithinPartitions("subj_bucket", *TRIPLE_SORT)
         .write.mode(mode)
         .partitionBy("subj_bucket")
         .parquet(path)
     )
 
 
-def adjacency(triples: DataFrame) -> DataFrame:
+def adjacency(triples: DataFrame, keys: tuple = ("subj",)) -> DataFrame:
     """Per-subject adjacency: sorted struct array + degree.
 
-    One hash-agg keyed subj (partial map-side combine; the sort is
-    per-array, executed inside the agg output projection).
+    One hash-agg keyed ``keys`` (partial map-side combine; the sort is
+    per-array, executed inside the agg output projection).  ``keys``
+    must end in ``subj`` and may only add columns that are functions of
+    it: :func:`adjacency_rows` groups by ``(subj_bucket, subj)`` so the
+    aggregation reuses the write's partitioning.
 
     HUB BOUND: ``collect_list`` materializes one array row per subject,
     so a degree-d hub builds a d-element array in a single task's agg
@@ -59,7 +69,7 @@ def adjacency(triples: DataFrame) -> DataFrame:
     edge = F.struct(
         F.col("pred"), F.col("obj_value"), F.col("obj_kind"), F.col("obj_lang"))
     return (
-        triples.groupBy("subj")
+        triples.groupBy(*keys)
         .agg(F.sort_array(F.collect_list(edge)).alias("edges"))
         .withColumn("degree", F.size(F.col("edges")))
     )
@@ -131,21 +141,40 @@ def adjacency_topk(triples: DataFrame, k: int = 128,
         F.sum("n").alias("degree"))
 
 
+def adjacency_rows(triples: DataFrame, buckets: int = 64,
+                   chunk_size: int | None = None) -> DataFrame:
+    """The rows :func:`write_adjacency_table` writes, partitioned and
+    sorted for the bucketed write — shared with the plan audit
+    (``tools/explain_audit.py``) so the asserted plan IS the shipped one.
+
+    ``chunk_size=None`` is the one-row-per-subject table, in one
+    exchange: the hash partitioning on ``subj_bucket`` satisfies the
+    aggregation keyed ``(subj_bucket, subj)``, so the aggregation adds
+    no exchange of its own.  A ``subj_bucket`` column already on
+    ``triples`` (a read-back triple table) is recomputed for
+    ``buckets``."""
+    if chunk_size is None:
+        return (
+            adjacency(with_subj_bucket(triples, buckets)
+                      .repartition(buckets, "subj_bucket"),
+                      keys=("subj_bucket", "subj"))
+            .sortWithinPartitions("subj_bucket", "subj")
+        )
+    return (
+        with_subj_bucket(adjacency_chunked(triples, chunk_size), buckets)
+        .repartition(buckets, "subj_bucket")
+        .sortWithinPartitions("subj_bucket", "subj", "chunk_id")
+    )
+
+
 def write_adjacency_table(triples: DataFrame, path: str, buckets: int = 64,
                           mode: str = "overwrite",
                           chunk_size: int | None = None) -> None:
     """``chunk_size=None`` writes the one-row-per-subject table (requires
     a bounded-degree corpus — see :func:`adjacency`); setting it writes
     the hub-safe chunked layout, sorted (subj, chunk_id) within buckets."""
-    if chunk_size is None:
-        adj, sort_cols = adjacency(triples), ["subj"]
-    else:
-        adj, sort_cols = adjacency_chunked(triples, chunk_size), [
-            "subj", "chunk_id"]
     (
-        with_subj_bucket(adj, buckets)
-        .repartition(buckets, "subj_bucket")
-        .sortWithinPartitions(*sort_cols)
+        adjacency_rows(triples, buckets, chunk_size)
         .write.mode(mode)
         .partitionBy("subj_bucket")
         .parquet(path)

@@ -108,9 +108,11 @@ def run_checkpointed(spark: SparkSession, transcripts: DataFrame,
     per dirty bucket, the mentions write (its row count rides along as an
     ``Observation``) and one manifest append; then the global phase —
     canonicalization over the distinct surface keys of all checkpointed
-    mentions (one collect below ``LOCAL_SURFACES`` keys), one count that
-    fills the cache of the final triples, and the two table writes, both
-    reading that cache.  Clean buckets cost nothing but their share of
+    mentions (one collect below ``LOCAL_SURFACES`` keys), then the two
+    table writes, with no cache and no count: the triple write computes
+    the emission (its row count rides along as an ``Observation``) and
+    the adjacency write reads the written triple table back, in one
+    exchange.  Clean buckets cost nothing but their share of
     the fingerprint aggregation and their mentions' re-read.  The only
     Python tasks of a delta are the extraction's (``detect_mentions``):
     the manifest rows and the driver-built canonical map are
@@ -169,30 +171,35 @@ def run_checkpointed(spark: SparkSession, transcripts: DataFrame,
     canon = canonical_surface_map(
         mentions.select("surface_key").dropDuplicates(["surface_key"]),
         threshold=jaccard_threshold)
-    # computed once: the count fills the cache both table writes read
-    final = pipeline_triples(mentions, canon).persist()
-    try:
-        n_final = final.count()
-        if n_final:
-            write_triple_table(final, os.path.join(out_dir, "triples"),
-                               buckets=table_buckets)
-            write_adjacency_table(final, os.path.join(out_dir, "adjacency"),
-                                  buckets=table_buckets)
-        else:
-            # no triples at all (no input, everything deleted, or no
-            # turn mentions anything).  The tables are still overwritten,
-            # so previously-materialized rows don't outlive their deleted
-            # inputs (the lineage contract); partitionBy on an empty
-            # DataFrame writes zero part files (readers would then fail
-            # schema inference), so write one unpartitioned
-            # schema-carrying file instead — same columns, subj_bucket
-            # included.
-            (with_subj_bucket(final, table_buckets).coalesce(1)
-             .write.mode("overwrite").parquet(os.path.join(out_dir, "triples")))
-            (with_subj_bucket(adjacency(final), table_buckets).coalesce(1)
-             .write.mode("overwrite").parquet(os.path.join(out_dir, "adjacency")))
-    finally:
-        final.unpersist()
+    triples_path = os.path.join(out_dir, "triples")
+    adjacency_path = os.path.join(out_dir, "adjacency")
+    final = pipeline_triples(mentions, canon)
+    n_final = 0
+    # an empty canonical map means no mention has a surface key, so
+    # nothing is emitted; the optimizer would fold that plan to an empty
+    # relation, observation included.  (Below LOCAL_SURFACES keys the map
+    # is a driver-built relation, and isEmpty runs no job.)
+    if not canon.isEmpty():
+        emitted = Observation()
+        write_triple_table(
+            final.observe(emitted, F.count(F.lit(1)).alias("n")),
+            triples_path, buckets=table_buckets)
+        n_final = emitted.get["n"]
+    if n_final:
+        write_adjacency_table(spark.read.parquet(triples_path), adjacency_path,
+                              buckets=table_buckets)
+    else:
+        # no triples at all (no input, everything deleted, or no turn
+        # mentions anything).  The tables are still overwritten, so
+        # previously-materialized rows don't outlive their deleted inputs
+        # (the lineage contract); partitionBy on an empty DataFrame writes
+        # zero part files (readers would then fail schema inference), so
+        # write one unpartitioned schema-carrying file instead — same
+        # columns, subj_bucket included.
+        (with_subj_bucket(final, table_buckets).coalesce(1)
+         .write.mode("overwrite").parquet(triples_path))
+        (with_subj_bucket(adjacency(final), table_buckets).coalesce(1)
+         .write.mode("overwrite").parquet(adjacency_path))
     return {
         "run_id": run_id,
         "buckets_processed": processed,

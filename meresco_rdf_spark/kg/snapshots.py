@@ -144,11 +144,14 @@ def _write_data(df: DataFrame, root: str, version: int, buckets: int,
                 n_parts: int, pre_partitioned: bool = False) -> str:
     """Write one immutable snapshot data directory; returns its relative
     name.  ``snap`` is key=value-shaped so partition discovery under
-    ``data/`` recovers (snap, subj_bucket) for free at read time."""
+    ``data/`` recovers (snap, subj_bucket) for free at read time.  Every
+    writer sorts by ``("subj_bucket", *TRIPLE_SORT)``: the partitioned
+    write needs its rows ordered by ``subj_bucket`` first, and replaces
+    any sort that does not lead with it by its own."""
     rel = "data/snap=%d-%s" % (version, uuid.uuid4().hex[:12])
     out = df if pre_partitioned else (
         df.repartition(n_parts, "subj_bucket")
-        .sortWithinPartitions(*TRIPLE_SORT))
+        .sortWithinPartitions("subj_bucket", *TRIPLE_SORT))
     (out.write.mode("error").partitionBy("subj_bucket")
         .parquet(root + "/" + rel))
     return rel
@@ -191,7 +194,7 @@ def snapshot_create(spark: SparkSession, triples: DataFrame, root: str,
                       F.lit(files_per_bucket))
         df = (df.repartition(buckets * files_per_bucket,
                              F.col("subj_bucket"), salt)
-              .sortWithinPartitions(*TRIPLE_SORT))
+              .sortWithinPartitions("subj_bucket", *TRIPLE_SORT))
         rel = _write_data(df, root, version, buckets,
                           buckets * files_per_bucket,
                           pre_partitioned=True)
@@ -450,7 +453,7 @@ def snapshot_compact(spark: SparkSession, root: str,
     version = versions[-1] + 1
     rel = _write_data(
         rows.repartition(len(fragmented), "subj_bucket")
-        .sortWithinPartitions(*TRIPLE_SORT),
+        .sortWithinPartitions("subj_bucket", *TRIPLE_SORT),
         root, version, parent["n_buckets"], len(fragmented),
         pre_partitioned=True)
     counts = _bucket_counts(spark, root, rel)

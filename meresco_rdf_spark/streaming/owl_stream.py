@@ -41,7 +41,6 @@ schema change.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from ..fixpoint import fixpoint
@@ -56,6 +55,7 @@ from ..operators.owl import (
     orbit_expand,
     transitive_edges,
 )
+from . import TRIPLE_DDL, read_if_exists
 
 TRIPLE_COLS = ["subj", "pred", "obj_value", "obj_kind", "obj_lang"]
 
@@ -122,10 +122,7 @@ def run_owl_maintenance(instance_stream: DataFrame,
             # class equivalence is a per-row rename -> distributes over
             # union; per-batch expansion exactly maintains the closure
             expanded = expanded.unionByName(class_expand(batch, schema))
-        try:
-            current = spark.read.parquet(table_path)
-        except AnalysisException:  # first batch: no table yet
-            current = None  # (real read errors propagate)
+        current = read_if_exists(spark, table_path, TRIPLE_DDL)
 
         fresh = expanded.unionByName(schema_rows)
         if schema.trans_orbit:

@@ -29,24 +29,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..kg.snapshots import _fs
 from ..session import local_frame
+from . import read_if_exists
 
 QUAD_COLS = ["context", "subj", "pred", "obj_value", "obj_kind",
              "obj_lang"]
-
-
-def _read_quads(spark: SparkSession, table_path: str,
-                partition_ddl: str = "") -> Optional[DataFrame]:
-    """The quad table, or None before the first batch wrote it.  Probing
-    with ``exists`` (not a read that fails) keeps a missing path out of
-    Spark's metadata lookup, which logs a WARN stack trace for it; the
-    explicit schema, partition columns included, reads a directory whose
-    first write never committed a file as empty."""
-    fs, hpath = _fs(spark, table_path)
-    if not fs.exists(hpath(table_path)):
-        return None
-    return spark.read.schema(
-        ", ".join("%s string" % c for c in QUAD_COLS) + partition_ddl
-    ).parquet(table_path)
+QUAD_DDL = ", ".join("%s string" % c for c in QUAD_COLS)
 
 
 def _novel(fresh: DataFrame, current: DataFrame) -> DataFrame:
@@ -86,7 +73,7 @@ def run_nquads_to_quad_table(quads: DataFrame, table_path: str,
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         fresh = batch.select(*QUAD_COLS).dropDuplicates(QUAD_COLS)
-        current = _read_quads(spark, table_path)
+        current = read_if_exists(spark, table_path, QUAD_DDL)
         if current is not None:
             fresh = _novel(fresh, current)
         fresh.write.mode("append").parquet(table_path)
@@ -156,7 +143,7 @@ def run_nquads_with_graph_hashes(quads: DataFrame, table_path: str,
         bdir = "%s/batch=%d" % (table_path, batch_id)
         if not fs.exists(hpath("%s/_SUCCESS" % bdir)):
             fresh = batch.select(*QUAD_COLS).dropDuplicates(QUAD_COLS)
-            current = _read_quads(spark, table_path, ", batch int")
+            current = read_if_exists(spark, table_path, QUAD_DDL + ", batch int")
             if current is not None:
                 fresh = _novel(fresh, current.filter(
                     F.col("batch") != batch_id).select(*QUAD_COLS))

@@ -34,7 +34,6 @@ the table itself carries the state, exactly as
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.rdfs import (
@@ -44,6 +43,7 @@ from ..operators.rdfs import (
     RDFS_SUBPROP,
     rdfs_closure,
 )
+from . import TRIPLE_DDL, read_if_exists
 
 TRIPLE_COLS = ["subj", "pred", "obj_value", "obj_kind", "obj_lang"]
 _SCHEMA_PREDS = (RDFS_SUBPROP, RDFS_SUBCLASS, RDFS_DOMAIN, RDFS_RANGE)
@@ -75,15 +75,13 @@ def run_rdfs_maintenance(instance_stream: DataFrame,
         # narrow/wide dedups) — no extra dedup pass needed
         fresh = rdfs_closure(batch, schema_triples=schema_triples,
                              local_threshold=local_threshold)
-        try:
-            current = spark.read.parquet(table_path)
+        current = read_if_exists(spark, table_path, TRIPLE_DDL)
+        if current is not None:
             cond = None
             for c in TRIPLE_COLS:
                 eq = fresh[c].eqNullSafe(current[c])
                 cond = eq if cond is None else cond & eq
             fresh = fresh.join(current, cond, "left_anti")
-        except AnalysisException:  # first batch: no table yet
-            pass  # (real read errors — corrupt files etc. — propagate)
         fresh.write.mode("append").parquet(table_path)
 
     return (instance_stream.writeStream.foreachBatch(step)

@@ -51,15 +51,16 @@ triple table and report ARE the state (the ``quad_stream`` /
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from ..kg.snapshots import _fs
 from ..operators.shacl import RDF_TYPE, _check_shapes, _PAIR_KEYS, validate
 from ..session import local_frame
+from . import TRIPLE_DDL, read_if_exists
 
 TRIPLE_COLS = ["subj", "pred", "obj_value", "obj_kind", "obj_lang"]
 REPORT_COLS = ["shape_id", "focus", "path", "constraint", "value"]
+REPORT_DDL = ", ".join("%s string" % c for c in REPORT_COLS)
 
 
 def _affected_focus(spark, shapes: list[dict], new_rows: DataFrame,
@@ -180,16 +181,14 @@ def run_shacl_maintenance(triple_stream: DataFrame, shapes: list[dict],
     def step(batch: DataFrame, batch_id: int) -> None:
         _roll_forward(fs, hpath, report_path)
         batch = batch.select(*TRIPLE_COLS).dropDuplicates(TRIPLE_COLS)
-        table = None
-        try:
-            table = spark.read.parquet(table_path)
+        table = read_if_exists(spark, table_path, TRIPLE_DDL)
+        new_rows = batch
+        if table is not None:
             cond = None
             for c in TRIPLE_COLS:
                 eq = batch[c].eqNullSafe(table[c])
                 cond = eq if cond is None else cond & eq
             new_rows = batch.join(table, cond, "left_anti")
-        except AnalysisException:  # first batch: no table yet
-            new_rows = batch
         new_rows = new_rows.localCheckpoint(eager=True)
         if new_rows.isEmpty():  # pure replay: table and report converged
             return
@@ -203,12 +202,11 @@ def run_shacl_maintenance(triple_stream: DataFrame, shapes: list[dict],
         merged = (table.unionByName(new_rows)
                   if table is not None else new_rows)
         fresh = validate(merged, shapes, only_focus=affected)
-        try:
-            old = (spark.read.parquet(report_path)
-                   .join(affected, ["shape_id", "focus"], "left_anti"))
-            report = old.unionByName(fresh)
-        except AnalysisException:  # first batch (or empty report dir)
-            report = fresh
+        report = fresh
+        old = read_if_exists(spark, report_path, REPORT_DDL)
+        if old is not None:
+            report = (old.join(affected, ["shape_id", "focus"], "left_anti")
+                      .unionByName(fresh))
         # stage-and-swap: the report is read above and rewritten below,
         # so it can never be overwritten in place
         staging = report_path + ".staging"

@@ -79,3 +79,22 @@ def canonical_triples(rows):
 
 def assert_isomorphic(rows_a, rows_b):
     assert canonical_triples(rows_a) == canonical_triples(rows_b)
+
+
+def assert_part_files_sorted(root, keys) -> int:
+    """Read every parquet part file under ``root`` with pyarrow and assert
+    its rows are in ``keys`` order (NULLs first, as Spark sorts
+    ascending; byte order of UTF-8 equals code-point order).  Returns the
+    number of files checked."""
+    import pyarrow.parquet as pq
+
+    files = sorted(Path(root).rglob("*.parquet"))
+    for path in files:
+        table = pq.read_table(path, columns=list(keys))
+        rows = [tuple((row[k] is not None, "" if row[k] is None else row[k])
+                      for k in keys)
+                for row in table.to_pylist()]
+        bad = [i for i in range(1, len(rows)) if rows[i - 1] > rows[i]]
+        assert not bad, "%s: %d rows out of %s order, first at row %d" % (
+            path, len(bad), list(keys), bad[0])
+    return len(files)

@@ -31,7 +31,9 @@ from meresco_rdf_spark.kg.extract import (
 )
 from meresco_rdf_spark.kg.materialize import (
     TRIPLE_COLS,
+    TRIPLE_SORT,
     adjacency,
+    write_adjacency_table,
     write_triple_table,
 )
 from meresco_rdf_spark.kg.pipeline import run_checkpointed, run_pipeline
@@ -39,6 +41,8 @@ from meresco_rdf_spark.sources.transcripts import (
     GAZETTEER,
     synthesize_transcripts,
 )
+
+from helpers import assert_part_files_sorted
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -151,6 +155,45 @@ class TestMentionTriples:
         assert ("urn:e2", FOAF_NAME, "Solo") in rows
         assert len(rows) == 4
 
+    def test_label_election_ties_and_single_forms(self, spark):
+        counts = spark.createDataFrame(
+            [("urn:e1", "b", 3), ("urn:e1", "c", 3), ("urn:e1", "a", 3),
+             ("urn:e2", "Solo", 7), ("urn:e3", "z", 1), ("urn:e3", "y", 2)],
+            "canonical_uri string, surface string, n long")
+        rows = sorted((r.subj, r.pred, r.obj_value, r.obj_kind, r.obj_lang)
+                      for r in label_triples_from_counts(counts).collect())
+        # a three-way tie elects the least surface string; a single form
+        # is the name and has no alternative
+        assert rows == sorted([
+            ("urn:e1", FOAF_NAME, "a", "literal", None),
+            ("urn:e1", SKOS_ALTLABEL, "b", "literal", None),
+            ("urn:e1", SKOS_ALTLABEL, "c", "literal", None),
+            ("urn:e2", FOAF_NAME, "Solo", "literal", None),
+            ("urn:e3", FOAF_NAME, "y", "literal", None),
+            ("urn:e3", SKOS_ALTLABEL, "z", "literal", None)])
+
+    def test_label_election_matches_python_oracle(self, spark):
+        import random
+
+        rng = random.Random(11)
+        counts = []
+        for e in range(60):
+            forms = rng.sample(["f%02d" % i for i in range(12)],
+                               rng.randint(1, 6))
+            counts += [("urn:e%d" % e, f, rng.randint(1, 4)) for f in forms]
+        want = set()
+        for e in {c[0] for c in counts}:
+            ranked = sorted((-n, f) for u, f, n in counts if u == e)
+            want.add((e, FOAF_NAME, ranked[0][1], "literal", None))
+            want |= {(e, SKOS_ALTLABEL, f, "literal", None)
+                     for _, f in ranked[1:]}
+        got = [(r.subj, r.pred, r.obj_value, r.obj_kind, r.obj_lang)
+               for r in label_triples_from_counts(spark.createDataFrame(
+                   counts, "canonical_uri string, surface string, n long"))
+               .collect()]
+        assert len(got) == len(set(got)) == len(counts)
+        assert set(got) == want
+
     def test_checkpointed_equals_single_shot_pipeline(self, spark, tmp_path):
         """The resumable path must be ROW-IDENTICAL to run_pipeline
         however the work is sliced: labels especially — per-bucket
@@ -248,6 +291,22 @@ class TestPipelineAndMaterialize:
         plan = back.filter(F.col("subj_bucket") == 3)._jdf.queryExecution(
         ).executedPlan().toString()
         assert re.search(r"PartitionFilters: \[.*subj_bucket.*= 3", plan)
+
+    def test_part_files_sorted_within_file(self, spark, tmp_path):
+        # the written files hold the promised order: a sort that does
+        # not lead with the partition column is replaced by the write's
+        # own sort on subj_bucket
+        out = str(tmp_path / "kg")
+        run_checkpointed(spark, synthesize_transcripts(spark, 30, 5), out,
+                         n_buckets=2, table_buckets=4)
+        assert assert_part_files_sorted(
+            os.path.join(out, "triples"), TRIPLE_SORT) > 1
+        assert assert_part_files_sorted(
+            os.path.join(out, "adjacency"), ["subj"]) > 1
+        triples = spark.read.parquet(os.path.join(out, "triples"))
+        chunked = str(tmp_path / "chunked")
+        write_adjacency_table(triples, chunked, buckets=4, chunk_size=3)
+        assert assert_part_files_sorted(chunked, ["subj", "chunk_id"]) > 1
 
     def test_checkpoint_resume_skips_completed_buckets(self, spark, tmp_path):
         t = synthesize_transcripts(spark, 30, 5)
@@ -507,8 +566,11 @@ class TestCheckpointCost:
     # jobs of the 1-conversation delta below: 91 before the global
     # triples were cached and the manifest, fingerprints and canonical
     # map were each built once; 40 after; 25 since buckets checkpoint
-    # their mentions, not triples (local[4], 4 shuffle partitions)
-    DELTA_JOBS = 25
+    # their mentions, not triples; 22 once driver-built relations became
+    # local frames; 17 since the global phase has no cache and no count
+    # and elects labels in one aggregation (local[4], 4 shuffle
+    # partitions)
+    DELTA_JOBS = 17
     MARGIN = 8
 
     def test_run_checkpointed_releases_its_caches(self, spark, tmp_path):
@@ -697,6 +759,20 @@ def test_similar_pairs_local_and_distributed_agree(spark):
     # exact all-pairs >= LSH candidates; on this input they must be equal
     assert dist <= local and len(local) > 0
     assert local == dist
+
+
+def test_similar_pairs_driver_path_drops_a_null_key(spark):
+    surfaces = spark.createDataFrame(
+        [("apache spark",), ("apache spark engine",), (None,),
+         ("marie curie",)], "surface_key string")
+    local = {(r.a, r.b, round(r.jaccard, 6))
+             for r in similar_surface_pairs(surfaces).collect()}
+    dist = {(r.a, r.b, round(r.jaccard, 6))
+            for r in similar_surface_pairs(
+                surfaces, local_threshold=0).collect()}
+    assert local == dist
+    assert {(a, b) for a, b, _ in local} == {
+        ("apache spark", "apache spark engine")}
 
 
 def _parity_vocabulary(n_keys):

@@ -211,6 +211,20 @@ def test_stream_maintenance_replay_is_noop(spark, tmp_path):
     assert spark.read.parquet(table).count() == n1
 
 
+def test_stream_maintenance_first_write_that_committed_nothing(spark,
+                                                               tmp_path):
+    # a crash inside the first append leaves the table directory with no
+    # data file; the replay reads it as an empty table
+    onto, inst = _onto_instance_split()
+    in_dir = _write_slices(spark, tmp_path, inst, n_slices=2)
+    (tmp_path / "u" / "table" / "_temporary" / "0").mkdir(parents=True)
+    table = _run_maintenance(spark, tmp_path, in_dir, onto, name="u")
+    got = {tuple(r) for r in spark.read.parquet(table).collect()}
+    batch = {tuple(r) for r in rdfs_closure(
+        df(spark, inst), schema_triples=df(spark, onto)).collect()}
+    assert got == batch
+
+
 def test_stream_maintenance_rejects_schema_on_stream(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 

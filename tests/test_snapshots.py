@@ -8,7 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from meresco_rdf_spark.kg.materialize import with_subj_bucket
+from meresco_rdf_spark.kg.materialize import TRIPLE_SORT, with_subj_bucket
 from meresco_rdf_spark.kg.snapshots import (
     SnapshotConflict,
     SnapshotNotFound,
@@ -16,10 +16,13 @@ from meresco_rdf_spark.kg.snapshots import (
     _fs,
     expire_snapshots,
     read_snapshot,
+    snapshot_compact,
     snapshot_create,
     snapshot_merge,
     snapshot_versions,
 )
+
+from helpers import assert_part_files_sorted
 
 SCHEMA = ("subj string, pred string, obj_value string, obj_kind string, "
           "obj_lang string")
@@ -326,6 +329,22 @@ class TestCrashMatrix:
                 assert snapshot_versions(spark, root) == []
             # restart on the same checkpoint replays batch 0
             self._recovers(spark, root, after, lambda: drain(name), want)
+
+
+def test_every_writer_sorts_its_part_files(spark, tmp_path):
+    rows = base_rows(60) + [("urn:s:%d" % i, "urn:p:label", "nom %d" % i,
+                             "literal", "fr") for i in range(0, 60, 3)]
+    root = str(tmp_path / "t")
+    snapshot_create(spark, tri(spark, rows), root, buckets=4)  # plain create
+    snapshot_merge(spark, root, adds=tri(spark, [
+        ("urn:s:%d" % i, "urn:p:extra", "x", "literal", None)
+        for i in range(0, 60, 7)]))
+    salted = str(tmp_path / "salted")
+    snapshot_create(spark, tri(spark, rows), salted, buckets=4,
+                    files_per_bucket=3)
+    snapshot_compact(spark, salted)
+    assert assert_part_files_sorted(root, TRIPLE_SORT) > 4
+    assert assert_part_files_sorted(salted, TRIPLE_SORT) > 4
 
 
 class TestSnapshotDiff:

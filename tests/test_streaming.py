@@ -23,6 +23,19 @@ from meresco_rdf_spark.streaming.transcript_stream import (
 )
 
 
+def test_read_if_exists_probes_without_reading(spark, tmp_path):
+    from meresco_rdf_spark.streaming import TRIPLE_DDL, read_if_exists
+
+    table = tmp_path / "table"
+    assert read_if_exists(spark, str(table), TRIPLE_DDL) is None
+    # a first write that committed no file: empty, with the given schema
+    (table / "_temporary" / "0").mkdir(parents=True)
+    empty = read_if_exists(spark, str(table), TRIPLE_DDL + ", batch int")
+    assert empty.count() == 0
+    assert empty.columns == ["subj", "pred", "obj_value", "obj_kind",
+                             "obj_lang", "batch"]
+
+
 def _write_input(spark, tmp_path, n_convs=20):
     path = str(tmp_path / "in")
     synthesize_transcripts(spark, n_convs, 5).write.parquet(path)

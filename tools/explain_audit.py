@@ -8,9 +8,10 @@ Checks (printed + exit code):
 - BGP (O9): AQE converts the selective pattern sides to broadcast joins;
 - pipeline emit: exactly one Arrow UDF stage (extraction), the canonical
   map join is a BroadcastHashJoin, and no global dedup exchange exists;
-- checkpointed global phase: the adjacency write reads the cached final
-  triples, not the mentions checkpoints, and the final triples carry no
-  global dedup exchange;
+- label election: one aggregation keyed canonical_uri, no join;
+- checkpointed global phase: nothing is cached, the adjacency write
+  scans the written triple table (never a mentions checkpoint) with one
+  exchange, and the final triples carry no global dedup exchange;
 - pricing summary: decimal sums stay inside WholeStageCodegen;
 - SPARQL front-end: sub-select aggregates before the outer join, UPDATE
   deletes broadcast into the anti-join, negated property sets fold to
@@ -113,16 +114,32 @@ def main() -> None:
         "pipeline: no global dedup",
         "obj_lang" not in " ".join(re.findall(r"Exchange hashpartitioning\([^)]*\)", p))))
 
-    # checkpointed global phase: the final triples are computed once and
-    # cached, so the adjacency write reads that cache and scans no
-    # mentions checkpoint of its own; they are emitted through
-    # pipeline_triples, unique by construction, so no exchange keys on
-    # the full triple (obj_lang is only ever a key of a full-row dedup)
+    # label election: ONE aggregation keyed canonical_uri (sorted forms,
+    # position 0 is foaf:name) — no join back onto the counts, no dedup
+    from meresco_rdf_spark.kg.extract import label_triples_from_counts
+
+    counts = mentions.groupBy(
+        F.col("surface_key").alias("canonical_uri"), "surface").agg(
+        F.count("*").alias("n"))
+    p = optimized_of(label_triples_from_counts(counts))
+    results.append(check(
+        "labels: one aggregation, no join",
+        "Join" not in p
+        and len(re.findall(r"Aggregate \[canonical_uri#\d+\]", p)) == 1))
+
+    # checkpointed global phase: no cache and no count — the triple write
+    # computes the emission, and the adjacency write reads the written
+    # triple table back (never a mentions checkpoint) in ONE exchange.
+    # The emission is unique by construction, so no exchange keys on the
+    # full triple (obj_lang is only ever a key of a full-row dedup).  The
+    # adjacency plan is built by materialize.adjacency_rows, the helper
+    # write_adjacency_table writes, so the audited plan is the shipped one
     from meresco_rdf_spark._scratch import scratch_dir
     from meresco_rdf_spark.kg import pipeline
-    from meresco_rdf_spark.kg.materialize import adjacency
+    from meresco_rdf_spark.kg.materialize import adjacency_rows
 
-    adjacency_leaves = []
+    adjacency_scans = []
+    adjacency_plans = []
     final_plans = []
     write_adjacency = pipeline.write_adjacency_table
     write_triples = pipeline.write_triple_table
@@ -131,15 +148,16 @@ def main() -> None:
         final_plans.append(plan_of(triples))
         write_triples(triples, path, **kw)
 
-    def audited_write(triples, path, **kw):
-        leaves = adjacency(triples)._jdf.queryExecution().sparkPlan() \
-            .collectLeaves()
+    def audited_write(triples, path, buckets=64, chunk_size=None, **kw):
+        rows = adjacency_rows(triples, buckets, chunk_size)
+        leaves = rows._jdf.queryExecution().sparkPlan().collectLeaves()
         for leaf in (leaves.apply(i) for i in range(leaves.size())):
             is_file = leaf.getClass().getSimpleName() == "FileSourceScanExec"
-            adjacency_leaves.append((leaf.nodeName(), leaf.relation().location()
-                                     .rootPaths().mkString(",")
-                                     if is_file else ""))
-        write_adjacency(triples, path, **kw)
+            adjacency_scans.append(leaf.relation().location().rootPaths()
+                                   .mkString(",") if is_file else None)
+        adjacency_plans.append(plan_of(rows))
+        write_adjacency(triples, path, buckets=buckets,
+                        chunk_size=chunk_size, **kw)
 
     checkpoint_out = scratch_dir("audit_checkpoint_")
     pipeline.write_adjacency_table = audited_write
@@ -151,12 +169,15 @@ def main() -> None:
     finally:
         pipeline.write_adjacency_table = write_adjacency
         pipeline.write_triple_table = write_triples
+    triples_dir = os.path.join(checkpoint_out, "triples")
+    n_exchanges = [len(re.findall(r"Exchange", p)) for p in adjacency_plans]
     results.append(check(
-        "checkpoint: adjacency reads cached final",
-        bool(adjacency_leaves)
-        and all(name == "InMemoryTableScan" for name, _ in adjacency_leaves)
-        and not any("mentions" in paths for _, paths in adjacency_leaves),
-        "(%d leaves)" % len(adjacency_leaves)))
+        "checkpoint: adjacency 1 exchange",
+        bool(adjacency_scans)
+        and all(s is not None and s.endswith(triples_dir)
+                for s in adjacency_scans)
+        and n_exchanges == [1],
+        "(scans %s, exchanges %s)" % (adjacency_scans, n_exchanges)))
     exchanges = [e for p in final_plans for e in re.findall(
         r"Exchange hashpartitioning\([^)]*\)", p)]
     results.append(check(
@@ -165,6 +186,11 @@ def main() -> None:
         and os.path.join(checkpoint_out, "mentions") in final_plans[0]
         and not any("obj_lang" in e for e in exchanges),
         "(%d exchanges)" % len(exchanges)))
+    results.append(check(
+        "checkpoint: no cache",
+        len(final_plans) == 1
+        and not re.search(r"InMemory(Relation|TableScan)|TableCacheQueryStage",
+                          final_plans[0])))
 
     # MinHash banding: no shingle ARRAY ever enters an exchange — the
     # banded self-join carries (id, band_id, band_key) only and the
