@@ -342,9 +342,12 @@ def expire_snapshots(spark: SparkSession, root: str,
                      keep_last: int = 1) -> dict:
     """Drop all but the newest ``keep_last`` manifests and delete every
     data directory no surviving manifest references, and every temp
-    manifest (both left by crashed writers).  Requires no concurrent
-    writer — the same contract as Iceberg's expire-snapshots maintenance
-    action.  Readers of expired versions break; that is the retention
+    manifest (both left by crashed writers).  Covers every root
+    ``_commit_manifest`` commits: a triple table's manifest references
+    its ``buckets`` directories, the quad stream's hash root's manifest
+    its one ``data`` directory.  Requires no concurrent writer — the
+    same contract as Iceberg's expire-snapshots maintenance action.
+    Readers of expired versions break; that is the retention
     trade-off."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
@@ -353,8 +356,11 @@ def expire_snapshots(spark: SparkSession, root: str,
     keep, drop = versions[-keep_last:], versions[:-keep_last]
     referenced = set()
     for v in keep:
-        for p in _load_manifest(fs, hpath, root, v)["buckets"].values():
+        manifest = _load_manifest(fs, hpath, root, v)
+        for p in manifest.get("buckets", {}).values():
             referenced.add(p.split("/subj_bucket=", 1)[0])
+        if "data" in manifest:
+            referenced.add(manifest["data"])
     for v in drop:
         fs.delete(hpath("%s/_meta/v%d.json" % (root, v)), False)
     meta = hpath(root + "/_meta")

@@ -9,28 +9,16 @@ queries (``sparql/compiler.py``: default graph = context-IS-NULL rows).
 
 No reference counterpart (the reference has no quad model at all — its
 per-file contexts, ``graphcomponent.py:80``, are the closest analogue);
-engine extension in the same spirit as the ``.nt`` path.  Literal model
-identical to ``ntriples``: lang kept, ``^^datatype`` accepted and
-dropped.
+engine extension in the same spirit as the ``.nt`` path.  The line
+grammar and the term decoding are ``ntriples.parse_line``'s: lang kept,
+``^^datatype`` accepted and dropped.
 """
 
 from __future__ import annotations
 
 from typing import Iterator, Optional, Tuple
 
-import re
-
-from ..model import BNode, Literal, Uri
-from .ntriples import unescape
-
-_LINE_RE = re.compile(
-    r'^\s*'
-    r'(?P<subj><[^<>\s]*>|_:\S+)\s+'
-    r'(?P<pred><[^<>\s]*>)\s+'
-    r'(?P<obj><[^<>\s]*>|_:\S+|"(?:[^"\\]|\\.)*"'
-    r'(?:@[A-Za-z][A-Za-z0-9-]*|\^\^<[^<>\s]*>)?)'
-    r'(?:\s+(?P<graph><[^<>\s]*>|_:\S+))?'
-    r'\s*\.\s*$')
+from .ntriples import parse_line
 
 
 def parse_nquads_line(
@@ -38,34 +26,7 @@ def parse_nquads_line(
     """One line -> (graph-or-None, subject, predicate, object-node), or
     None for blank lines / comments.  Raises ``ValueError`` on malformed
     input."""
-    stripped = line.strip()
-    if not stripped or stripped.startswith("#"):
-        return None
-    m = _LINE_RE.match(line)
-    if m is None:
-        raise ValueError("malformed N-Quads line: %r" % line.strip())
-    subj_tok, pred_tok, obj_tok, graph_tok = m.group(
-        "subj", "pred", "obj", "graph")
-    subj = unescape(subj_tok[1:-1]) if subj_tok.startswith("<") else subj_tok
-    pred = unescape(pred_tok[1:-1])
-    if obj_tok.startswith("<"):
-        obj: object = Uri(unescape(obj_tok[1:-1]))
-    elif obj_tok.startswith("_:"):
-        obj = BNode(obj_tok)
-    else:
-        lang = None
-        body = obj_tok
-        if not body.endswith('"'):
-            if body.rfind("@") > body.rfind('"'):
-                body, _, lang = body.rpartition("@")
-            else:  # ^^<datatype>: dropped (reference literal model)
-                body = body[:body.rfind("^^")]
-        obj = Literal(unescape(body[1:-1]), lang=lang)
-    graph = None
-    if graph_tok is not None:
-        graph = (unescape(graph_tok[1:-1])
-                 if graph_tok.startswith("<") else graph_tok)
-    return graph, subj, pred, obj
+    return parse_line(line, quads=True)
 
 
 def iter_nquads(text: str) -> Iterator[Tuple[Optional[str], str, str, object]]:

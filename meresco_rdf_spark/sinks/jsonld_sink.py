@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from .nt_sink import write_lines
+
 
 def _js(col: Column) -> Column:
     """A JSON string literal (quotes included) with JVM-exact escaping:
@@ -64,7 +66,5 @@ def write_jsonld(triples: DataFrame, path: str,
                  mode: str = "overwrite") -> None:
     """Materialize as NDJSON-LD text shards (each shard — and each
     line — independently parseable)."""
-    lines = jsonld_lines(triples)
-    if num_files:
-        lines = lines.coalesce(num_files)
-    lines.write.mode(mode).option("compression", "none").text(path)
+    write_lines(jsonld_lines(triples), path, num_files, mode,
+                keep_order=True)

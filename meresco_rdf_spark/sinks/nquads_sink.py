@@ -11,29 +11,15 @@ counterpart (the reference has no quad model); engine extension.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .nt_sink import nt_escape, ntriples_line
-
-
-def nquads_line(subj: Column, pred: Column, obj_value: Column,
-                obj_kind: Column, obj_lang: Column,
-                context: Column) -> Column:
-    triple = ntriples_line(subj, pred, obj_value, obj_kind, obj_lang)
-    graph_tok = (
-        F.when(context.isNull(), F.lit(None).cast("string"))
-        .when(context.startswith("_:"), context)
-        .otherwise(F.concat(F.lit("<"), nt_escape(context), F.lit(">"))))
-    # splice the graph term before the terminating dot; concat_ws skips
-    # the NULL graph_tok so default-graph rows stay valid N-Triples
-    stmt = F.substring(triple, 1, F.length(triple) - 2)
-    return F.concat_ws(" ", stmt, graph_tok, F.lit("."))
+from .nt_sink import ntriples_line, write_lines
 
 
 def nquads_lines(quads: DataFrame) -> DataFrame:
     """Quads -> one-column (``value``) DataFrame of N-Quads lines."""
     return quads.select(
-        nquads_line(
+        ntriples_line(
             F.col("subj"), F.col("pred"), F.col("obj_value"),
             F.col("obj_kind"), F.col("obj_lang"),
             F.col("context")).alias("value"))
@@ -44,7 +30,4 @@ def write_nquads(quads: DataFrame, path: str,
                  mode: str = "overwrite") -> None:
     """Materialize as ``.nq`` text files (one line per quad,
     line-splittable on read)."""
-    lines = nquads_lines(quads)
-    if num_files:
-        lines = lines.repartition(num_files)
-    lines.write.mode(mode).option("compression", "none").text(path)
+    write_lines(nquads_lines(quads), path, num_files, mode)

@@ -27,21 +27,37 @@ def nt_escape(col: Column) -> Column:
     return F.replace(c, F.lit("\t"), F.lit("\\t"))
 
 
-def ntriples_line(subj: Column, pred: Column, obj_value: Column,
-                  obj_kind: Column, obj_lang: Column) -> Column:
-    subj_tok = F.when(subj.startswith("_:"), subj).otherwise(
-        F.concat(F.lit("<"), nt_escape(subj), F.lit(">")))
-    pred_tok = F.concat(F.lit("<"), nt_escape(pred), F.lit(">"))
-    obj_tok = (
-        F.when(obj_kind == "uri",
-               F.concat(F.lit("<"), nt_escape(obj_value), F.lit(">")))
-        .when(obj_kind == "bnode", obj_value)
+def nt_iri(value: Column) -> Column:
+    return F.concat(F.lit("<"), nt_escape(value), F.lit(">"))
+
+
+def nt_term(value: Column, kind: Column | None = None,
+            lang: Column | None = None) -> Column:
+    """One RDF term -> its N-Triples token; the package's one term
+    encoder.  Without ``kind`` (a subject or graph label): a ``_:``
+    label verbatim, anything else an IRI, NULL stays NULL.  With
+    ``kind`` (an object): by ``obj_kind``, a literal with its ``@lang``."""
+    if kind is None:
+        return F.when(value.startswith("_:"), value).otherwise(nt_iri(value))
+    return (
+        F.when(kind == "uri", nt_iri(value))
+        .when(kind == "bnode", value)
         .otherwise(F.concat(
-            F.lit('"'), nt_escape(obj_value), F.lit('"'),
-            F.when(obj_lang.isNotNull(), F.concat(F.lit("@"), obj_lang))
-            .otherwise(F.lit(""))))
-    )
-    return F.concat_ws(" ", subj_tok, pred_tok, obj_tok, F.lit("."))
+            F.lit('"'), nt_escape(value), F.lit('"'),
+            F.when(lang.isNotNull(), F.concat(F.lit("@"), lang))
+            .otherwise(F.lit("")))))
+
+
+def ntriples_line(subj: Column, pred: Column, obj_value: Column,
+                  obj_kind: Column, obj_lang: Column,
+                  context: Column | None = None) -> Column:
+    """One statement line; with ``context`` its graph term goes before
+    the dot (``concat_ws`` skips a NULL one: the default graph)."""
+    terms = [nt_term(subj), nt_iri(pred),
+             nt_term(obj_value, obj_kind, obj_lang)]
+    if context is not None:
+        terms.append(nt_term(context))
+    return F.concat_ws(" ", *terms, F.lit("."))
 
 
 def ntriples_lines(triples: DataFrame) -> DataFrame:
@@ -58,7 +74,17 @@ def write_ntriples(triples: DataFrame, path: str,
     """Materialize as ``.nt`` text files (one line per triple).  The
     files are line-splittable, so a downstream ``spark.read.text`` scan
     parallelizes regardless of file count."""
-    lines = ntriples_lines(triples)
+    write_lines(ntriples_lines(triples), path, num_files, mode)
+
+
+def write_lines(lines: DataFrame, path: str, num_files: int | None = None,
+                mode: str = "overwrite", keep_order: bool = False) -> None:
+    """Write a one-column (``value``) frame as uncompressed text files.
+    ``num_files`` repartitions — even files — unless ``keep_order``:
+    then it coalesces, which concatenates partitions without re-ordering
+    them, so a block of adjacent lines (a Turtle subject, a TriG graph
+    block) stays contiguous."""
     if num_files:
-        lines = lines.repartition(num_files)
+        lines = (lines.coalesce(num_files) if keep_order
+                 else lines.repartition(num_files))
     lines.write.mode(mode).option("compression", "none").text(path)

@@ -52,9 +52,6 @@ def _serialize_group_fn(extra_prefixes: Optional[dict] = None):
     return _serialize_group
 
 
-_serialize_group = _serialize_group_fn()  # default-namespace worker
-
-
 def serialize_shards(triples: DataFrame, shard_col: str = "context",
                      num_partitions: Optional[int] = None,
                      extra_prefixes: Optional[dict] = None) -> DataFrame:

@@ -21,11 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..namespaces import namespaces as _ns
-from .nt_sink import nt_escape
-from .turtle_sink import _term
-
-_RDF_TYPE = _ns.curieToUri("rdf:type")
+from .nt_sink import nt_term, write_lines
+from .turtle_sink import turtle_pred
 
 
 def trig_lines(quads: DataFrame) -> DataFrame:
@@ -38,15 +35,11 @@ def trig_lines(quads: DataFrame) -> DataFrame:
     total = F.count("*").over(Window.partitionBy("context", "subj"))
 
     ctx = F.col("context")
-    graph_tok = F.when(ctx.startswith("_:"), ctx).otherwise(
-        F.concat(F.lit("<"), nt_escape(ctx), F.lit(">")))
-    subj_tok = F.when(F.col("subj").startswith("_:"), F.col("subj")) \
-        .otherwise(F.concat(F.lit("<"), nt_escape(F.col("subj")),
-                            F.lit(">")))
-    pred_tok = F.when(F.col("pred") == _RDF_TYPE, F.lit("a")).otherwise(
-        F.concat(F.lit("<"), nt_escape(F.col("pred")), F.lit(">")))
-    obj_tok = _term(F.col("obj_value"), F.col("obj_kind"),
-                    F.col("obj_lang"))
+    graph_tok = nt_term(ctx)
+    subj_tok = nt_term(F.col("subj"))
+    pred_tok = turtle_pred(F.col("pred"))
+    obj_tok = nt_term(F.col("obj_value"), F.col("obj_kind"),
+                      F.col("obj_lang"))
 
     open_block = F.when(ctx.isNull(), F.lit("")) \
         .otherwise(F.concat(graph_tok, F.lit(" { ")))
@@ -61,10 +54,6 @@ def trig_lines(quads: DataFrame) -> DataFrame:
 def write_trig(quads: DataFrame, path: str,
                num_files: int | None = None,
                mode: str = "overwrite") -> None:
-    """Materialize as TriG text files.  ``coalesce`` (not repartition)
-    preserves the window's intra-partition ordering, keeping each
-    (graph, subject) block's lines contiguous."""
-    lines = trig_lines(quads)
-    if num_files:
-        lines = lines.coalesce(num_files)
-    lines.write.mode(mode).option("compression", "none").text(path)
+    """Materialize as TriG text files, each (graph, subject) block
+    contiguous (``keep_order``: coalesce, not repartition)."""
+    write_lines(trig_lines(quads), path, num_files, mode, keep_order=True)

@@ -25,20 +25,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..namespaces import namespaces as _ns
-from .nt_sink import nt_escape
+from .nt_sink import nt_iri, nt_term, write_lines
 
 _RDF_TYPE = _ns.curieToUri("rdf:type")
 
 
-def _term(value: Column, kind: Column, lang: Column) -> Column:
-    return (
-        F.when(kind == "uri",
-               F.concat(F.lit("<"), nt_escape(value), F.lit(">")))
-        .when(kind == "bnode", value)
-        .otherwise(F.concat(
-            F.lit('"'), nt_escape(value), F.lit('"'),
-            F.when(lang.isNotNull(), F.concat(F.lit("@"), lang))
-            .otherwise(F.lit("")))))
+def turtle_pred(pred: Column) -> Column:
+    """Predicate token, with the ``a`` shorthand for ``rdf:type``."""
+    return F.when(pred == _RDF_TYPE, F.lit("a")).otherwise(nt_iri(pred))
 
 
 def turtle_lines(triples: DataFrame) -> DataFrame:
@@ -49,13 +43,10 @@ def turtle_lines(triples: DataFrame) -> DataFrame:
     rn = F.row_number().over(w)
     total = F.count("*").over(Window.partitionBy("subj"))
 
-    subj_tok = F.when(F.col("subj").startswith("_:"), F.col("subj")) \
-        .otherwise(F.concat(F.lit("<"), nt_escape(F.col("subj")),
-                            F.lit(">")))
-    pred_tok = F.when(F.col("pred") == _RDF_TYPE, F.lit("a")).otherwise(
-        F.concat(F.lit("<"), nt_escape(F.col("pred")), F.lit(">")))
-    obj_tok = _term(F.col("obj_value"), F.col("obj_kind"),
-                    F.col("obj_lang"))
+    subj_tok = nt_term(F.col("subj"))
+    pred_tok = turtle_pred(F.col("pred"))
+    obj_tok = nt_term(F.col("obj_value"), F.col("obj_kind"),
+                      F.col("obj_lang"))
 
     head = F.when(rn == 1, F.concat(subj_tok, F.lit(" "))) \
         .otherwise(F.lit("    "))
@@ -67,10 +58,7 @@ def turtle_lines(triples: DataFrame) -> DataFrame:
 def write_turtle(triples: DataFrame, path: str,
                  num_files: int | None = None,
                  mode: str = "overwrite") -> None:
-    """Materialize as Turtle text files.  ``coalesce`` (not repartition)
-    for the file count: it concatenates partitions without re-ordering,
-    so subject blocks stay contiguous."""
-    lines = turtle_lines(triples)
-    if num_files:
-        lines = lines.coalesce(num_files)
-    lines.write.mode(mode).option("compression", "none").text(path)
+    """Materialize as Turtle text files, each subject block contiguous
+    (``keep_order``: coalesce, not repartition)."""
+    write_lines(turtle_lines(triples), path, num_files, mode,
+                keep_order=True)

@@ -9,7 +9,7 @@ anonymous bnodes).  They are the independent anchor: the DuckDB oracle is
 a VALUES relation built from these rows, never from parser output.
 
 Bnode labels follow the documented rescoping of
-``sources.rdf_source._parse_documents``: per-document counter reset, then
+``sources.rdf_source._document_worker``: per-document counter reset, then
 ``'_:d' + sha1(context)[:12] + original_label[1:]`` — deterministic in
 the (context, document) pair alone, so the expected labels can be spelled
 out here without running the parser.

@@ -1,97 +1,143 @@
-"""RDF/XML ingest: files / directories / XML columns -> triples DataFrame.
+"""RDF ingest: files, directories or prepared frames in six formats ->
+one triple/quad DataFrame.
 
 Distributed equivalent of the reference's ``GraphComponent`` + ``RDFParser``
 pipeline (``graphcomponent.py:40-80``: walk dirs, content-type by extension,
 parse each document into one graph; context = ``file:<basename>``).
 
-Scale shape (SURVEY.md §3 E1): the parser is per-document pure, so it
-parallelizes embarrassingly — one Arrow-batched ``mapInPandas`` over a
-DataFrame of XML strings, emitting triple rows.  No shuffle until the
-caller dedups or repartitions.  Malformed documents are quarantined into
-``error`` rows rather than failing the job (a 100-TB ingest must not die
-on one bad file).
+One code path per scale shape (SURVEY.md §3 E1), each format only
+supplying its parse function:
+
+- **documents** (RDF/XML, Turtle, TriG, JSON-LD) are not line-splittable:
+  one recursive file listing gives ``(context, text)`` rows, and one
+  Arrow-batched ``mapInPandas`` worker parses whole documents —
+  per-document pure, so embarrassingly parallel.
+- **lines** (N-Triples, N-Quads) are a line-splittable ``spark.read.text``
+  scan, so one huge file parallelizes across tasks.  One JVM regex over
+  the N-Quads grammar (whole-stage codegen) parses the overwhelming
+  majority of lines; only lines containing ``\\`` escape sequences detour
+  through an Arrow batch running the exact Python parser
+  (``rdfxml.ntriples.parse_line``) — a row-level hybrid, unioned back
+  with no shuffle.  N-Triples is the case with no graph term.
+
+Triple formats carry the file context ``file:<basename>``; quad formats
+carry the graph label, NULL = default graph — the quad shape SPARQL
+``GRAPH`` / ``FROM NAMED`` consume (``sparql/compiler.py``: default graph
+= context-IS-NULL rows).  No shuffle until the caller dedups or
+repartitions.  Malformed documents and lines are quarantined into
+``error`` rows (``"<ExcType>: <msg>"``) rather than failing the job (a
+100-TB ingest must not die on one bad file).
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
-import xml.etree.ElementTree as ET
-from typing import Iterator
+import re
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..graph import Graph
 from ..model import node_to_row
+from ..rdfxml.ntriples import LINE_RE
 
 TRIPLE_WITH_CONTEXT_SCHEMA = (
     "context string, subj string, pred string, obj_value string, "
     "obj_kind string, obj_lang string, error string"
 )
+_COLUMNS = ("context", "subj", "pred", "obj_value", "obj_kind", "obj_lang",
+            "error")
 
 
-def _parse_documents(batches) -> Iterator:
-    """mapInPandas worker: (context, xml) batches -> triple rows.
-
-    Deterministic bnode ids: the per-document parser uses the process-global
-    counter, so we re-scope ids per document (bnode labels are
-    document-scoped in RDF; reference resets the counter per test the same
-    way, rdfparsertest.py:85)."""
-    import pandas as pd
-
-    from ..model import BNode
-    from ..rdfxml.parser import RDFParser
-
-    for batch in batches:
-        out = {k: [] for k in ("context", "subj", "pred", "obj_value",
-                               "obj_kind", "obj_lang", "error")}
-
-        def emit(context, subj, pred, value, kind, lang, error=None):
-            out["context"].append(context)
-            out["subj"].append(subj)
-            out["pred"].append(pred)
-            out["obj_value"].append(value)
-            out["obj_kind"].append(kind)
-            out["obj_lang"].append(lang)
-            out["error"].append(error)
-
-        for context, xml in zip(batch["context"], batch["xml"]):
-            try:
-                BNode.nextGenId = 0
-                graph = RDFParser(sink=Graph()).parse(ET.fromstring(xml))
-                scope = "_:d" + _stable_hash(context)
-                for s, p, o in graph.triples():
-                    subj, pred, value, kind, lang = node_to_row(s, p, o)
-                    if subj.startswith("_:"):
-                        subj = scope + subj[1:]
-                    if kind == "bnode":
-                        value = scope + value[1:]
-                    emit(context, subj, pred, value, kind, lang)
-            except Exception as exc:  # quarantine, don't fail the job
-                emit(context, None, None, None, "error", None,
-                     "%s: %s" % (type(exc).__name__, exc))
-        yield pd.DataFrame(out)
+def _error_row(context, exc: Exception) -> tuple:
+    return (context, None, None, None, "error", None,
+            "%s: %s" % (type(exc).__name__, exc))
 
 
-def _stable_hash(text: str) -> str:
-    import hashlib
+def _keep_errors(rows: DataFrame, keep_errors: bool) -> DataFrame:
+    if keep_errors:
+        return rows
+    return rows.filter(F.col("error").isNull()).drop("error")
 
-    return hashlib.sha1(text.encode("utf-8")).hexdigest()[:12]
+
+# ---------------------------------------------------------------- documents
+
+def _document_worker(parse: Callable, quads: bool) -> Callable:
+    """mapInPandas worker over (context, text) batches.  ``parse(text)``
+    returns a Graph for a triple format, (graph, s, p, o) quads for a
+    quad format.
+
+    Deterministic bnode ids: the parsers use the process-global counter,
+    so it is reset per document and every bnode label is re-scoped to
+    ``'_:d' + sha1(context)[:12] + label[1:]`` (bnode labels are
+    document-scoped in RDF; the reference resets the counter per test the
+    same way, rdfparsertest.py:85).  A triple format keeps the context as
+    given — never re-scoped, even when it begins with ``_:``; a quad
+    format puts the graph label in ``context`` (re-scoped when a bnode,
+    NULL for the default graph)."""
+
+    def worker(batches):
+        import pandas as pd
+
+        from ..model import BNode
+
+        for batch in batches:
+            rows = []
+            for context, text in zip(batch["context"], batch["text"]):
+                try:
+                    BNode.nextGenId = 0
+                    parsed = parse(text)
+                    scope = "_:d" + hashlib.sha1(
+                        context.encode("utf-8")).hexdigest()[:12]
+                    if not quads:
+                        parsed = ((context, s, p, o)
+                                  for s, p, o in parsed.triples())
+                    for graph, s, p, o in parsed:
+                        subj, pred, value, kind, lang = node_to_row(s, p, o)
+                        if quads and graph is not None \
+                                and graph.startswith("_:"):
+                            graph = scope + graph[1:]
+                        if subj.startswith("_:"):
+                            subj = scope + subj[1:]
+                        if kind == "bnode":
+                            value = scope + value[1:]
+                        rows.append(
+                            (graph, subj, pred, value, kind, lang, None))
+                except Exception as exc:  # quarantine, don't fail the job
+                    rows.append(_error_row(context, exc))
+            yield pd.DataFrame(rows, columns=_COLUMNS)
+
+    return worker
+
+
+def _list_documents(spark: SparkSession, path: str, glob: str) -> DataFrame:
+    """Recursive file listing -> (context, text) rows; context =
+    ``file:<basename>`` (reference graphcomponent.py:80)."""
+    return (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", glob)
+        .option("recursiveFileLookup", "true")
+        .load(path)
+        .select(
+            F.concat(F.lit("file:"),
+                     F.element_at(F.split(F.col("path"), "/"), -1)
+                     ).alias("context"),
+            F.decode(F.col("content"), "utf-8").alias("text")))
+
+
+def _parse_documents(docs: DataFrame, parse: Callable, quads: bool,
+                     keep_errors: bool) -> DataFrame:
+    return _keep_errors(
+        docs.mapInPandas(_document_worker(parse, quads),
+                         schema=TRIPLE_WITH_CONTEXT_SCHEMA),
+        keep_errors)
 
 
 def read_rdfxml_documents(spark: SparkSession, path: str) -> DataFrame:
     """Recursive ``*.rdf`` file listing -> (context, xml) DataFrame.
     Context = ``file:<basename>`` (reference graphcomponent.py:80)."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.rdf")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-    )
-    return df.select(
-        F.concat(F.lit("file:"), F.element_at(F.split(F.col("path"), "/"), -1)
-                 ).alias("context"),
-        F.decode(F.col("content"), "utf-8").alias("xml"),
-    )
+    return _list_documents(spark, path, "*.rdf").withColumnRenamed(
+        "text", "xml")
 
 
 def read_rdfxml_triples(spark_or_df, path: str | None = None,
@@ -101,66 +147,142 @@ def read_rdfxml_triples(spark_or_df, path: str | None = None,
     Either ``read_rdfxml_triples(spark, '/dir')`` or pass a prepared
     (context, xml) DataFrame.  Output columns: context + the 5 triple
     columns (+ error when ``keep_errors``)."""
+    from ..rdfxml.parser import parse_rdfxml
+
     if path is not None:
-        docs = read_rdfxml_documents(spark_or_df, path)
+        docs = _list_documents(spark_or_df, path, "*.rdf")
     else:
-        docs = spark_or_df
-    triples = docs.mapInPandas(_parse_documents, schema=TRIPLE_WITH_CONTEXT_SCHEMA)
-    if keep_errors:
-        return triples
-    return triples.filter(F.col("error").isNull()).drop("error")
+        docs = spark_or_df.select("context", F.col("xml").alias("text"))
+    return _parse_documents(docs, parse_rdfxml, False, keep_errors)
 
 
-# Java-regex twin of rdfxml.ntriples._LINE_RE (numbered groups; Spark's
-# regexp_extract is Java-flavored, no (?P<>) syntax)
-_NT_LINE_JAVA = (
-    r'^\s*(<[^<>\s]*>|_:\S+)\s+(<[^<>\s]*>)\s+'
-    r'(<[^<>\s]*>|_:\S+|"(?:[^"\\]|\\.)*"'
-    r'(?:@[A-Za-z][A-Za-z0-9-]*|\^\^<[^<>\s]*>)?)\s*\.\s*$')
-_NT_LITERAL_JAVA = (
+def read_turtle_triples(spark: SparkSession, path: str,
+                        keep_errors: bool = False,
+                        glob: str = "*.ttl") -> DataFrame:
+    """Turtle files -> triples DataFrame (context = ``file:<basename>``).
+
+    Turtle statements span lines (long strings, ``;``/``,``
+    continuation), so unlike ``.nt`` a single document is NOT
+    line-splittable: parallelism comes from the file count.  For bulk
+    single-file interchange prefer ``.nt``."""
+    from ..rdfxml.turtle import parse_turtle
+
+    return _parse_documents(_list_documents(spark, path, glob),
+                            parse_turtle, False, keep_errors)
+
+
+def read_trig_quads(spark: SparkSession, path: str,
+                    keep_errors: bool = False,
+                    glob: str = "*.trig") -> DataFrame:
+    """TriG files -> quad DataFrame: ``context`` = the block's graph
+    label, NULL = default graph — same contract as ``read_nquads_quads``.
+
+    Like Turtle, TriG is not line-splittable (statements and graph
+    blocks span lines): parallelism comes from the file count.  For bulk
+    single-file quad interchange prefer ``.nq``."""
+    from ..rdfxml.trig import parse_trig
+
+    return _parse_documents(_list_documents(spark, path, glob),
+                            parse_trig, True, keep_errors)
+
+
+def read_jsonld_quads(spark: SparkSession, path: str,
+                      keep_errors: bool = False,
+                      glob: str = "*.jsonld") -> DataFrame:
+    """JSON-LD files -> quad DataFrame: ``context`` = the ``@graph``
+    label under an ``@id`` (NULL = default graph) — same contract as
+    ``read_trig_quads``.
+
+    A JSON-LD document is one JSON value, so it is NOT line-splittable:
+    parallelism comes from the file count.  The NDJSON shards
+    ``sinks.jsonld_sink`` writes (one node object per line) go through
+    the same path: the parser falls back to per-line decoding, so sharded
+    corpora parallelize by shard file."""
+    from ..rdfxml.jsonld import parse_jsonld_quads
+
+    return _parse_documents(_list_documents(spark, path, glob),
+                            parse_jsonld_quads, True, keep_errors)
+
+
+# -------------------------------------------------------------------- lines
+
+# JVM twin of rdfxml.ntriples.LINE_RE: Spark's regexp_extract is
+# Java-flavored, with numbered groups and no (?P<name>) syntax
+_LINE_JAVA = re.sub(r"\?P<\w+>", "", LINE_RE.pattern)
+_LITERAL_JAVA = (
     r'^"((?:[^"\\]|\\.)*)"(?:@([A-Za-z][A-Za-z0-9-]*))?(?:\^\^<[^<>\s]*>)?$')
 
 
-def _parse_nt_lines_python(batches) -> Iterator:
-    """mapInPandas worker for lines that carry escape sequences: re-parse
-    each line with the exact pure-Python parser (rdfxml.ntriples)."""
-    import pandas as pd
+def _line_worker(quads: bool) -> Callable:
+    """mapInPandas worker for lines that carry escape sequences: the
+    exact Python parser, under the JVM path's context rule."""
 
-    from ..model import node_to_row
-    from ..rdfxml.ntriples import parse_ntriples_line
+    def worker(batches):
+        import pandas as pd
 
-    for batch in batches:
-        out = {k: [] for k in ("context", "subj", "pred", "obj_value",
-                               "obj_kind", "obj_lang", "error")}
-        for context, line in zip(batch["context"], batch["line"]):
-            try:
-                parsed = parse_ntriples_line(line)
-                if parsed is None:
-                    continue
-                subj, pred, value, kind, lang = node_to_row(*parsed)
-                row = (context, subj, pred, value, kind, lang, None)
-            except Exception as exc:
-                row = (context, None, None, None, "error", None,
-                       "%s: %s" % (type(exc).__name__, exc))
-            for key, cell in zip(out, row):
-                out[key].append(cell)
-        yield pd.DataFrame(out)
+        from ..rdfxml.ntriples import parse_line
+
+        for batch in batches:
+            rows = []
+            for context, line in zip(batch["context"], batch["line"]):
+                try:
+                    parsed = parse_line(line, quads)
+                    if parsed is None:
+                        continue
+                    graph, s, p, o = parsed
+                    rows.append((context if graph is None else graph,)
+                                + node_to_row(s, p, o) + (None,))
+                except Exception as exc:
+                    rows.append(_error_row(context, exc))
+            yield pd.DataFrame(rows, columns=_COLUMNS)
+
+    return worker
 
 
-def read_ntriples_triples(spark: SparkSession, path: str,
-                          keep_errors: bool = False,
-                          glob: str = "*.nt") -> DataFrame:
-    """N-Triples files -> triples DataFrame (context = ``file:<basename>``,
-    mirroring the reference's declared ``.nt`` -> text/plain content-type
-    path, graphcomponent.py:68-74 — dead there, real here).
+def _parse_lines(lines: DataFrame, quads: bool,
+                 keep_errors: bool) -> DataFrame:
+    """(context, line) rows -> triple or quad rows.  A line's graph label
+    replaces ``context`` when present; error rows keep ``context``.  A
+    graph term is malformed unless ``quads``."""
+    lines = lines.filter(
+        (F.trim("line") != "") & ~F.trim("line").startswith("#"))
+    escaped = F.col("line").contains("\\")
+    subj, pred, obj, graph = (F.regexp_extract("line", _LINE_JAVA, i)
+                              for i in (1, 2, 3, 4))
+    bad = subj == ""
+    if not quads:
+        bad = bad | (graph != "")
 
-    Scale shape: ``spark.read.text`` is line-splittable, so one huge
-    ``.nt`` file parallelizes across tasks (unlike the per-document XML
-    path).  Parsing is pure JVM regex (whole-stage codegen) for the
-    overwhelming majority of lines; only lines containing ``\\`` escape
-    sequences detour through an Arrow batch running the exact pure-Python
-    parser — a row-level hybrid, unioned back together, no shuffle."""
-    lines = (
+    def term(tok):
+        return F.when(tok.startswith("<"),
+                      F.substring(tok, 2, F.length(tok) - 2)).otherwise(tok)
+
+    literal = obj.startswith('"')
+    fast = lines.filter(~escaped).select(
+        F.when(~bad & (graph != ""), term(graph))
+        .otherwise(F.col("context")).alias("context"),
+        F.when(~bad, term(subj)).alias("subj"),
+        F.when(~bad, term(pred)).alias("pred"),
+        F.when(~bad, F.when(literal, F.regexp_extract(obj, _LITERAL_JAVA, 1))
+               .otherwise(term(obj))).alias("obj_value"),
+        F.when(bad, F.lit("error")).when(obj.startswith("<"), F.lit("uri"))
+        .when(obj.startswith("_:"), F.lit("bnode"))
+        .otherwise(F.lit("literal")).alias("obj_kind"),
+        F.when(~bad & literal, F.nullif(
+            F.regexp_extract(obj, _LITERAL_JAVA, 2), F.lit("")))
+        .alias("obj_lang"),
+        F.when(bad, F.concat(
+            F.lit("ValueError: malformed %s line: "
+                  % ("N-Quads" if quads else "N-Triples")),
+            F.trim("line"))).alias("error"),
+    )
+    slow = lines.filter(escaped).mapInPandas(
+        _line_worker(quads), schema=TRIPLE_WITH_CONTEXT_SCHEMA)
+    return _keep_errors(fast.unionByName(slow), keep_errors)
+
+
+def _read_lines(spark: SparkSession, path: str, glob: str) -> DataFrame:
+    return (
         spark.read.format("text")
         .option("pathGlobFilter", glob)
         .option("recursiveFileLookup", "true")
@@ -168,82 +290,16 @@ def read_ntriples_triples(spark: SparkSession, path: str,
         .select(
             F.concat(F.lit("file:"), F.col("_metadata.file_name"))
             .alias("context"),
-            F.col("value").alias("line"))
-        .filter((F.trim("line") != "") & ~F.trim("line").startswith("#"))
-    )
-    clean = lines.filter(~F.col("line").contains("\\"))
-    dirty = lines.filter(F.col("line").contains("\\"))
-
-    subj_tok = F.regexp_extract("line", _NT_LINE_JAVA, 1)
-    pred_tok = F.regexp_extract("line", _NT_LINE_JAVA, 2)
-    obj_tok = F.regexp_extract("line", _NT_LINE_JAVA, 3)
-    lit_body = F.regexp_extract(obj_tok, _NT_LITERAL_JAVA, 1)
-    lit_lang = F.nullif(F.regexp_extract(obj_tok, _NT_LITERAL_JAVA, 2), F.lit(""))
-    strip_angle = lambda c: F.substring(c, 2, F.length(c) - 2)  # noqa: E731
-
-    parsed_clean = clean.select(
-        "context",
-        F.when(subj_tok == "", F.lit(None))
-        .when(subj_tok.startswith("<"), strip_angle(subj_tok))
-        .otherwise(subj_tok).alias("subj"),
-        F.when(pred_tok == "", F.lit(None))
-        .otherwise(strip_angle(pred_tok)).alias("pred"),
-        F.when(obj_tok == "", F.lit(None))
-        .when(obj_tok.startswith("<"), strip_angle(obj_tok))
-        .when(obj_tok.startswith("_:"), obj_tok)
-        .otherwise(lit_body).alias("obj_value"),
-        F.when(obj_tok == "", F.lit("error"))
-        .when(obj_tok.startswith("<"), F.lit("uri"))
-        .when(obj_tok.startswith("_:"), F.lit("bnode"))
-        .otherwise(F.lit("literal")).alias("obj_kind"),
-        F.when(obj_tok.startswith('"'), lit_lang)
-        .otherwise(F.lit(None).cast("string")).alias("obj_lang"),
-        F.when(subj_tok == "",
-               F.concat(F.lit("ValueError: malformed N-Triples line: "),
-                        F.trim("line"))).alias("error"),
-    )
-    parsed_dirty = dirty.mapInPandas(
-        _parse_nt_lines_python, schema=TRIPLE_WITH_CONTEXT_SCHEMA)
-    triples = parsed_clean.unionByName(parsed_dirty)
-    if keep_errors:
-        return triples
-    return triples.filter(F.col("error").isNull()).drop("error")
+            F.col("value").alias("line")))
 
 
-# Java-regex twin of rdfxml.nquads._LINE_RE: the N-Triples line grammar
-# plus an optional 4th graph term (group 4) before the terminating dot.
-_NQ_LINE_JAVA = (
-    r'^\s*(<[^<>\s]*>|_:\S+)\s+(<[^<>\s]*>)\s+'
-    r'(<[^<>\s]*>|_:\S+|"(?:[^"\\]|\\.)*"'
-    r'(?:@[A-Za-z][A-Za-z0-9-]*|\^\^<[^<>\s]*>)?)'
-    r'(?:\s+(<[^<>\s]*>|_:\S+))?\s*\.\s*$')
-
-
-def _parse_nq_lines_python(batches) -> Iterator:
-    """mapInPandas worker for N-Quads lines carrying escape sequences:
-    exact pure-Python parse (rdfxml.nquads); context = graph label."""
-    import pandas as pd
-
-    from ..model import node_to_row
-    from ..rdfxml.nquads import parse_nquads_line
-
-    for batch in batches:
-        out = {k: [] for k in ("context", "subj", "pred", "obj_value",
-                               "obj_kind", "obj_lang", "error")}
-        for line in batch["line"]:
-            try:
-                parsed = parse_nquads_line(line)
-                if parsed is None:
-                    continue
-                graph, subj, pred, obj = parsed
-                subj, pred, value, kind, lang = node_to_row(subj, pred, obj)
-                row = (graph, subj, pred, value, kind, lang, None)
-            except Exception as exc:
-                row = (None, None, None, None, "error", None,
-                       "%s: %s" % (type(exc).__name__, exc))
-            for key, cell in zip(out, row):
-                out[key].append(cell)
-        yield pd.DataFrame(out)
+def read_ntriples_triples(spark: SparkSession, path: str,
+                          keep_errors: bool = False,
+                          glob: str = "*.nt") -> DataFrame:
+    """N-Triples files -> triples DataFrame (context = ``file:<basename>``,
+    mirroring the reference's declared ``.nt`` -> text/plain content-type
+    path, graphcomponent.py:68-74 — dead there, real here)."""
+    return _parse_lines(_read_lines(spark, path, glob), False, keep_errors)
 
 
 def nquads_lines_to_quads(lines: DataFrame,
@@ -253,288 +309,20 @@ def nquads_lines_to_quads(lines: DataFrame,
     escape fallback), so it works identically on batch AND streaming
     DataFrames — ``streaming.quad_stream`` feeds it ``readStream``
     lines."""
-    lines = lines.filter(
-        (F.trim("line") != "") & ~F.trim("line").startswith("#"))
-    clean = lines.filter(~F.col("line").contains("\\"))
-    dirty = lines.filter(F.col("line").contains("\\"))
-
-    subj_tok = F.regexp_extract("line", _NQ_LINE_JAVA, 1)
-    pred_tok = F.regexp_extract("line", _NQ_LINE_JAVA, 2)
-    obj_tok = F.regexp_extract("line", _NQ_LINE_JAVA, 3)
-    graph_tok = F.regexp_extract("line", _NQ_LINE_JAVA, 4)
-    lit_body = F.regexp_extract(obj_tok, _NT_LITERAL_JAVA, 1)
-    lit_lang = F.nullif(F.regexp_extract(obj_tok, _NT_LITERAL_JAVA, 2), F.lit(""))
-    strip_angle = lambda c: F.substring(c, 2, F.length(c) - 2)  # noqa: E731
-
-    parsed_clean = clean.select(
-        F.when(graph_tok == "", F.lit(None).cast("string"))
-        .when(graph_tok.startswith("<"), strip_angle(graph_tok))
-        .otherwise(graph_tok).alias("context"),
-        F.when(subj_tok == "", F.lit(None))
-        .when(subj_tok.startswith("<"), strip_angle(subj_tok))
-        .otherwise(subj_tok).alias("subj"),
-        F.when(pred_tok == "", F.lit(None))
-        .otherwise(strip_angle(pred_tok)).alias("pred"),
-        F.when(obj_tok == "", F.lit(None))
-        .when(obj_tok.startswith("<"), strip_angle(obj_tok))
-        .when(obj_tok.startswith("_:"), obj_tok)
-        .otherwise(lit_body).alias("obj_value"),
-        F.when(obj_tok == "", F.lit("error"))
-        .when(obj_tok.startswith("<"), F.lit("uri"))
-        .when(obj_tok.startswith("_:"), F.lit("bnode"))
-        .otherwise(F.lit("literal")).alias("obj_kind"),
-        F.when(obj_tok.startswith('"'), lit_lang)
-        .otherwise(F.lit(None).cast("string")).alias("obj_lang"),
-        F.when(subj_tok == "",
-               F.concat(F.lit("ValueError: malformed N-Quads line: "),
-                        F.trim("line"))).alias("error"),
-    )
-    parsed_dirty = dirty.mapInPandas(
-        _parse_nq_lines_python, schema=TRIPLE_WITH_CONTEXT_SCHEMA)
-    quads = parsed_clean.unionByName(parsed_dirty)
-    if keep_errors:
-        return quads
-    return quads.filter(F.col("error").isNull()).drop("error")
+    return _parse_lines(
+        lines.select(F.lit(None).cast("string").alias("context"), "line"),
+        True, keep_errors)
 
 
 def read_nquads_quads(spark: SparkSession, path: str,
                       keep_errors: bool = False,
                       glob: str = "*.nq") -> DataFrame:
     """N-Quads files -> quad DataFrame: ``context`` = the 4th (graph)
-    term, NULL when absent = the default graph — exactly the quad-relation
-    shape the SPARQL ``GRAPH`` / ``FROM NAMED`` support consumes
-    (sparql/compiler.py: default graph = context-IS-NULL rows).
+    term, NULL when absent = the default graph.
 
     Engine extension (the reference has no quad model; its per-file
-    contexts, graphcomponent.py:80, are the nearest analogue).  Scale
-    shape identical to ``read_ntriples_triples``: line-splittable
-    ``spark.read.text`` scan, pure-JVM regex parse for escape-free lines,
-    Arrow-batched exact-Python fallback for the rest, unioned back with
-    no shuffle."""
-    lines = (
-        spark.read.format("text")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select(F.col("value").alias("line")))
-    return nquads_lines_to_quads(lines, keep_errors=keep_errors)
-
-
-def _parse_turtle_documents(batches) -> Iterator:
-    """mapInPandas worker: (context, ttl) batches -> triple rows.  Same
-    per-document bnode rescoping discipline as ``_parse_documents``."""
-    import pandas as pd
-
-    from ..model import BNode
-    from ..rdfxml.turtle import parse_turtle
-
-    for batch in batches:
-        out = {k: [] for k in ("context", "subj", "pred", "obj_value",
-                               "obj_kind", "obj_lang", "error")}
-
-        def emit(context, subj, pred, value, kind, lang, error=None):
-            out["context"].append(context)
-            out["subj"].append(subj)
-            out["pred"].append(pred)
-            out["obj_value"].append(value)
-            out["obj_kind"].append(kind)
-            out["obj_lang"].append(lang)
-            out["error"].append(error)
-
-        for context, ttl in zip(batch["context"], batch["ttl"]):
-            try:
-                BNode.nextGenId = 0
-                graph = parse_turtle(ttl)
-                scope = "_:d" + _stable_hash(context)
-                for s, p, o in graph.triples():
-                    subj, pred, value, kind, lang = node_to_row(s, p, o)
-                    if subj.startswith("_:"):
-                        subj = scope + subj[1:]
-                    if kind == "bnode":
-                        value = scope + value[1:]
-                    emit(context, subj, pred, value, kind, lang)
-            except Exception as exc:  # quarantine, don't fail the job
-                emit(context, None, None, None, "error", None,
-                     "%s: %s" % (type(exc).__name__, exc))
-        yield pd.DataFrame(out)
-
-
-def read_turtle_triples(spark: SparkSession, path: str,
-                        keep_errors: bool = False,
-                        glob: str = "*.ttl") -> DataFrame:
-    """Turtle files -> triples DataFrame (context = ``file:<basename>``).
-
-    Scale shape: Turtle statements span lines (long strings, ``;``/``,``
-    continuation), so unlike ``.nt`` a single document is NOT
-    line-splittable — parallelism comes from the file count, one
-    Arrow-batched ``mapInPandas`` task per batch of whole documents (the
-    same shape as the RDF/XML path).  For bulk single-file interchange
-    prefer ``.nt``; directory-of-``.ttl`` corpora parallelize
-    embarrassingly here."""
-    docs = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select(
-            F.concat(F.lit("file:"),
-                     F.element_at(F.split(F.col("path"), "/"), -1)
-                     ).alias("context"),
-            F.decode(F.col("content"), "utf-8").alias("ttl"))
-    )
-    triples = docs.mapInPandas(
-        _parse_turtle_documents, schema=TRIPLE_WITH_CONTEXT_SCHEMA)
-    if keep_errors:
-        return triples
-    return triples.filter(F.col("error").isNull()).drop("error")
-
-
-def _parse_trig_documents(batches) -> Iterator:
-    """mapInPandas worker: (context, trig) batches -> quad rows.  The
-    graph label (rescoped when a bnode) replaces the file context in the
-    output ``context`` column — NULL = default graph, the SPARQL quad
-    shape.  Bnode rescoping discipline identical to the other formats,
-    applied to graph labels too (bnode graph labels are document-scoped
-    like any other bnode)."""
-    import pandas as pd
-
-    from ..model import BNode
-    from ..rdfxml.trig import parse_trig
-
-    for batch in batches:
-        out = {k: [] for k in ("context", "subj", "pred", "obj_value",
-                               "obj_kind", "obj_lang", "error")}
-
-        def emit(context, subj, pred, value, kind, lang, error=None):
-            out["context"].append(context)
-            out["subj"].append(subj)
-            out["pred"].append(pred)
-            out["obj_value"].append(value)
-            out["obj_kind"].append(kind)
-            out["obj_lang"].append(lang)
-            out["error"].append(error)
-
-        for file_ctx, trig in zip(batch["context"], batch["trig"]):
-            try:
-                BNode.nextGenId = 0
-                quads = parse_trig(trig)
-                scope = "_:d" + _stable_hash(file_ctx)
-                for graph, s, p, o in quads:
-                    subj, pred, value, kind, lang = node_to_row(s, p, o)
-                    if graph is not None and graph.startswith("_:"):
-                        graph = scope + graph[1:]
-                    if subj.startswith("_:"):
-                        subj = scope + subj[1:]
-                    if kind == "bnode":
-                        value = scope + value[1:]
-                    emit(graph, subj, pred, value, kind, lang)
-            except Exception as exc:  # quarantine, don't fail the job
-                emit(file_ctx, None, None, None, "error", None,
-                     "%s: %s" % (type(exc).__name__, exc))
-        yield pd.DataFrame(out)
-
-
-def read_trig_quads(spark: SparkSession, path: str,
-                    keep_errors: bool = False,
-                    glob: str = "*.trig") -> DataFrame:
-    """TriG files -> quad DataFrame: ``context`` = the block's graph
-    label, NULL = default graph — the SPARQL ``GRAPH``/``FROM NAMED``
-    quad shape, same contract as ``read_nquads_quads``.
-
-    Scale shape: like Turtle, TriG is not line-splittable (statements and
-    graph blocks span lines), so parallelism comes from the file count —
-    one Arrow-batched ``mapInPandas`` over whole documents.  For bulk
-    single-file quad interchange prefer ``.nq``."""
-    docs = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select(
-            F.concat(F.lit("file:"),
-                     F.element_at(F.split(F.col("path"), "/"), -1)
-                     ).alias("context"),
-            F.decode(F.col("content"), "utf-8").alias("trig"))
-    )
-    quads = docs.mapInPandas(
-        _parse_trig_documents, schema=TRIPLE_WITH_CONTEXT_SCHEMA)
-    if keep_errors:
-        return quads
-    return quads.filter(F.col("error").isNull()).drop("error")
-
-
-def _parse_jsonld_documents(batches) -> Iterator:
-    """mapInPandas worker: (context, jsonld) batches -> quad rows.  Graph
-    labels (rescoped when bnodes) land in ``context``, NULL = default
-    graph — same contract as the TriG worker."""
-    import pandas as pd
-
-    from ..model import BNode
-    from ..rdfxml.jsonld import parse_jsonld_quads
-
-    for batch in batches:
-        out = {k: [] for k in ("context", "subj", "pred", "obj_value",
-                               "obj_kind", "obj_lang", "error")}
-
-        def emit(context, subj, pred, value, kind, lang, error=None):
-            out["context"].append(context)
-            out["subj"].append(subj)
-            out["pred"].append(pred)
-            out["obj_value"].append(value)
-            out["obj_kind"].append(kind)
-            out["obj_lang"].append(lang)
-            out["error"].append(error)
-
-        for file_ctx, text in zip(batch["context"], batch["jsonld"]):
-            try:
-                BNode.nextGenId = 0
-                quads = parse_jsonld_quads(text)
-                scope = "_:d" + _stable_hash(file_ctx)
-                for graph, s, p, o in quads:
-                    subj, pred, value, kind, lang = node_to_row(s, p, o)
-                    if graph is not None and graph.startswith("_:"):
-                        graph = scope + graph[1:]
-                    if subj.startswith("_:"):
-                        subj = scope + subj[1:]
-                    if kind == "bnode":
-                        value = scope + value[1:]
-                    emit(graph, subj, pred, value, kind, lang)
-            except Exception as exc:  # quarantine, don't fail the job
-                emit(file_ctx, None, None, None, "error", None,
-                     "%s: %s" % (type(exc).__name__, exc))
-        yield pd.DataFrame(out)
-
-
-def read_jsonld_quads(spark: SparkSession, path: str,
-                      keep_errors: bool = False,
-                      glob: str = "*.jsonld") -> DataFrame:
-    """JSON-LD files -> quad DataFrame: ``context`` = the ``@graph``
-    label under an ``@id`` (NULL = default graph) — the SPARQL
-    ``GRAPH``/``FROM NAMED`` quad shape, same contract as
-    ``read_trig_quads``.
-
-    Scale shape: a JSON-LD document is one JSON value, so it is NOT
-    line-splittable — parallelism comes from the file count, one
-    Arrow-batched ``mapInPandas`` over whole documents.  The NDJSON
-    shards ``sinks.jsonld_sink`` writes (one node object per line) go
-    through the same path: the parser falls back to per-line decoding,
-    so sharded corpora parallelize by shard file."""
-    docs = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select(
-            F.concat(F.lit("file:"),
-                     F.element_at(F.split(F.col("path"), "/"), -1)
-                     ).alias("context"),
-            F.decode(F.col("content"), "utf-8").alias("jsonld"))
-    )
-    quads = docs.mapInPandas(
-        _parse_jsonld_documents, schema=TRIPLE_WITH_CONTEXT_SCHEMA)
-    if keep_errors:
-        return quads
-    return quads.filter(F.col("error").isNull()).drop("error")
+    contexts, graphcomponent.py:80, are the nearest analogue)."""
+    return nquads_lines_to_quads(_read_lines(spark, path, glob), keep_errors)
 
 
 def read_rdf_directory(spark: SparkSession, path: str,

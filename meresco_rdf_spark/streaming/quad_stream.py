@@ -125,7 +125,10 @@ def run_nquads_with_graph_hashes(quads: DataFrame, table_path: str,
     Readers see the quad table as the union of completed batch
     directories and the hash table through ``read_graph_hashes`` (the
     latest committed manifest only — a half-written version directory
-    without its manifest is invisible).
+    without its manifest is invisible).  Every fold leaves the previous
+    version directory behind, and a lost race leaves its own orphan:
+    ``kg.snapshots.expire_snapshots(spark, hash_root)`` is the retention
+    call that removes both.
     """
     import uuid
 

@@ -290,8 +290,9 @@ def run_merge_to_triple_table(triples_stream: DataFrame, table_path: str,
     leave the same rowset — so the TABLE state is exactly-once even
     though the sink callback is not.  Each merge commits by one manifest
     rename: a crash before it leaves only an orphan data directory no
-    reader sees (``expire_snapshots`` removes it), and readers never see
-    a half-applied batch.
+    reader sees, and readers never see a half-applied batch.  Superseded
+    versions and orphans stay on disk until the retention call,
+    ``kg.snapshots.expire_snapshots(spark, table_path)``, removes them.
 
     Scale shape: a micro-batch touches only the ``subj_bucket``
     partitions its own delta hashes into — the merge reads and rewrites

@@ -206,8 +206,7 @@ def _perm_hash_md5(x: Column, i: int) -> Column:
 def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
                         text_col: str = "text", n: int = 3, k: int = 16,
                         bands: int = 8, threshold: float = 0.7,
-                        hash_fn: str = "xx",
-                        verify_prefilter: bool = False) -> DataFrame:
+                        hash_fn: str = "xx") -> DataFrame:
     """Near-dup pairs via MinHash banding + exact Jaccard verification.
     ``hash_fn='md5'`` makes every value reproducible in ANSI SQL/DuckDB.
 
@@ -263,35 +262,16 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str = "doc_id",
         .select(F.col("l.id").alias("a"), F.col("r.id").alias("b"))
         .dropDuplicates(["a", "b"])
     )
-    # verify_prefilter semi-joins the inverted index down to docs that
-    # appear in SOME candidate pair before the count join.  MEASURED A
-    # WASH at test scale (tools/bench_minhash_prefilter.py: -1.3% at
-    # 600k docs / 37% participation, -31% at 60k — numbers in
-    # BENCH/BASELINE.md): AQE already broadcasts the candidate side of
-    # both verify joins, so the full inverted index is map-side-filtered,
-    # never shuffled, and the extra semi-join + barrier only re-does that
-    # filtering.  The switch exists for the regime AQE can't save: a
-    # candidate set too large to broadcast (trillion-doc corpora / high
-    # dup rates), where the verify join degrades to shuffle-hash and
-    # postings of NON-participants would otherwise enter the exchange.
-    inv_c = inv
-    if verify_prefilter:
-        cand = cand.persist()
-        cand.count()  # eager: the id branch and the verify join both
-        # read it; lazy would re-run the banded self-join per consumer
-        ids = (
-            cand.select(F.col("a").alias("id"))
-            .unionByName(cand.select(F.col("b").alias("id")))
-            .dropDuplicates(["id"])
-        )
-        inv_c = inv.join(ids, "id", "leftsemi")
+    # AQE broadcasts the candidate side of both verify joins, so the
+    # inverted index is filtered map-side and never shuffled (a semi-join
+    # prefilter of it measured a wash: BENCH/BASELINE.md)
     shared = (
-        cand.join(inv_c.select(F.col("id").alias("a"),
-                               F.col("n_sh").alias("na"),
-                               F.col("shingle").alias("s")), "a")
-        .join(inv_c.select(F.col("id").alias("b"),
-                           F.col("n_sh").alias("nb"),
-                           F.col("shingle").alias("s")),
+        cand.join(inv.select(F.col("id").alias("a"),
+                             F.col("n_sh").alias("na"),
+                             F.col("shingle").alias("s")), "a")
+        .join(inv.select(F.col("id").alias("b"),
+                         F.col("n_sh").alias("nb"),
+                         F.col("shingle").alias("s")),
               ["b", "s"])
         .groupBy("a", "b").agg(F.count("*").alias("inter"),
                                F.first("na").alias("na"),

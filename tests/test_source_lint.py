@@ -46,3 +46,15 @@ def test_driver_rows_become_frames_only_through_local_frame():
         str(path.relative_to(PKG.parent)) for path in PKG.rglob("*.py")
         if "createDataFrame(" in path.read_text())
     assert built == ["meresco_rdf_spark/session.py"]
+
+
+def test_documents_are_listed_and_parsed_in_one_place():
+    # every document format (RDF/XML, Turtle, TriG, JSON-LD) shares one
+    # file listing and one worker, whose counter reset scopes bnodes: a
+    # second copy of either is how per-format ingest paths drift apart
+    for needle in ("binaryFile", "BNode.nextGenId = 0"):
+        found = [
+            str(path.relative_to(PKG.parent))
+            for path in sorted(PKG.rglob("*.py"))
+            for _ in range(path.read_text().count(needle))]
+        assert found == ["meresco_rdf_spark/sources/rdf_source.py"], needle

@@ -66,6 +66,59 @@ def test_parse_quarantines_bad_documents(spark):
     assert ok.count() == 3
 
 
+def test_prepared_frame_keeps_a_bnode_like_context(spark):
+    # a caller-supplied context is provenance, not a graph label: it is
+    # never re-scoped, even when it looks like a bnode label
+    import hashlib
+
+    rows = read_rdfxml_triples(docs_df(spark, {"_:ctx": DOC_A})).collect()
+    assert len(rows) == 3 and {r.context for r in rows} == {"_:ctx"}
+    scope = "_:d" + hashlib.sha1(b"_:ctx").hexdigest()[:12]
+    assert [r.obj_value[:len(scope)] for r in rows
+            if r.obj_kind == "bnode"] == [scope]
+
+
+_RDFXML_BNODE = (
+    '<rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/22-rdf-syntax-ns#">'
+    '<rdf:Description rdf:nodeID="x"><rdf:value>v</rdf:value>'
+    '</rdf:Description></rdf:RDF>')
+
+
+@pytest.mark.parametrize("reader,ext,good,bad,quads", [
+    ("read_rdfxml_triples", "rdf", _RDFXML_BNODE, DOC_BAD, False),
+    ("read_turtle_triples", "ttl", '_:x <urn:p> "v" .', "ex:s ex:p ex:o .",
+     False),
+    ("read_trig_quads", "trig", '_:g { _:x <urn:p> "v" . }',
+     "GRAPH <urn:g> { <urn:s> <urn:p> ", True),
+    ("read_jsonld_quads", "jsonld",
+     '{"@id": "_:g", "@graph": [{"@id": "_:x", "urn:p": "v"}]}',
+     "{ not json", True),
+])
+def test_document_readers_scope_bnodes_and_quarantine(
+        spark, tmp_path, reader, ext, good, bad, quads):
+    # one document worker behind all four readers: the same bnode label
+    # in two files stays two nodes, a bad file is one error row
+    from meresco_rdf_spark.sources import rdf_source
+
+    for name, text in (("a", good), ("b", good), ("bad", bad)):
+        (tmp_path / ("%s.%s" % (name, ext))).write_text(text,
+                                                        encoding="utf-8")
+    rows = getattr(rdf_source, reader)(
+        spark, str(tmp_path), keep_errors=True).collect()
+    errors = [r for r in rows if r.error is not None]
+    assert [r.context for r in errors] == ["file:bad.%s" % ext]
+    ok = [r for r in rows if r.error is None]
+    assert len(ok) == 2
+    assert len({r.subj for r in ok}) == 2
+    assert all(r.subj.startswith("_:d") for r in ok)
+    if quads:  # bnode graph labels are document-scoped too
+        assert len({r.context for r in ok}) == 2
+        assert all(r.context.startswith("_:d") for r in ok)
+    else:
+        assert {r.context for r in ok} == {"file:a.%s" % ext,
+                                           "file:b.%s" % ext}
+
+
 def test_read_rdfxml_from_directory(spark, tmp_path):
     (tmp_path / "sub").mkdir()
     (tmp_path / "a.rdf").write_text(DOC_A, encoding="utf-8")
@@ -209,6 +262,30 @@ def test_read_ntriples_quarantines_malformed(spark, tmp_path):
     errors = [r for r in rows if r.error is not None]
     ok = [r for r in rows if r.error is None]
     assert len(ok) == 1 and len(errors) == 2  # one per malformed path (JVM + Arrow)
+
+
+def test_read_ntriples_quarantines_a_graph_term(spark, tmp_path):
+    # the line parser reads the N-Quads grammar; in a .nt file a 4th
+    # term is malformed, on the JVM path and on the escape path alike
+    from meresco_rdf_spark.sources import read_ntriples_triples
+
+    (tmp_path / "g.nt").write_text(
+        "<urn:s> <urn:p> <urn:o> .\n"
+        "<urn:s> <urn:p> <urn:o> <urn:g> .\n"
+        '<urn:s> <urn:p> "a\\nb"@en <urn:g> .\n', encoding="utf-8")
+    rows = read_ntriples_triples(spark, str(tmp_path),
+                                 keep_errors=True).collect()
+    errors = sorted(r.error for r in rows if r.error is not None)
+    assert errors == [
+        "ValueError: malformed N-Triples line: "
+        "'<urn:s> <urn:p> \"a\\\\nb\"@en <urn:g> .'",
+        "ValueError: malformed N-Triples line: "
+        "<urn:s> <urn:p> <urn:o> <urn:g> .",
+    ]
+    assert all(r.context == "file:g.nt" and r.subj is None
+               and r.obj_kind == "error" for r in rows if r.error)
+    assert [(r.subj, r.obj_value) for r in rows if r.error is None] == [
+        ("urn:s", "urn:o")]
 
 
 def test_read_rdf_directory_mixed_extensions(spark, tmp_path):

@@ -587,8 +587,7 @@ class TestQuadStreamHashes:
         self._run(spark, tmp_path)
         assert self._hashes(spark, tmp_path) == self._batch_hashes(spark)
 
-    def test_lost_commit_race_keeps_winners_hashes(
-            self, spark, tmp_path, monkeypatch):
+    def _lose_commit_race(self, spark, tmp_path, monkeypatch):
         # the winner committed the latest version between this fold's
         # version read and its commit (modelled by a stale listing): the
         # fold must lose the CAS without overwriting the winner's data
@@ -614,6 +613,32 @@ class TestQuadStreamHashes:
             with pytest.raises(StreamingQueryException,
                                match="committed concurrently"):
                 self._run(spark, tmp_path)
+        return before
+
+    def test_lost_commit_race_keeps_winners_hashes(
+            self, spark, tmp_path, monkeypatch):
+        before = self._lose_commit_race(spark, tmp_path, monkeypatch)
+        assert self._hashes(spark, tmp_path) == before
+
+    def test_expire_removes_lost_race_orphan_and_superseded_versions(
+            self, spark, tmp_path, monkeypatch):
+        # the hash root commits through the same manifest protocol as a
+        # triple table, so the one maintenance call expires it too
+        from meresco_rdf_spark.kg.snapshots import snapshot_versions
+
+        before = self._lose_commit_race(spark, tmp_path, monkeypatch)
+        hashes = str(tmp_path / "hashes")
+        data = os.path.join(hashes, "data")
+        manifests = snapshot_versions(spark, hashes)
+        live = manifests[-1]["data"]
+        on_disk = {"data/" + name for name in os.listdir(data)}
+        assert len(manifests) > 1  # superseded versions
+        assert len(on_disk) == len(manifests) + 1  # + the loser's orphan
+        out = expire_snapshots(spark, hashes)
+        assert out == {
+            "expired_versions": [m["version"] for m in manifests[:-1]],
+            "removed_dirs": sorted(on_disk - {live})}
+        assert ["data/" + name for name in os.listdir(data)] == [live]
         assert self._hashes(spark, tmp_path) == before
 
     def test_reader_of_empty_root_is_empty(self, spark, tmp_path):
